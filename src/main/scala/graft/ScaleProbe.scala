@@ -179,10 +179,10 @@ object ScaleProbe {
       Zones.exists(spark, s"$sigZone/_SUCCESS")
     if ((!SkipLegs("d9") || !SkipLegs("d12")) && !sigZoneReusable)
       Dedup.writeSignatureIndex(spark, sigZone, corpusDocs, "doc_id", "text",
-        n = 3, numHashes = 32, mode = "overwrite", bands = 16)
+        n = 3, numHashes = 32, mode = "overwrite")
     def d9Pairs(inc: DataFrame) = Dedup.minhashLshPairsIncremental(
       Dedup.readSignatureIndex(spark, sigZone), inc, "doc_id", "text",
-      3, 32, 16, 0.6, indexCounts = Dedup.readBucketCounts(spark, sigZone))
+      3, 32, 16, 0.6)
     if (!SkipLegs("d9")) {
     sec("d9_incremental_dedup") = timedMin { d9Pairs(incDocs).count() }
     // (a) cross-zone: every planted corpus copy must pair with its source

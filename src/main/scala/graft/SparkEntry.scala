@@ -1777,13 +1777,11 @@ object SparkEntry {
     // At 100 TB this is the daily shape: O(increment) compute against an
     // O(corpus) scan, never an O(corpus) re-shingle (plan-audited).
     "d9_incremental_dedup" -> ((s, dir) => {
-      val (idx, day2, _) = day1SignatureZone(s, dir)
+      val (idx, day2) = day1SignatureZone(s, dir)
       // day-1 pairs from stored state + the increment against the index:
-      // zero shingling of day-1 anywhere in the plan. The fused entry
-      // point builds both plan-identical sides with ONE oversized-bucket
-      // emptiness probe for the three bounded joins (r15, guide §1/§5).
-      val (day1Pairs, newPairs) = Dedup.minhashLshPairsFromIndexAndIncrement(
-        idx, day2, "doc_id", "text", 3, 32, 16, 0.6)
+      // zero shingling of day-1 anywhere in the plan
+      val day1Pairs = Dedup.minhashLshPairsFromIndex(idx, 32, 16, 0.6)
+      val newPairs = Dedup.minhashLshPairsIncremental(idx, day2, "doc_id", "text", 3, 32, 16, 0.6)
       day1Pairs.unionByName(newPairs)
     }),
     // incremental CLUSTER maintenance — the consumer of d9's increments:
@@ -1792,11 +1790,9 @@ object SparkEntry {
     // ≡ dupClusters over the full corpus pair set, so the oracle is d6's
     // recursive-CTE closure verbatim.
     "d12_incremental_clusters" -> ((s, dir) => {
-      val (idx, day2, _) = day1SignatureZone(s, dir)
-      // same fused build as d9 (one emptiness probe across the three
-      // bounded joins); the two sides feed their separate consumers
-      val (day1Pairs, newPairs) = Dedup.minhashLshPairsFromIndexAndIncrement(
-        idx, day2, "doc_id", "text", 3, 32, 16, 0.6)
+      val (idx, day2) = day1SignatureZone(s, dir)
+      val day1Pairs = Dedup.minhashLshPairsFromIndex(idx, 32, 16, 0.6)
+      val newPairs = Dedup.minhashLshPairsIncremental(idx, day2, "doc_id", "text", 3, 32, 16, 0.6)
       val assignment = Curation.dupClusters(day1Pairs, "id_a", "id_b")
       Curation.dupClustersIncremental(assignment, newPairs, "id_a", "id_b")
     }),
@@ -2648,8 +2644,7 @@ object SparkEntry {
     zone
   }
 
-  private def day1SignatureZone(
-      s: SparkSession, dir: String): (DataFrame, DataFrame, Option[DataFrame]) = {
+  private def day1SignatureZone(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import graft.sources.Zones
     val corpus = nearDupCorpus(s, dir)
     val day1 = corpus.filter(col("doc_id") % 3 =!= 0)
@@ -2658,12 +2653,9 @@ object SparkEntry {
       System.getProperty("java.io.tmpdir"), s"graft_d9_sigzone_${zoneKey(dir)}").getAbsolutePath
     if (!Zones.exists(s, s"$zone/_SUCCESS")) {
       Zones.delete(s, zone)
-      Dedup.writeSignatureIndex(s, zone, day1, "doc_id", "text", 3, 32,
-        mode = "overwrite", bands = 16)
+      Dedup.writeSignatureIndex(s, zone, day1, "doc_id", "text", 3, 32, mode = "overwrite")
     }
-    // stored bucket counts (absent only for a zone written pre-upgrade):
-    // the increment probe then skips the index-side counting scan
-    (Dedup.readSignatureIndex(s, zone), day2, Dedup.readBucketCounts(s, zone))
+    (Dedup.readSignatureIndex(s, zone), day2)
   }
 
   /** e5's standing day-1 semantic assignment zone, built ONCE per sf dir

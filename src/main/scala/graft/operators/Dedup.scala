@@ -313,56 +313,14 @@ object Dedup {
     * shingle Jaccard and kept if ≥ threshold. With r = numHashes/bands
     * rows per band, P(candidate | J) = 1-(1-J^r)^bands — size bands so
     * recall at your threshold is ~1 (e.g. 32 hashes / 16 bands: J=0.8 →
-    * 1-(1-0.64)^16 ≈ 1-8e-8).
+    * 1-(1-0.64)^16 ≈ 1-8e-8). The full-recompute form: the corpus's
+    * [[signatureIndex]], cached, through [[minhashLshPairsFromIndex]].
     */
-  def minhashLshPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      numHashes: Int,
-      bands: Int,
-      threshold: Double,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes (numHashes % bands == 0)")
-    val r = numHashes / bands
-    val docs = shingled(df, idCol, textCol, n)
-      .withColumn("sig", minhashSignature(col("hgrams"), numHashes))
-      .cache()
-    val banded = docs.select(
-      col("id"),
-      size(col("hgrams")).as("sz"),
-      explode(bandKeyStructs(bands, r)).as("bk"))
-      .select(col("id"), col("sz"), col("bk.band").as("band"), col("bk.key").as("key"))
-      .cache() // both sides of the bucket self-join — see prefix note above
-    // size-ratio bound (same as the PPJoin path): J ≥ t forces
-    // t·|a| ≤ |b| ≤ |a|/t, so mismatched-size bucket-mates are pruned
-    // BEFORE the distinct and before shingle arrays are fetched — the
-    // confirm join then moves arrays only for pairs that can still win.
-    // the two join sides are projections of the SAME cached frame, so one
-    // bucket-count pass serves both (a self-join's sides cannot differ)
-    val counts = Some(bucketCounts(banded))
-    val cand = boundedBucketJoin(
-        banded.select(col("id").as("id_a"), col("sz").as("sz_a"), col("band"), col("key")),
-        banded.select(col("id").as("id_b"), col("sz").as("sz_b"), col("band"), col("key")),
-        "id_a", "id_b", maxBucket, xCounts = counts, yCounts = counts)
-      .filter(
-        col("id_a") < col("id_b") &&
-          col("sz_a") * threshold <= col("sz_b") + FpSlack &&
-          col("sz_b") * threshold <= col("sz_a") + FpSlack)
-      .select("id_a", "id_b")
-      .distinct()
-    val withGrams = cand
-      .join(docs.select(col("id").as("id_a"), col("hgrams").as("grams_a")), "id_a")
-      .join(docs.select(col("id").as("id_b"), col("hgrams").as("grams_b")), "id_b")
-    withGrams
-      .withColumn("inter", intersectCount(col("grams_a"), col("grams_b")))
-      .withColumn(
-        "jaccard",
-        col("inter").cast("double") / (size(col("grams_a")) + size(col("grams_b")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
+  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String, n: Int,
+      numHashes: Int, bands: Int, threshold: Double,
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    minhashLshPairsFromIndex(signatureIndex(df, idCol, textCol, n, numHashes).cache(),
+      numHashes, bands, threshold, maxBucket)
 
   /** One signature-index row per document — (id, sz, hgrams, sig) — the
     * PERSISTED form that makes near-dup detection incremental: at corpus
@@ -384,11 +342,7 @@ object Dedup {
       .select(col("id"), size(col("hgrams")).as("sz"), col("hgrams"), col("sig"))
 
   /** Persist a batch's signature index into a zone (append = the daily
-    * increment discipline; "overwrite" to start a corpus). With
-    * `bands > 0` the zone also maintains its per-(band, key) bucket
-    * counts (see [[readBucketCounts]]) so incremental dedup's hot-bucket
-    * defense reads a kilobyte side-file instead of recounting the whole
-    * index every day.
+    * increment discipline; "overwrite" to start a corpus).
     */
   def writeSignatureIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -398,42 +352,18 @@ object Dedup {
       textCol: String,
       n: Int,
       numHashes: Int,
-      mode: String = "append",
-      bands: Int = 0): Unit = {
-    // bands guarded only when BOTH sides maintain counts: a counts-less
-    // append (bands = 0) leaves the stored counts zone merely stale,
-    // which the staleness machinery already tolerates — but merging
-    // counts BANDED DIFFERENTLY would silently desync the oversized
-    // list from the index forever
-    val geometry =
-      Seq("shingle_n" -> n.toLong, "num_hashes" -> numHashes.toLong) ++
-        (if (bands > 0) Seq("bands" -> bands.toLong) else Nil)
+      mode: String = "append"): Unit = {
+    val geometry = Seq("shingle_n" -> n.toLong, "num_hashes" -> numHashes.toLong)
     guardZoneGeometry(spark, path, mode, geometry)
-    val idx = signatureIndex(df, idCol, textCol, n, numHashes)
-    val toWrite = if (bands > 0) idx.cache() else idx
+    val idx = signatureIndex(df, idCol, textCol, n, numHashes).cache()
     // file count from the batch's ROW count, not its partition count
     // (Zones.sizedForWrite): a small increment otherwise lands one
     // near-empty file per upstream partition, and every later probe of
-    // the zone pays one scan task per file. The count materializes the
-    // cache (its consumers below re-read blocks); the counts-less
-    // bands=0 path keeps the straight write — no cache to count against.
-    val sized =
-      if (bands > 0) graft.sources.Zones.sizedForWrite(toWrite, toWrite.count())
-      else toWrite
-    sized.write.mode(mode).parquet(path)
+    // the zone pays one scan task per file
+    graft.sources.Zones.sizedForWrite(idx, idx.count()).write.mode(mode).parquet(path)
     recordZoneGeometry(spark, path, geometry)
-    if (bands > 0) {
-      mergeBucketCountsZone(
-        spark, path,
-        bucketCounts(bandedFromSigs(toWrite, numHashes, bands)),
-        replace = mode == "overwrite",
-        recountAll = () =>
-          bucketCounts(bandedFromSigs(readSignatureIndex(spark, path), numHashes, bands)),
-        bandsPerRow = bands,
-        indexRows = () => readSignatureIndex(spark, path).count())
-      toWrite.unpersist()
-      ()
-    }
+    idx.unpersist()
+    ()
   }
 
   /** Verify an append's declared signature geometry against the zone's
@@ -461,8 +391,7 @@ object Dedup {
     if (!Zones.exists(spark, metaPath)) return
     val stored = Zones.read(spark, metaPath).head()
     val clashes = fields.flatMap { case (name, want) =>
-      // a field the stored meta predates (e.g. bands recorded only by
-      // counts-maintaining writes) can't clash — adopt, don't refuse
+      // a field the stored meta predates can't clash — adopt, don't refuse
       if (!stored.schema.fieldNames.contains(name)) None
       else {
         val have = stored.getAs[Long](name)
@@ -478,8 +407,7 @@ object Dedup {
   /** Record (or refresh) the zone's geometry side-meta — see
     * [[guardZoneGeometry]]. Underscore-prefixed, so invisible to the
     * zone's parquet readers, like `_counts`. Unioned with any stored
-    * fields so a counts-less append can't erase a previously recorded
-    * `bands`.
+    * fields, so a writer recording fewer fields keeps the others.
     */
   private[graft] def recordZoneGeometry(
       spark: org.apache.spark.sql.SparkSession,
@@ -506,8 +434,9 @@ object Dedup {
   def readSignatureIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Fold a batch's bucket counts into the zone's `_counts` side-file
-    * (underscore paths are invisible to the main parquet read). Counts
+  /** Fold a batch of embedding signature rows' bucket counts into the
+    * zone's `_counts` side-file (underscore paths are invisible to the
+    * main parquet read). Counts
     * tune only the hot-bucket defense's ENGAGEMENT and split granularity
     * — the grid decomposition is exact for any split factors — so the
     * side-zone is a pure efficiency artifact: absent → operators count
@@ -515,7 +444,7 @@ object Dedup {
     *
     * Self-healing: in append mode, a MISSING counts zone (a crash inside
     * a previous swap's delete-then-rename window is the one way to lose
-    * it) rebuilds from the FULL index via `recountAll` — seeding from
+    * it) rebuilds from the FULL index — seeding from
     * just this batch would silently discard the whole history's counts,
     * and an UNDERcounting zone is the one staleness direction that
     * matters (historical mega-buckets would drop off the oversized
@@ -525,12 +454,14 @@ object Dedup {
   private def mergeBucketCountsZone(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      fresh: DataFrame,
+      batch: DataFrame,
       replace: Boolean,
-      recountAll: () => DataFrame,
-      bandsPerRow: Int,
-      indexRows: () => Long): Unit = {
+      bandsPerRow: Int): Unit = {
     import graft.sources.Zones
+    def countsOf(rows: DataFrame) =
+      bucketCounts(rows.select(posexplode(col("bkeys")).as(Seq("band", "key"))))
+    def recountAll() = countsOf(readEmbeddingSignatureIndex(spark, path))
+    val fresh = countsOf(batch)
     val target = s"$path/_counts"
     if (replace) Zones.overwriteSwap(fresh.repartition(1), target)
     else if (!Zones.exists(spark, s"$target/_SUCCESS"))
@@ -551,7 +482,8 @@ object Dedup {
       // footer-count of the index per append buys the audit.
       val total = unioned.agg(coalesce(sum("__n"), lit(0L))).head().getLong(0)
       val merged =
-        if (total == bandsPerRow.toLong * indexRows()) unioned
+        if (total == bandsPerRow.toLong * readEmbeddingSignatureIndex(spark, path).count())
+          unioned
         else recountAll()
       Zones.overwriteSwap(merged.repartition(1), target)
       unioned.unpersist()
@@ -560,9 +492,9 @@ object Dedup {
   }
 
   /** Per-(band, key) bucket counts of a signature-index frame — what a
-    * pipeline publishes next to each day's index partition so later
-    * days sum a kilobyte zone instead of recounting the corpus (the
-    * day-partitioned form of the `_counts` side-file).
+    * pipeline publishes next to each day's index partition, so its
+    * [[minhashZoneHealth]] report sums a kilobyte zone instead of
+    * recounting the corpus.
     */
   def signatureBucketCounts(index: DataFrame, numHashes: Int, bands: Int): DataFrame =
     bucketCounts(bandedFromSigs(index, numHashes, bands))
@@ -618,8 +550,8 @@ object Dedup {
   /** [[signatureBucketCounts]] grouped additionally by `carryCols` (a
     * day-partition column) — the backfill shape: seed a day-partitioned
     * counts zone from an EXISTING index in one pass, so a corpus that
-    * predates the counts zone doesn't leave the hot-bucket defense blind
-    * to exactly the historical megabuckets it exists for.
+    * predates the counts zone doesn't leave the health report blind to
+    * exactly the historical megabuckets it exists to surface.
     */
   def signatureBucketCountsBy(
       index: DataFrame, numHashes: Int, bands: Int, carryCols: String*): DataFrame = {
@@ -633,9 +565,9 @@ object Dedup {
       .agg(count(lit(1)).as("__n"))
   }
 
-  /** The zone's stored bucket counts, if maintained — pass to the
-    * incremental pair operators as `indexCounts` to skip the index-side
-    * counting scan.
+  /** An embedding signature zone's stored bucket counts, if maintained —
+    * pass to [[embeddingNearDupIncremental]] as `indexCounts` to skip the
+    * index-side counting scan.
     */
   def readBucketCounts(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] = {
@@ -823,10 +755,24 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
 
+  /** Size-ratio bound of a candidate pair (same as the PPJoin path):
+    * J ≥ t forces t·|a| ≤ |b| ≤ |a|/t, so mismatched-size bucket-mates are
+    * pruned BEFORE the distinct and before shingle arrays are fetched —
+    * the confirm join then moves arrays only for pairs that can still win.
+    */
+  private def sizeRatioOk(a: String, b: String, threshold: Double): Column =
+    col(a) * threshold <= col(b) + FpSlack && col(b) * threshold <= col(a) + FpSlack
+
+  /** One side of a MinHash band join: (id_s, sz_s, band, key). */
+  private def bandSide(banded: DataFrame, s: String): DataFrame =
+    banded.select(col("id").as(s"id_$s"), col("sz").as(s"sz_$s"), col("band"), col("key"))
+
   /** Near-dup pairs of the INDEXED corpus itself, computed entirely from
     * stored state (sig for banding, hgrams for the confirm) — the day-0
-    * backfill / audit shape: identical output to [[minhashLshPairs]] over
-    * the same corpus, with zero shingling or hashing in the plan.
+    * backfill / audit shape, and the one MinHash self-join: with the
+    * corpus's own [[signatureIndex]] as `index` this IS
+    * [[minhashLshPairs]], with zero shingling or hashing in the plan when
+    * the index is a stored zone.
     */
   def minhashLshPairsFromIndex(
       index: DataFrame,
@@ -834,59 +780,43 @@ object Dedup {
       bands: Int,
       threshold: Double,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes (numHashes % bands == 0)")
+    // cached: both sides of the bucket self-join (self-join aliases
+    // defeat plan reuse), and one bucket-count pass serves both
     val banded = bandedFromSigs(index, numHashes, bands).cache()
-    val counts = Some(bucketCounts(banded)) // one count pass for both self-join sides
-    val cand = boundedBucketJoin(
-        banded.select(col("id").as("id_a"), col("sz").as("sz_a"), col("band"), col("key")),
-        banded.select(col("id").as("id_b"), col("sz").as("sz_b"), col("band"), col("key")),
+    val counts = Some(bucketCounts(banded))
+    val cand = boundedBucketJoin(bandSide(banded, "a"), bandSide(banded, "b"),
         "id_a", "id_b", maxBucket, xCounts = counts, yCounts = counts)
-      .filter(
-        col("id_a") < col("id_b") &&
-          col("sz_a") * threshold <= col("sz_b") + FpSlack &&
-          col("sz_b") * threshold <= col("sz_a") + FpSlack)
+      .filter(col("id_a") < col("id_b") && sizeRatioOk("sz_a", "sz_b", threshold))
       .select("id_a", "id_b")
       .distinct()
     confirmPairs(cand, index.select(col("id"), col("hgrams")), threshold)
   }
 
   /** Incremental MinHash+LSH dedup: NEW near-dup pairs introduced by
-    * `increment` against a persisted signature index (increment × index
-    * cross-batch pairs ∪ increment-internal pairs). Signatures are
-    * computed for the increment ONLY; the index side is consumed as
-    * stored (sig for banding, hgrams for the exact-Jaccard confirm) —
-    * the plan scans the index zone, it never re-shingles the corpus
-    * (asserted by PlanAuditSpec). Increment ids must be new (append-only
-    * corpus discipline; a re-crawled id belongs in an SCD-style zone,
-    * not a dedup index).
-    *
-    * Union contract (gate d9): [[minhashLshPairsFromIndex]] over the
-    * index ∪ this = the full-recompute [[minhashLshPairs]] over
-    * index ∪ increment, because signatures/banding/confirmation are all
-    * deterministic functions of the text. Output: (id_a < id_b,
-    * jaccard), same as the full form.
+    * `increment` against a persisted signature index — the
+    * [[minhashLshPairsIncrementalFromSigs]] probe with the increment's
+    * [[signatureIndex]] computed here. Union contract (gate d9):
+    * [[minhashLshPairsFromIndex]] over the index ∪ this = the
+    * full-recompute [[minhashLshPairs]] over index ∪ increment.
     */
-  def minhashLshPairsIncremental(
-      index: DataFrame,
-      increment: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      numHashes: Int,
-      bands: Int,
-      threshold: Double,
-      maxBucket: Int = DefaultMaxBucket,
-      indexCounts: Option[DataFrame] = None): DataFrame =
-    minhashLshPairsIncrementalFromSigs(
-      index,
-      signatureIndex(increment, idCol, textCol, n, numHashes),
-      numHashes, bands, threshold, maxBucket, indexCounts)
+  def minhashLshPairsIncremental(index: DataFrame, increment: DataFrame, idCol: String,
+      textCol: String, n: Int, numHashes: Int, bands: Int, threshold: Double,
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
+    minhashLshPairsIncrementalFromSigs(index, signatureIndex(increment, idCol, textCol, n,
+      numHashes), numHashes, bands, threshold, maxBucket)
 
-  /** [[minhashLshPairsIncremental]] with the increment's signature-index
-    * rows ALREADY computed — the shape for pipelines that materialize the
-    * increment index anyway to publish it (CorpusRun computes `daySigs`
-    * for the day's zone partition; without this entry point the pair
-    * stage would shingle + hash the increment a second time).
+  /** NEW near-dup pairs introduced by an increment's signature-index rows
+    * against a persisted signature index (increment × index cross-batch
+    * pairs ∪ increment-internal pairs). The index side is consumed as
+    * stored (sig for banding, hgrams for the exact-Jaccard confirm) — the
+    * plan scans the index zone, it never re-shingles the corpus (asserted
+    * by PlanAuditSpec). Pipelines that materialize the increment index
+    * anyway to publish it (CorpusRun's `daySigs`) pass it here, so the
+    * day's text is shingled + hashed once. Increment ids must be new
+    * (append-only corpus discipline; a re-crawled id belongs in an
+    * SCD-style zone, not a dedup index). Output: (id_a < id_b, jaccard),
+    * same as the full form, because signatures/banding/confirmation are
+    * all deterministic functions of the text.
     */
   def minhashLshPairsIncrementalFromSigs(
       index: DataFrame,
@@ -894,28 +824,17 @@ object Dedup {
       numHashes: Int,
       bands: Int,
       threshold: Double,
-      maxBucket: Int = DefaultMaxBucket,
-      indexCounts: Option[DataFrame] = None): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes (numHashes % bands == 0)")
-    // cache(), not localCheckpoint: round 14 swapped these five
-    // materialization points to lazy localCheckpoint(false) claiming the
-    // driver actions below re-analyzed the shingle/banding forest per
-    // action; round 15 A/B-measured the swap with graft.Profile (3 warm
-    // d9 walls each way at sf0.1) and the difference is inside run noise
-    // (localCheckpoint min 4.12 s vs cache min 3.82 s, gap ~2.0 s both
-    // ways) — so the recoverable form wins: a cached partition lost with
-    // an executor recomputes from lineage, a localCheckpoint'ed one
-    // fails the job (RDD blocks without lineage), and the zone-side
-    // LogicalRDD leaf also blinded the d9/e3 scan-prefilter plan audit.
+    // cache(), not localCheckpoint: the two measured inside run noise of
+    // each other (graft.Profile, 3 warm d9 walls each way at sf0.1), so
+    // the recoverable form wins: a cached partition lost with an executor
+    // recomputes from lineage, a localCheckpoint'ed one fails the job
+    // (RDD blocks without lineage), and the zone-side LogicalRDD leaf
+    // also blinded the d9/e3 scan-prefilter plan audit.
     val inc0 = incrementIndex.cache()
     val incBanded0 = // probe side of BOTH joins
       bandedFromSigs(inc0, numHashes, bands).cache()
-    // ONE bucket-count pass per distinct frame, shared by the three join
-    // sides below (increment appears three times, the index once), and ONE
-    // driver probe for both joins' oversized lists — the bound's cost is
-    // paid per input and per operator, not per join side. A stored
-    // `indexCounts` side-zone replaces the index-side counting scan
-    // entirely (see [[readBucketCounts]]).
     // materialize the banded cache IN PARALLEL before the single-task
     // bloom jobs read through it (an unmaterialized cache under
     // keyBloom's coalesce(1) would compute the increment's shingling
@@ -926,187 +845,91 @@ object Dedup {
     // target): the caches inherit the corpus rebalance's one-partition-
     // per-core layout, so the ~5 consumers below each scheduled 64 tasks
     // over kilobyte cache blocks at gate scale. Narrow coalesce over a
-    // materialized cache merges block reads — no recompute (the count
-    // above materialized both caches at full parallelism, where the
-    // expensive signature derivation ran), no shuffle, and a real
-    // increment's width grows with its rows.
+    // materialized cache merges block reads — no recompute, no shuffle,
+    // and a real increment's width grows with its rows.
     val incBanded = coalesceByRows(incBanded0, nIncBanded, 100L)
     val inc = coalesceByRows(inc0, math.max(1L, nIncBanded / bands), 2000L)
+    // ONE bucket-count pass per distinct frame, shared by the join sides
+    // below, and ONE driver probe for both joins' oversized lists
     val incCounts = bucketCounts(incBanded)
     // the INDEX side is pruned to the increment's band keys BEFORE any
     // exchange: whole buckets are kept, so candidates / bucket counts /
     // grid factors are bit-identical, but the daily shuffle moves
-    // O(touched-bucket rows), never the corpus index (ZoneProbes — the
-    // round-10 d9 10×-ratio term). ONE bloom (round 14 — previously two:
-    // a string-keyed (band, key) bloom for the exploded prune plus this
-    // slice-hash bloom for the row prefilter, each its own agg job and
-    // pass over the increment; the (band, key) ↔ slice-hash map is 1:1,
-    // so the slice-hash bloom serves both prunes — the banded zone rows
-    // carry their slice hash out of [[bandedFromSigsH]] and the
-    // per-band prune probes the SAME bloom on it), riding the plans as
-    // a literal: the round-11 broadcast-semi form cost two ~1 s
-    // broadcast builds per call plus a gating count() pass, re-paid on
-    // every lineage re-execution (the d9/d12 sf0.1 regression). No size
-    // gate needed: a key set past the bloom's sizing only raises its
+    // O(touched-bucket rows), never the corpus index (ZoneProbes). ONE
+    // bloom over the increment's per-band slice hashes serves both
+    // prunes — the (band, key) ↔ slice-hash map is 1:1 — riding the plans
+    // as a literal. First a row-level zone prefilter BEFORE banding (see
+    // [[prefilterZoneRows]]): one codegen'd OR of per-band bloom probes
+    // over the stored sig arrays, so only survivors (rows sharing ≥1 band
+    // key with the increment, plus bloom fp) explode into (band, key)
+    // form; then the per-band prune on each banded row's slice hash. No
+    // size gate needed: a key set past the bloom's sizing only raises its
     // fpp, pruning less but never wrongly.
-    //
-    // row-level zone prefilter BEFORE banding (see [[prefilterZoneRows]]):
-    // the zone's linear probe term becomes one codegen'd OR of per-band
-    // bloom probes over the stored sig arrays — survivors (rows sharing
-    // ≥1 band key with the increment, plus bloom fp) are the only rows
-    // that explode into (band, key) form and pay the string key derivation
     val rowBloom = sigRowBloom(inc, bands, numHashes / bands, nIncBanded)
-    // cached: the survivor set feeds BOTH the bucket-count derivation
-    // and the cross join — without the cache each re-runs the zone scan.
-    // Exactness of the fused per-band prune: a (band, slice) the
-    // increment holds is in the bloom by construction (no false
-    // negatives), and bloom false positives only keep extra whole
-    // buckets, which the exact equijoins and the inner-joined oversized
-    // check drop — candidates, counts and grid factors bit-identical.
     val idxBanded = bandedFromSigsH(
         prefilterZoneRows(index, rowBloom, bands, numHashes / bands), numHashes, bands)
       .filter(call_function("graft_might_contain", lit(rowBloom), xxhash64(col("__h"))))
       .drop("__h")
       // cached: the survivor set feeds BOTH the bucket-count derivation
-      // and the cross join — without the cache each re-runs the zone
-      // scan. cache() not localCheckpoint: the inc0 note above (lineage
-      // kept for executor-loss recompute; the scan prefilter stays
-      // visible to the plan audit).
+      // and the cross join — without the cache each re-runs the zone scan
       .cache()
-    // index-side bucket counts come from the SURVIVORS, not the stored
-    // counts zone: for any (band, key) the increment actually probes,
-    // EVERY zone row of that bucket passes the row prefilter (its slice
-    // hash is in the bloom by definition), so survivor counts are EXACT
-    // for exactly the keys oversizedBuckets consults (it inner-joins the
-    // increment's counts). The stored `_counts` zone scan was itself a
-    // per-day corpus-linear term (bands×corpus rows with string keys —
-    // measured 1.3 s at the x100 rung); `indexCounts` is now advisory on
-    // this path and intentionally unused.
+    // index-side bucket counts come from the SURVIVORS: for any (band,
+    // key) the increment actually probes, EVERY zone row of that bucket
+    // passes the row prefilter (its slice hash is in the bloom by
+    // definition), so survivor counts are EXACT for exactly the keys
+    // oversizedBuckets consults (it inner-joins the increment's counts)
     val idxCounts = bucketCounts(idxBanded)
     val ovCross = oversizedBuckets(incCounts, idxCounts, maxBucket).cache()
     val ovWithin = oversizedBuckets(incCounts, incCounts, maxBucket).cache()
     val Seq(crossDormant, withinDormant) = emptiness(Seq(ovCross, ovWithin))
-    def xSide(df: DataFrame) =
-      df.select(col("id").as("id_x"), col("sz").as("sz_x"), col("band"), col("key"))
-    def ySide(df: DataFrame) =
-      df.select(col("id").as("id_y"), col("sz").as("sz_y"), col("band"), col("key"))
-    // cross-batch candidates: increment probes the stored index buckets
-    // (hot-bucket-bounded — a boilerplate band key with thousands of
-    // stored docs would otherwise go quadratic-in-bucket on one task);
-    // id order is normalized so output matches the full recompute's
-    // id_a < id_b contract regardless of which batch holds the lower id
-    val cross = boundedBucketJoinWith(
-        xSide(incBanded), ySide(idxBanded),
-        "id_x", "id_y", ovCross, crossDormant)
-      .filter(
-        col("sz_x") * threshold <= col("sz_y") + FpSlack &&
-        col("sz_y") * threshold <= col("sz_x") + FpSlack)
-      .select(
-        least(col("id_x"), col("id_y")).as("id_a"),
-        greatest(col("id_x"), col("id_y")).as("id_b"))
-    // increment-internal candidates (same shape as the full form's self-join)
-    val within = boundedBucketJoinWith(
-        xSide(incBanded), ySide(incBanded), "id_x", "id_y", ovWithin, withinDormant)
-      .filter(
-        col("id_x") < col("id_y") &&
-          col("sz_x") * threshold <= col("sz_y") + FpSlack &&
-          col("sz_y") * threshold <= col("sz_x") + FpSlack)
-      .select(col("id_x").as("id_a"), col("id_y").as("id_b"))
-    val cand = cross.unionByName(within).distinct()
-      // cached (not localCheckpoint — the inc0 note above): consumed by
-      // the candidate-id collect and the confirm joins
-      .cache()
-    // exact-Jaccard confirm: shingle arrays come from the stored index for
-    // corpus ids and the increment frame for new ids. The index side is
-    // fetched by the BOUNDED candidate-id list (a pushable isin — parquet
-    // row groups holding no candidate never stream their hgrams), not by
-    // joining the whole zone through (see [[pruneToCandidateIds]]).
-    val grams = pruneToCandidateIds(index.select(col("id"), col("hgrams")), "id", cand)
-      .unionByName(inc.select(col("id"), col("hgrams")))
-    confirmPairs(cand, grams, threshold)
+    incrementPairs(
+      bandSide(incBanded, "x"), bandSide(idxBanded, "y"),
+      (ovCross, crossDormant), (ovWithin, withinDormant),
+      sizeRatioOk("sz_x", "sz_y", threshold),
+      index.select(col("id"), col("hgrams")), inc.select(col("id"), col("hgrams")),
+      confirmPairs(_, _, threshold))
   }
 
-  /** [[minhashLshPairsFromIndex]] and [[minhashLshPairsIncremental]] built
-    * in one call — the d9/d12 daily shape (stored-state pairs + increment
-    * pairs over the same index). Each returned frame is plan-identical to
-    * its public form (same scans, same prefilters, same joins; the plan
-    * audits hold unchanged); what fuses is the DRIVER bookkeeping: the
-    * three bounded joins' oversized-bucket emptiness verdicts (index
-    * self-join + cross + within) come from ONE probe action instead of
-    * two, trimming the incremental path's job tail (profiled r15: d9 is
-    * ~33 jobs whose inter-job driver gap is ~40% of wall — guide §1/§5).
+  /** The increment-probe back end of both incremental pair builders
+    * (MinHash and embedding): cross-batch candidates (the increment's
+    * band rows `incX` probing the stored index's `idxY`) ∪
+    * within-increment candidates, each through the exact hot-bucket
+    * bounded join with its oversized list and dormancy verdict supplied
+    * by the caller, kept by the per-pair filter `keep` (over the `_x` /
+    * `_y` columns); then the candidate-id fetch of the stored payload
+    * and the caller's `confirm` over (candidates, id + payload rows).
+    * Cross-batch ids are normalized so output matches the full
+    * recompute's id_a < id_b contract regardless of which batch holds
+    * the lower id.
     */
-  def minhashLshPairsFromIndexAndIncrement(
-      index: DataFrame,
-      increment: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      numHashes: Int,
-      bands: Int,
-      threshold: Double,
-      maxBucket: Int = DefaultMaxBucket): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "bands must divide numHashes (numHashes % bands == 0)")
-    // ── index self-join side (the minhashLshPairsFromIndex plan, its
-    // emptiness verdict deferred into the fused probe below) ──
-    val banded = bandedFromSigs(index, numHashes, bands).cache()
-    val selfCounts = bucketCounts(banded)
-    val ovSelf = oversizedBuckets(selfCounts, selfCounts, maxBucket).cache()
-    // ── increment side (minhashLshPairsIncrementalFromSigs verbatim; see
-    // the cache()/sizing rationale there) ──
-    val inc0 = signatureIndex(increment, idCol, textCol, n, numHashes).cache()
-    val incBanded0 = bandedFromSigs(inc0, numHashes, bands).cache()
-    val nIncBanded = incBanded0.count()
-    val incBanded = coalesceByRows(incBanded0, nIncBanded, 100L)
-    val inc = coalesceByRows(inc0, math.max(1L, nIncBanded / bands), 2000L)
-    val incCounts = bucketCounts(incBanded)
-    val rowBloom = sigRowBloom(inc, bands, numHashes / bands, nIncBanded)
-    val idxBanded = bandedFromSigsH(
-        prefilterZoneRows(index, rowBloom, bands, numHashes / bands), numHashes, bands)
-      .filter(call_function("graft_might_contain", lit(rowBloom), xxhash64(col("__h"))))
-      .drop("__h")
-      .cache()
-    val idxCounts = bucketCounts(idxBanded)
-    val ovCross = oversizedBuckets(incCounts, idxCounts, maxBucket).cache()
-    val ovWithin = oversizedBuckets(incCounts, incCounts, maxBucket).cache()
-    // THE fusion: one tagged limit-1 union probes all three lists
-    val Seq(selfDormant, crossDormant, withinDormant) =
-      emptiness(Seq(ovSelf, ovCross, ovWithin))
-    def xSide(df: DataFrame) =
-      df.select(col("id").as("id_x"), col("sz").as("sz_x"), col("band"), col("key"))
-    def ySide(df: DataFrame) =
-      df.select(col("id").as("id_y"), col("sz").as("sz_y"), col("band"), col("key"))
-    val candSelf = boundedBucketJoinWith(
-        banded.select(col("id").as("id_a"), col("sz").as("sz_a"), col("band"), col("key")),
-        banded.select(col("id").as("id_b"), col("sz").as("sz_b"), col("band"), col("key")),
-        "id_a", "id_b", ovSelf, selfDormant)
-      .filter(
-        col("id_a") < col("id_b") &&
-          col("sz_a") * threshold <= col("sz_b") + FpSlack &&
-          col("sz_b") * threshold <= col("sz_a") + FpSlack)
-      .select("id_a", "id_b")
-      .distinct()
-    val indexPairs = confirmPairs(candSelf, index.select(col("id"), col("hgrams")), threshold)
-    val cross = boundedBucketJoinWith(
-        xSide(incBanded), ySide(idxBanded),
-        "id_x", "id_y", ovCross, crossDormant)
-      .filter(
-        col("sz_x") * threshold <= col("sz_y") + FpSlack &&
-        col("sz_y") * threshold <= col("sz_x") + FpSlack)
+  private def incrementPairs(
+      incX: DataFrame,
+      idxY: DataFrame,
+      cross: (DataFrame, Boolean),
+      within: (DataFrame, Boolean),
+      keep: Column,
+      indexPayload: DataFrame,
+      incPayload: DataFrame,
+      confirm: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val incY = incX.select(incX.columns.map(c =>
+      if (c.endsWith("_x")) col(c).as(c.dropRight(2) + "_y") else col(c)): _*)
+    val crossCand = boundedBucketJoinWith(incX, idxY, "id_x", "id_y", cross._1, cross._2)
+      .filter(keep)
       .select(
         least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"))
-    val within = boundedBucketJoinWith(
-        xSide(incBanded), ySide(incBanded), "id_x", "id_y", ovWithin, withinDormant)
-      .filter(
-        col("id_x") < col("id_y") &&
-          col("sz_x") * threshold <= col("sz_y") + FpSlack &&
-          col("sz_y") * threshold <= col("sz_x") + FpSlack)
+    val withinCand = boundedBucketJoinWith(incX, incY, "id_x", "id_y", within._1, within._2)
+      .filter(col("id_x") < col("id_y") && keep)
       .select(col("id_x").as("id_a"), col("id_y").as("id_b"))
-    val cand = cross.unionByName(within).distinct().cache()
-    val grams = pruneToCandidateIds(index.select(col("id"), col("hgrams")), "id", cand)
-      .unionByName(inc.select(col("id"), col("hgrams")))
-    (indexPairs, confirmPairs(cand, grams, threshold))
+    val cand = crossCand.unionByName(withinCand).distinct()
+      // cached (not localCheckpoint — the MinHash inc0 note): consumed by
+      // the candidate-id collect and the confirm joins
+      .cache()
+    // the index side is fetched by the BOUNDED candidate-id list (a
+    // pushable isin — parquet row groups holding no candidate never
+    // stream their payload), not by joining the whole zone through
+    // (see [[pruneToCandidateIds]])
+    confirm(cand, pruneToCandidateIds(indexPayload, "id", cand).unionByName(incPayload))
   }
 
   /** 64-bit SimHash per document: per-bit ±1 vote of xxhash64(token) over
@@ -1184,27 +1007,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Exact-content dedup at embedding level: pairs of vectors with cosine
-    * similarity ≥ threshold. Brute-force all-pairs — quadratic, the
-    * small-scale oracle of [[embeddingNearDupJoin]] /
-    * [[embeddingNearDupPairsLsh]], which bucket candidates with banded
-    * sign-bit LSH and never materialize the cross join.
-    */
-  def embeddingNearDupPairs(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double): DataFrame = {
-    val v = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val a = v.select(col("id").as("id_a"), col("v").as("va"))
-    val b = v.select(col("id").as("id_b"), col("v").as("vb"))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", SimilaritySearch.cosine(col("va"), col("vb")))
-      .filter(col("sim") >= threshold)
-      .select("id_a", "id_b")
-  }
-
   /** Banded sign-bit LSH signatures as (band, key) rows: `bands`
     * independent signatures of `bitsPerBand` random hyperplanes each.
     * Two vectors at angle θ share a given band with P = (1 − θ/π)^r, and
@@ -1240,8 +1042,8 @@ object Dedup {
       bitsPerBand: Int = AutoGeometry,
       seed: Long = 42L,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    // self-join (the embeddingNearDupPairsLsh shape): signatures, band
-    // rows, and bucket counts are computed ONCE and shared by both sides
+    // self-join (left eq right): signatures, band rows, and bucket
+    // counts are computed ONCE and shared by both sides
     val self = (left eq right) && leftId == rightId && leftVec == rightVec
     // null vectors can't be near anything — dropped, not crashed (the
     // dim probe below would NPE on a null-first row; same guard as
@@ -1322,23 +1124,6 @@ object Dedup {
       .filter(col("sim") >= threshold)
       .select("id_a", "id_b")
   }
-
-  /** Self-join form of [[embeddingNearDupJoin]]: same output contract as
-    * the brute-force [[embeddingNearDupPairs]] (id_a < id_b), candidates
-    * via banded LSH buckets.
-    */
-  def embeddingNearDupPairsLsh(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      bands: Int = AutoGeometry,
-      bitsPerBand: Int = AutoGeometry,
-      seed: Long = 42L,
-      maxBucket: Int = DefaultMaxBucket): DataFrame =
-    embeddingNearDupJoin(
-      df, idCol, vecCol, df, idCol, vecCol, threshold, bands, bitsPerBand, seed, maxBucket)
-      .filter(col("id_a") < col("id_b"))
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication by k-means partitioning + within-cluster cosine
@@ -1874,14 +1659,7 @@ object Dedup {
     // bucket counts ride next to the index (hidden _counts side-file):
     // daily probes then never recount the corpus — see [[readBucketCounts]]
     mergeBucketCountsZone(
-      spark, path,
-      bucketCounts(
-        keyed.select(posexplode(col("bkeys")).as(Seq("band", "key")))),
-      replace = mode == "overwrite",
-      recountAll = () => bucketCounts(readEmbeddingSignatureIndex(spark, path)
-        .select(posexplode(col("bkeys")).as(Seq("band", "key")))),
-      bandsPerRow = sig.bands,
-      indexRows = () => readEmbeddingSignatureIndex(spark, path).count())
+      spark, path, keyed, replace = mode == "overwrite", bandsPerRow = sig.bands)
     keyed.unpersist()
     ()
   }
@@ -1897,7 +1675,7 @@ object Dedup {
     * (a posexplode of `bkeys` — no hyperplane math, no corpus rescan
     * beyond the index zone). Ids-only candidates shuffle first;
     * vectors join back once per distinct pair. Output: (id_a < id_b),
-    * matching [[embeddingNearDupPairsLsh]]'s contract.
+    * matching the self-join [[embeddingNearDupJoin]]'s contract.
     *
     * Geometry defaults ([[AutoGeometry]]): the increment's keys must
     * come from the SAME (bands, bitsPerBand, seed, dim) hash family the
@@ -2037,32 +1815,17 @@ object Dedup {
         (cd, wd, oc, ow)
       }
     // both joins hot-bucket-bounded (see [[boundedBucketJoin]]): a stored
-    // boilerplate-embedding family shares one sign-bit key per band
-    val cross = boundedBucketJoinWith(
-        incBandX, idxBand, "id_x", "id_y", ovCross, crossDormant)
-      .select(
-        least(col("id_x"), col("id_y")).as("id_a"),
-        greatest(col("id_x"), col("id_y")).as("id_b"))
-    val within = boundedBucketJoinWith(
-        incBandX, incBandX.withColumnRenamed("id_x", "id_y"), "id_x", "id_y",
-        ovWithin, withinDormant)
-      .filter(col("id_x") < col("id_y"))
-      .select(col("id_x").as("id_a"), col("id_y").as("id_b"))
-    val cand = cross.unionByName(within).distinct()
-      // cached (not localCheckpoint — the d9-path rationale): consumed
-      // by the candidate-id collect and the cosine confirm joins
-      .cache()
-    // cosine confirm: the index side is fetched by the bounded
-    // candidate-id list (pushable isin — see [[pruneToCandidateIds]]),
-    // so row groups holding no candidate never stream their vectors
-    val vecs = pruneToCandidateIds(index.select(col("id"), col("v")), "id", cand)
-      .unionByName(inc.select(col("id"), col("v")))
-    cand
-      .join(vecs.select(col("id").as("id_a"), col("v").as("va")), "id_a")
-      .join(vecs.select(col("id").as("id_b"), col("v").as("vb")), "id_b")
-      .withColumn("sim", SimilaritySearch.cosine(col("va"), col("vb")))
-      .filter(col("sim") >= threshold)
-      .select("id_a", "id_b")
+    // boilerplate-embedding family shares one sign-bit key per band; the
+    // cosine confirm reads the index side's vectors by candidate id
+    incrementPairs(
+      incBandX, idxBand, (ovCross, crossDormant), (ovWithin, withinDormant), lit(true),
+      index.select(col("id"), col("v")), inc.select(col("id"), col("v")),
+      (cand, vecs) => cand
+        .join(vecs.select(col("id").as("id_a"), col("v").as("va")), "id_a")
+        .join(vecs.select(col("id").as("id_b"), col("v").as("vb")), "id_b")
+        .withColumn("sim", SimilaritySearch.cosine(col("va"), col("vb")))
+        .filter(col("sim") >= threshold)
+        .select("id_a", "id_b"))
   }
 
   /** [[embeddingNearDupIncremental]] against a zone PATH: the probe keys

@@ -421,13 +421,12 @@ object CorpusRun {
           .filter(publishedPriorFilter(sigPath))
           .drop("ingest_day")
       else daySigs.limit(0)
-    // prior bucket counts from the day-partitioned counts zone (summed
-    // over prior days — exact under the same filter): the hot-bucket
-    // defense then never rescans the index to count it.
+    // the day-partitioned bucket-counts zone feeds the sig-health ledger
+    // note below (the pair probe counts its own prefiltered survivors).
     val sigCountsPath = s"$whDir/corpus/sig_counts"
     // seed/repair FIRST: every sig partition needs a counts partition, or
-    // the summed prior undercounts exactly the historical megabuckets the
-    // defense exists for (a corpus predating the counts zone, or a crash
+    // the summed report undercounts exactly the historical megabuckets it
+    // exists to surface (a corpus predating the counts zone, or a crash
     // between the sig and counts publishes) — partial counts are
     // indistinguishable from complete ones at read time. One banding pass
     // over just the missing partitions.
@@ -436,15 +435,15 @@ object CorpusRun {
       // sig MONTH whose counts zone still holds that month's DAY
       // partitions (the crash window between the sig fold and the counts
       // fold) is fully covered at finer grain — re-seeding a month
-      // partition beside those days would make every probe sum count the
+      // partition beside those days would make every health sum count the
       // month 2×, permanently (the ordinary counts fold later converges
       // the granularity on its own). Likewise a sig DAY whose counts
       // month already exists is covered inside the fold. Residual gap
       // (accepted, needs a double crash): a folded sig month missing
       // SOME days' counts stays under-counted for those days — day
       // identity is gone from the folded rows, so an exact repair is
-      // impossible; undercounting only de-tunes the bounded-join
-      // engagement, never correctness.
+      // impossible; undercounting only de-tunes the health report,
+      // never the pairs.
       val sigDays = listIngestDays(spark, sigPath).toSet - runDate
       val cntDays = listIngestDays(spark, sigCountsPath).toSet
       val missing = sigDays.filter {
@@ -463,12 +462,6 @@ object CorpusRun {
             NumHashes, Bands, "ingest_day"),
           sigCountsPath)
     }
-    val priorCounts =
-      if (Zones.exists(spark, sigCountsPath))
-        Some(Zones.read(spark, sigCountsPath)
-          .filter(publishedPriorFilter(sigCountsPath))
-          .groupBy("band", "key").agg(sum("__n").as("__n")))
-      else None
     val newPairs =
       (if (prior.isEmpty)
         Dedup.minhashLshPairsFromIndex(daySigs, NumHashes, Bands, JaccardThreshold)
@@ -477,8 +470,7 @@ object CorpusRun {
         // directly means the day's text is shingled + hashed exactly once
         // (computed above for the zone publish, reused for the pair stage)
         Dedup.minhashLshPairsIncrementalFromSigs(
-          prior, daySigs, NumHashes, Bands, JaccardThreshold,
-          indexCounts = priorCounts))
+          prior, daySigs, NumHashes, Bands, JaccardThreshold))
         .localCheckpoint()
     dayOwnedOverwrite(
       spark, daySigs.withColumn("ingest_day", lit(runDate)), sigPath, runDate)

@@ -104,12 +104,6 @@ class DedupSimilaritySpec extends SparkSpec {
     val full = Dedup.minhashLshPairs(corpus, "doc_id", "text", 3, 32, 16, 0.6)
     assertSameRows(combined, full, "day-1 pairs ∪ incremental vs full recompute")
     assert(incremental.count() > 0, "the increment must introduce cross-batch pairs")
-    // the fused d9/d12 entry point (one emptiness probe across the three
-    // bounded joins) returns the SAME two frames as the public forms
-    val (fusedIdx, fusedInc) = Dedup.minhashLshPairsFromIndexAndIncrement(
-      Dedup.readSignatureIndex(spark, zone), day2, "doc_id", "text", 3, 32, 16, 0.6)
-    assertSameRows(fusedIdx, fromIndex, "fused index side vs minhashLshPairsFromIndex")
-    assertSameRows(fusedInc, incremental, "fused increment side vs minhashLshPairsIncremental")
     // append day-2 signatures: the zone is ready to serve day 3 without
     // ever having re-shingled day-1
     Dedup.writeSignatureIndex(spark, zone, day2, "doc_id", "text", 3, 32)
@@ -141,7 +135,7 @@ class DedupSimilaritySpec extends SparkSpec {
       bands = 8, bitsPerBand = 4)
     // expected: the union self-join LSH restricted to pairs touching the
     // increment (the index's internal pairs are yesterday's news)
-    val expected = Dedup.embeddingNearDupPairsLsh(
+    val expected = DedupOracles.embeddingNearDupPairsLsh(
         corpus.unionByName(inc), "id", "v", 0.999, bands = 8, bitsPerBand = 4)
       .filter(col("id_b") >= 1000L) // increment ids start at 1000
     assertSameRows(got, expected, "incremental embedding pairs vs union self-join")
@@ -216,12 +210,54 @@ class DedupSimilaritySpec extends SparkSpec {
       (i.toLong, base.toSeq)
     } ++ (0 until 30).map(j => (500L + j, Seq.fill(8)(1.0))) // planted identical family
     val emb = vecs.toDF("id", "v")
-    val looseE = graft.operators.Dedup.embeddingNearDupPairsLsh(
+    val looseE = DedupOracles.embeddingNearDupPairsLsh(
       emb, "id", "v", 0.999, bands = 4, bitsPerBand = 4)
-    val tightE = graft.operators.Dedup.embeddingNearDupPairsLsh(
+    val tightE = DedupOracles.embeddingNearDupPairsLsh(
       emb, "id", "v", 0.999, bands = 4, bitsPerBand = 4, maxBucket = 8)
     assertSameRows(tightE, looseE, "embedding pairs with defense engaged vs dormant")
     assert(looseE.count() >= 30L * 29 / 2, "planted identical family must all pair")
+
+    // the shared increment probe, defense engaged on both of its joins:
+    // one planted text copied 8× into the zone and 8× into the increment
+    // puts 8 rows behind every band key of each side (> maxBucket = 4)
+    val root = java.nio.file.Files.createTempDirectory("graft_hot_inc").toFile.getAbsolutePath
+    val planted = docs.filter(col("doc_id") === docs.agg(min("doc_id")).head().get(0))
+      .select("text")
+    def copies(from: Long) =
+      spark.range(from, from + 8).select(col("id").as("doc_id")).crossJoin(planted)
+    val mz = s"$root/minhash"
+    Dedup.writeSignatureIndex(spark, mz,
+      docs.filter(col("doc_id") % 2 === 0).unionByName(copies(900000L)),
+      "doc_id", "text", 3, 32, mode = "overwrite")
+    val mInc = docs.filter(col("doc_id") % 2 === 1).unionByName(copies(910000L))
+    def mPairs(maxBucket: Int) = Dedup.minhashLshPairsIncremental(
+      Dedup.readSignatureIndex(spark, mz), mInc, "doc_id", "text", 3, 32, 16, 0.6, maxBucket)
+    val looseM = mPairs(Dedup.DefaultMaxBucket)
+    assertSameRows(mPairs(4), looseM, "minhash increment with defense engaged vs dormant")
+    // 8×8 cross-batch + C(8,2) within-increment pairs among the copies
+    assert(looseM.filter(col("id_a") >= 900000L && col("jaccard") === 1.0).count() == 64 + 28,
+      "planted copies must all pair across and within the increment")
+
+    // embedding increment: a 50-row identical family in the zone and a
+    // 10-row one in the increment. maxBucket = 8 engages both joins
+    // (increment > maxBucket); maxBucket = 40 takes the bounded-increment
+    // branch, whose 1×gy grid still splits the 50-row zone bucket
+    val ez = s"$root/emb"
+    val zoneVecs = emb.filter(col("id") < 120).unionByName(
+      (0 until 50).map(j => (1000L + j, Seq.fill(8)(1.0))).toDF("id", "v"))
+    Dedup.writeEmbeddingSignatureIndex(
+      spark, ez, zoneVecs, "id", "v", bands = 4, bitsPerBand = 4, mode = "overwrite")
+    val eInc = ((0 until 10).map(j => (2000L + j, Seq.fill(8)(1.0))) ++
+      (0 until 20).map(j => (3000L + j, Array.fill(8)(rnd.nextGaussian()).toSeq)))
+      .toDF("id", "v")
+    def ePairs(maxBucket: Int) = Dedup.embeddingNearDupIncremental(
+      Dedup.readEmbeddingSignatureIndex(spark, ez), eInc, "id", "v", 0.999,
+      bands = 4, bitsPerBand = 4, maxBucket = maxBucket)
+    val looseEI = ePairs(Dedup.DefaultMaxBucket)
+    assertSameRows(ePairs(8), looseEI, "embedding increment with defense engaged vs dormant")
+    assertSameRows(ePairs(40), looseEI, "embedding increment, bounded-increment grid vs dormant")
+    assert(looseEI.filter(col("id_b") >= 2000L && col("id_b") < 3000L).count() == 50L * 10 + 45,
+      "planted embedding family must pair across and within the increment")
   }
 
   test("incremental IVF append: assignment-only fold, query ≡ rebuild-from-union, drift policy") {
@@ -389,8 +425,8 @@ class DedupSimilaritySpec extends SparkSpec {
       v.filter(col("vec_id") % 10 === 0).select(
         (col("vec_id") + 10000).as("vec_id"),
         concat(array(element_at(col("e"), 1) + lit(0.01)), slice(col("e"), 2, 10000)).as("e")))
-    val brute = Dedup.embeddingNearDupPairs(salted, "vec_id", "e", 0.99)
-    val lsh = Dedup.embeddingNearDupPairsLsh(salted, "vec_id", "e", 0.99)
+    val brute = DedupOracles.embeddingNearDupPairs(salted, "vec_id", "e", 0.99)
+    val lsh = DedupOracles.embeddingNearDupPairsLsh(salted, "vec_id", "e", 0.99)
     assertSameRows(lsh, brute, "self-join banded lsh vs brute force")
     assert(brute.count() > 0)
   }
@@ -600,7 +636,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val none = vecs.limit(0)
     // bipartite join with an empty right side; self-join of an empty frame
     assert(Dedup.embeddingNearDupJoin(vecs, "id", "v", none, "id", "v", 0.9).count() == 0)
-    assert(Dedup.embeddingNearDupPairsLsh(none, "id", "v", 0.9).count() == 0)
+    assert(DedupOracles.embeddingNearDupPairsLsh(none, "id", "v", 0.9).count() == 0)
     // semantic dedup of an empty corpus: empty assignment, no Lloyd crash
     assert(Dedup.semanticDedup(none, "id", "v", 4, 2, 0.9).count() == 0)
     // empty increment against a populated index
@@ -616,7 +652,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // still confirms the planted near-identical pair
     val near = Seq((1L, Seq(1.0, 0.001)), (2L, Seq(1.0, 0.0)), (3L, Seq(0.0, 1.0)))
       .toDF("id", "v")
-    val pairs = Dedup.embeddingNearDupPairsLsh(near, "id", "v", 0.99)
+    val pairs = DedupOracles.embeddingNearDupPairsLsh(near, "id", "v", 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)), s"small-self fast path must still confirm pairs: $pairs")
   }
@@ -629,38 +665,29 @@ class DedupSimilaritySpec extends SparkSpec {
     val docs1 = Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text")
     val docs2 = Seq((2L, "pack my box with five dozen liquor jugs")).toDF("doc_id", "text")
     val mz = s"$tmp/minhash"
-    Dedup.writeSignatureIndex(spark, mz, docs1, "doc_id", "text", 3, 32,
-      mode = "overwrite", bands = 16)
+    Dedup.writeSignatureIndex(spark, mz, docs1, "doc_id", "text", 3, 32, mode = "overwrite")
     // same geometry appends fine; the _geometry side-file is invisible to
     // the zone's readers
-    Dedup.writeSignatureIndex(spark, mz, docs2, "doc_id", "text", 3, 32, bands = 16)
+    Dedup.writeSignatureIndex(spark, mz, docs2, "doc_id", "text", 3, 32)
     assert(Dedup.readSignatureIndex(spark, mz).count() == 2)
-    // different num_hashes / shingle_n / banding each refuse before writing
-    for ((n, h, b) <- Seq((3, 16, 16), (4, 32, 16), (3, 32, 8))) {
+    // different num_hashes / shingle_n each refuse before writing
+    for ((n, h, field) <- Seq((3, 16, "num_hashes"), (4, 32, "shingle_n"))) {
       val e = intercept[IllegalArgumentException] {
-        Dedup.writeSignatureIndex(spark, mz, docs2, "doc_id", "text", n, h, bands = b)
+        Dedup.writeSignatureIndex(spark, mz, docs2, "doc_id", "text", n, h)
       }
-      assert(e.getMessage.contains("different geometry"), e.getMessage)
+      assert(e.getMessage.contains("different geometry") && e.getMessage.contains(field),
+        e.getMessage)
     }
     assert(Dedup.readSignatureIndex(spark, mz).count() == 2,
       "a refused append must not have written rows")
-    // a counts-less append under the same hash function is allowed (the
-    // counts zone goes stale, which the staleness machinery tolerates) —
-    // and must not erase the recorded banding
-    Dedup.writeSignatureIndex(spark, mz, docs2.withColumn("doc_id", lit(3L)),
-      "doc_id", "text", 3, 32)
-    val e2 = intercept[IllegalArgumentException] {
-      Dedup.writeSignatureIndex(spark, mz, docs2, "doc_id", "text", 3, 32, bands = 8)
-    }
-    assert(e2.getMessage.contains("bands"), e2.getMessage)
 
     // ── legacy zone (predates the side-meta): verifies vacuously, adopts ─
     val lz = s"$tmp/legacy"
     Dedup.signatureIndex(docs1, "doc_id", "text", 3, 32).write.parquet(lz)
-    Dedup.writeSignatureIndex(spark, lz, docs2, "doc_id", "text", 3, 32, bands = 16)
+    Dedup.writeSignatureIndex(spark, lz, docs2, "doc_id", "text", 3, 32)
     assert(Dedup.readSignatureIndex(spark, lz).count() == 2)
     intercept[IllegalArgumentException] {
-      Dedup.writeSignatureIndex(spark, lz, docs2, "doc_id", "text", 3, 16, bands = 16)
+      Dedup.writeSignatureIndex(spark, lz, docs2, "doc_id", "text", 3, 16)
     }
 
     // ── embedding zone: seed and dim are part of the hash function ──────
