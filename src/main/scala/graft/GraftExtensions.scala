@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{BpeEncode, CosineSimilarity, SignBitBands, DecimalVectorMean, DecimalVectorSum, FreqItemsAgg, FreqItemsMergeAgg, FreqTopItems, KllMergeAgg, KllQuantiles, KllSketchAgg, MinhashSignature, NearestCellDist, NearestCells, SortedIntersectCount}
+import graft.functions.{BpeEncode, CosineSimilarity, SignBitBands, DecimalVectorMean, DecimalVectorSum, FreqItemsAgg, FreqItemsMergeAgg, FreqTopItems, MinhashSignature, NearestCellDist, NearestCells, SortedIntersectCount}
 
 /** Session extensions registering graft's native expressions so they are
   * callable from SQL and `functions.call_function` (installed via
@@ -86,34 +86,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "decimal_vector_sum(v) takes one array<double> argument")
         DecimalVectorSum(children.head)
       }))
-    // Mergeable sketch states Spark SQL doesn't expose: KLL quantiles
-    // (the percentile analog of hll_sketch_agg/hll_union_agg) and
-    // Misra-Gries heavy hitters. Binary states persist to zones and
-    // roll up without rescanning raw rows — the a19 incremental shape.
-    ext.injectFunction((
-      new FunctionIdentifier("kll_sketch_agg"),
-      new ExpressionInfo(classOf[KllSketchAgg].getName, "kll_sketch_agg"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2 && children(1).foldable,
-          "kll_sketch_agg(col, k) takes a double column and a literal k")
-        KllSketchAgg(children.head,
-          children(1).eval().asInstanceOf[Number].intValue())
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("kll_merge_agg"),
-      new ExpressionInfo(classOf[KllMergeAgg].getName, "kll_merge_agg"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "kll_merge_agg(sketch) takes one binary column")
-        KllMergeAgg(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("kll_quantiles"),
-      new ExpressionInfo(classOf[KllQuantiles].getName, "kll_quantiles"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "kll_quantiles(sketch, ranks) takes a binary sketch and array<double> ranks")
-        KllQuantiles(children.head, children(1))
-      }))
+    // Misra-Gries heavy hitters with per-item (lb, ub) bounds: Spark 4.1's
+    // approx_top_k_* family reports only (item, count) and its merged
+    // state is not kilobyte-bounded (see FreqItemsSketch). KLL quantile
+    // states come from Spark's built-in kll_*_double functions. Binary
+    // states persist to zones and roll up without rescanning raw rows —
+    // the a19 incremental shape.
     ext.injectFunction((
       new FunctionIdentifier("freq_items_agg"),
       new ExpressionInfo(classOf[FreqItemsAgg].getName, "freq_items_agg"),

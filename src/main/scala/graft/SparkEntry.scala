@@ -481,10 +481,12 @@ object SparkEntry {
         .select(col("l_extendedprice").cast("double").as("price"))
       val merged = t(s, dir, "lineitem")
         .groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))
-        .agg(expr("kll_sketch_agg(cast(l_extendedprice as double), 200)").as("sk"))
-        .agg(expr("kll_quantiles(kll_merge_agg(sk), array(0.5d, 0.9d))").as("mq"))
+        .agg(expr("kll_sketch_agg_double(cast(l_extendedprice as double))").as("sk"))
+        .agg(expr("kll_sketch_get_quantile_double(kll_merge_agg_double(sk), array(0.5d, 0.9d))")
+          .as("mq"))
       val single = li.agg(
-        expr("kll_quantiles(kll_sketch_agg(price, 200), array(0.5d, 0.9d))").as("sq"),
+        expr("kll_sketch_get_quantile_double(kll_sketch_agg_double(price), array(0.5d, 0.9d))")
+          .as("sq"),
         count(lit(1)).as("n_exact"))
       li.crossJoin(broadcast(merged.crossJoin(single)))
         .agg(
@@ -543,7 +545,8 @@ object SparkEntry {
     "b1_quantile_bins" -> ((s, dir) => {
       val zone = monthlyStatsZone(s, dir)
       val cuts = Profiling.readStatsZone(s, zone)
-        .agg(expr("kll_quantiles(kll_merge_agg(value_kll), array(0.25d, 0.5d, 0.75d))").as("q"))
+        .agg(expr("kll_merge_agg_double(value_kll)").as("sk"))
+        .select(Profiling.kllQuantiles("sk", Seq(0.25, 0.5, 0.75)))
         .head().getSeq[Double](0)
       val binned = Profiling.bucketizeByQuantiles(
         t(s, dir, "lineitem"), "l_extendedprice", cuts)

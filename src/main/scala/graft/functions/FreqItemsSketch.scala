@@ -32,6 +32,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * `maxMapSize` must be a power of 2 (the sketch's own contract). Null
   * inputs are ignored. Output is the serialized sketch (`binary`),
   * decodable by [[FreqItemsMergeAgg]] and [[FreqTopItems]].
+  *
+  * Why this stays hand-written although Spark 4.1 ships the
+  * `approx_top_k_*` family (KLL quantiles, by contrast, use Spark's
+  * built-in `kll_*_double` functions):
+  *   - `approx_top_k_estimate` returns only `(item, count)`, with no
+  *     lower or upper bound, so t12's `lb ≤ exact ≤ ub` flag cannot be
+  *     computed from it;
+  *   - `approx_top_k_combine` re-creates the merged `ItemsSketch` at a
+  *     maximum map capacity of 1,572,864 counters (24 for
+  *     `ItemsSketch(32)`), so the merged state loses the kilobyte bound
+  *     the standing-statistic shape relies on.
   */
 case class FreqItemsAgg(
     child: Expression,

@@ -49,8 +49,9 @@ object Profiling {
   /** Persisted per-epoch mergeable sketch states — the standing
     * statistics a 100 TB warehouse keeps NEXT TO the data: one row per
     * (epoch, group) holding a row count, a KLL quantile state over
-    * `valueExpr`, and an HLL distinct state over `keyExpr`. Built once
-    * per epoch (e.g. nightly for the closing month); every later
+    * `valueExpr` (Spark's `kll_sketch_agg_double`, default k = 200), and
+    * an HLL distinct state over `keyExpr`. Built once per epoch (e.g.
+    * nightly for the closing month); every later
     * rollup — any group, any epoch range, quantiles AND distincts —
     * merges kilobyte states instead of rescanning raw rows
     * ([[rollupStats]], plan-audited to touch only the zone).
@@ -66,12 +67,11 @@ object Profiling {
       epochExpr: String,
       groupExpr: String,
       valueExpr: String,
-      keyExpr: String,
-      kllK: Int): DataFrame =
+      keyExpr: String): DataFrame =
     df.groupBy(expr(epochExpr).as("epoch"), expr(groupExpr).as("grp"))
       .agg(
         count(lit(1)).as("n_rows"),
-        expr(s"kll_sketch_agg(cast(($valueExpr) as double), $kllK)").as("value_kll"),
+        expr(s"kll_sketch_agg_double(cast(($valueExpr) as double))").as("value_kll"),
         expr(s"hll_sketch_agg($keyExpr)").as("key_hll"))
 
   def writeStatsZone(
@@ -80,9 +80,8 @@ object Profiling {
       epochExpr: String,
       groupExpr: String,
       valueExpr: String,
-      keyExpr: String,
-      kllK: Int = 200): Unit = {
-    statsStates(df, epochExpr, groupExpr, valueExpr, keyExpr, kllK)
+      keyExpr: String): Unit = {
+    statsStates(df, epochExpr, groupExpr, valueExpr, keyExpr)
       .repartition(1)
       .write.mode("overwrite").parquet(path)
   }
@@ -94,13 +93,25 @@ object Profiling {
     * exact row counts (counts sum losslessly), KLL-merged quantile
     * estimates at `ranks`, and the HLL-union distinct estimate.
     */
-  def rollupStats(stats: DataFrame, ranks: Seq[Double]): DataFrame = {
-    val rankArr = ranks.map(r => s"${r}d").mkString("array(", ", ", ")")
+  def rollupStats(stats: DataFrame, ranks: Seq[Double]): DataFrame =
     stats.groupBy("grp")
       .agg(
         sum("n_rows").as("n_rows"),
-        expr(s"kll_quantiles(kll_merge_agg(value_kll), $rankArr)").as("value_quantiles"),
+        expr("kll_merge_agg_double(value_kll)").as("value_kll"),
         expr("hll_sketch_estimate(hll_union_agg(key_hll))").as("key_distinct_est"))
+      .select(col("grp"), col("n_rows"),
+        kllQuantiles("value_kll", ranks).as("value_quantiles"),
+        col("key_distinct_est"))
+
+  /** Quantile estimates at `ranks` (INCLUSIVE, `percentile_disc`'s
+    * ≤-rank convention) decoded from the KLL sketch column `sketch`;
+    * NULL for an empty sketch — a group whose values were all NULL —
+    * on which `kll_sketch_get_quantile_double` raises instead.
+    */
+  private[graft] def kllQuantiles(sketch: String, ranks: Seq[Double]): Column = {
+    val rankArr = ranks.map(r => s"${r}d").mkString("array(", ", ", ")")
+    expr(s"""CASE WHEN kll_sketch_get_n_double($sketch) > 0
+      THEN kll_sketch_get_quantile_double($sketch, $rankArr) END""")
   }
 
   /** Equi-depth binning against quantile CUTPOINTS (typically decoded
@@ -375,7 +386,6 @@ object Profiling {
       groupExpr: String,
       valueExpr: String,
       keyExpr: String,
-      kllK: Int = 200,
       batchId: Option[Long] = None): Boolean = {
     import graft.sources.Zones
     // an EMPTY increment (an all-quality-dropped corpus day, a zero-row
@@ -400,7 +410,7 @@ object Profiling {
     else {
       val storedHwm = zoneProbe.map(_.getLong(1)).getOrElse(-1L)
       val hwm = batchId.getOrElse(storedHwm + 1L)
-      val incStates = statsStates(increment, epochExpr, groupExpr, valueExpr, keyExpr, kllK)
+      val incStates = statsStates(increment, epochExpr, groupExpr, valueExpr, keyExpr)
         .withColumn("hwm", lit(hwm))
         .withColumn("applied", expr("cast(array() as array<bigint>)"))
         .withColumn("applied_runs",
@@ -415,7 +425,7 @@ object Profiling {
               .groupBy("epoch", "grp")
               .agg(
                 sum("n_rows").as("n_rows"),
-                expr("kll_merge_agg(value_kll)").as("value_kll"),
+                expr("kll_merge_agg_double(value_kll)").as("value_kll"),
                 expr("hll_union_agg(key_hll)").as("key_hll"),
                 max("hwm").as("hwm"),
                 expr("""flatten(collect_list(concat(

@@ -806,13 +806,12 @@ object EventStreams {
       epochExpr: String,
       groupExpr: String,
       valueExpr: String,
-      keyExpr: String,
-      kllK: Int = 200): Unit = {
+      keyExpr: String): Unit = {
     val q = events.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.operators.Profiling.mergeStatsIncrement(
           spark, batch, zonePath, epochExpr, groupExpr, valueExpr, keyExpr,
-          kllK, batchId = Some(batchId))
+          batchId = Some(batchId))
         ()
       }
       .option("checkpointLocation", checkpoint)

@@ -686,9 +686,15 @@ class ModulesSpec extends SparkSpec {
     assert(merge(d3, 1L), "backfill below the high-water mark must merge")
     assert(!merge(d3, 1L), "replayed backfill must no-op")
     assert(Profiling.statsZoneHighWater(spark, zone) == 2L)
+    // a group whose values are all NULL (k % 2 = -1): its KLL state is an
+    // empty sketch, which must roll up to NULL quantiles, not an error
+    val d4 = Seq(("2024-02", -1L, Option.empty[Double]), ("2024-02", -3L, None))
+      .toDF("day", "k", "v")
+    assert(merge(d4, 3L))
     // counts per (epoch, grp) ≡ a one-shot build over the union: counts
     // sum losslessly through the state path, no matter how it was fed
-    Profiling.writeStatsZone(d1.unionByName(d2).unionByName(d3), s"$tmp/full",
+    Profiling.writeStatsZone(
+      d1.unionByName(d2).unionByName(d3).unionByName(d4), s"$tmp/full",
       epochExpr = "day", groupExpr = "cast(k % 2 as string)",
       valueExpr = "v", keyExpr = "k")
     val inc = Profiling.readStatsZone(spark, zone)
@@ -700,7 +706,12 @@ class ModulesSpec extends SparkSpec {
     assert(inc == full, s"incremental counts $inc diverge from one-shot $full")
     // and the merged states still answer: total rows exact, distincts in band
     val roll = Profiling.rollupStats(Profiling.readStatsZone(spark, zone), Seq(0.5))
-    assert(roll.agg(org.apache.spark.sql.functions.sum("n_rows")).head().getLong(0) == 100L)
+    assert(roll.agg(org.apache.spark.sql.functions.sum("n_rows")).head().getLong(0) == 102L)
+    val allNull = roll.filter($"grp" === "-1").head()
+    assert(allNull.getAs[Long]("n_rows") == 2L)
+    assert(allNull.isNullAt(allNull.fieldIndex("value_quantiles")),
+      s"an all-NULL group must roll up to NULL quantiles: $allNull")
+    assert(roll.filter($"grp" =!= "-1" && $"value_quantiles".isNull).isEmpty)
   }
 
   test("stats zone: applied set is range-compacted and bounded (1000+ batch ids)") {

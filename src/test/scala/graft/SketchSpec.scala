@@ -27,26 +27,71 @@ class SketchSpec extends SparkSpec {
     assert(worst <= 0.01, s"worst relative quantile error $worst")
   }
 
-  test("kll_sketch_agg: merged per-month states stay within the rank-error band") {
+  test("kll_*_double built-ins: merged states stay in the rank-error band, old zones too") {
     val li = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
     // per-month states → one merge → quantile estimates, never rescanning rows
     val merged = li.groupBy(date_format(col("l_shipdate"), "yyyy-MM"))
-      .agg(expr("kll_sketch_agg(cast(l_extendedprice as double), 200)").as("sk"))
-      .agg(expr("kll_quantiles(kll_merge_agg(sk), array(0.1d, 0.5d, 0.9d))").as("q"))
+      .agg(expr("kll_sketch_agg_double(cast(l_extendedprice as double))").as("sk"))
+      .agg(expr(
+        "kll_sketch_get_quantile_double(kll_merge_agg_double(sk), array(0.1d, 0.5d, 0.9d))").as("q"))
       .head().getSeq[Double](0)
     val single = li
-      .agg(expr(
-        "kll_quantiles(kll_sketch_agg(cast(l_extendedprice as double), 200), array(0.1d, 0.5d, 0.9d))").as("q"))
+      .agg(expr("kll_sketch_get_quantile_double(" +
+        "kll_sketch_agg_double(cast(l_extendedprice as double)), array(0.1d, 0.5d, 0.9d))").as("q"))
       .head().getSeq[Double](0)
     val n = li.count().toDouble
-    for ((p, v) <- Seq(0.1, 0.5, 0.9).zip(merged)) {
-      val rank = li.filter(col("l_extendedprice") <= v).count() / n
-      assert(math.abs(rank - p) <= 0.04, s"merged rank($v) = $rank, want ~$p")
+    def assertInBand(what: String, qs: Seq[Double]): Unit =
+      for ((p, v) <- Seq(0.1, 0.5, 0.9).zip(qs)) {
+        val rank = li.filter(col("l_extendedprice") <= v).count() / n
+        assert(math.abs(rank - p) <= 0.04, s"$what rank($v) = $rank, want ~$p")
+      }
+    assertInBand("merged", merged)
+    assertInBand("single-pass", single)
+
+    // a stats zone written before the built-ins: its value_kll bytes are
+    // what graft's own KLL aggregate wrote (a datasketches
+    // KllDoublesSketch at k = 200, serialized with toByteArray). A
+    // built-in increment merges into it and the rollup decodes both.
+    import spark.implicits._
+    import graft.operators.Profiling
+    val tmp = java.nio.file.Files.createTempDirectory("graft_kllold").toFile.getAbsolutePath
+    val priced = li.select(
+      date_format(col("l_shipdate"), "yyyy-MM").as("month"),
+      col("l_extendedprice").cast("double").as("price"), col("l_partkey"))
+    val cutoff = "1995-06"
+    val before = priced.filter(col("month") < cutoff)
+    val oldBytes = before.select("month", "price").collect()
+      .groupBy(_.getString(0)).toSeq.map { case (m, rows) =>
+        val sk = org.apache.datasketches.kll.KllDoublesSketch.newHeapInstance(200)
+        rows.foreach(r => sk.update(r.getDouble(1)))
+        (m, sk.toByteArray)
+      }.toDF("epoch", "value_kll")
+    Profiling.writeStatsZone(before, s"$tmp/built",
+      epochExpr = "month", groupExpr = "'all'", valueExpr = "price", keyExpr = "l_partkey")
+    spark.read.parquet(s"$tmp/built").drop("value_kll").join(oldBytes, "epoch")
+      .write.parquet(s"$tmp/zone")
+    assert(Profiling.mergeStatsIncrement(spark, priced.filter(col("month") >= cutoff),
+      s"$tmp/zone", epochExpr = "month", groupExpr = "'all'", valueExpr = "price",
+      keyExpr = "l_partkey", batchId = Some(0L)))
+    val roll = Profiling.rollupStats(
+      Profiling.readStatsZone(spark, s"$tmp/zone"), Seq(0.1, 0.5, 0.9)).head()
+    assert(roll.getAs[Long]("n_rows") == n.toLong)
+    assertInBand("old+built-in zone", roll.getSeq[Double](roll.fieldIndex("value_quantiles")))
+  }
+
+  test("no function GraftExtensions injects shadows a Spark built-in") {
+    // a future Spark shipping a same-named built-in must fail here, not
+    // be silently overridden by the session extension
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = injected += f._1.funcName
     }
-    for ((p, v) <- Seq(0.1, 0.5, 0.9).zip(single)) {
-      val rank = li.filter(col("l_extendedprice") <= v).count() / n
-      assert(math.abs(rank - p) <= 0.04, s"single-pass rank($v) = $rank, want ~$p")
-    }
+    new GraftExtensions()(ext)
+    assert(injected.nonEmpty)
+    val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+    val shadowing = injected.filter(name =>
+      builtin.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+    assert(shadowing.isEmpty, s"graft functions shadow Spark built-ins: $shadowing")
   }
 
   test("freq_items_agg: planted heavy hitters survive per-group merge with valid bounds") {
