@@ -2327,7 +2327,7 @@ object SparkEntry {
         .as[graft.streaming.EventStreams.EventRow]
       val name = s"st3_sessions_${System.nanoTime()}"
       graft.streaming.EventStreams
-        .sessionizeAvailableNow(s, rows, 30, name, statePartitions = 8)
+        .sessionizeAvailableNow(s, rows, 30, name)
         .select(
           col("user_id"),
           col("session_start").cast("timestamp_ntz").as("session_start"),
@@ -2351,8 +2351,7 @@ object SparkEntry {
       graft.streaming.EventStreams
         .sessionizeToParquet(s, rows, 30,
           sinkDir = tmp.resolve("sink").toString,
-          checkpointDir = tmp.resolve("ckpt").toString,
-          statePartitions = 8)
+          checkpointDir = tmp.resolve("ckpt").toString)
         .select(
           col("user_id"),
           col("session_start").cast("timestamp_ntz").as("session_start"),
@@ -2371,7 +2370,7 @@ object SparkEntry {
         .drop("__copy")
       val name = s"st6_dedup_${System.nanoTime()}"
       graft.streaming.EventStreams
-        .dedupAvailableNow(s, doubled, Seq("event_id"), name, statePartitions = 8)
+        .dedupAvailableNow(s, doubled, Seq("event_id"), name)
         .select(
           col("event_id"), col("user_id"),
           col("ts").cast("timestamp_ntz").as("ts"),
@@ -2463,8 +2462,7 @@ object SparkEntry {
         .as[graft.streaming.EventStreams.EventRow]
       val name = s"st4_pairs_${System.nanoTime()}"
       graft.streaming.EventStreams
-        .intervalJoinAvailableNow(s, side("click"), side("purchase"), 240, name,
-          statePartitions = 8)
+        .intervalJoinAvailableNow(s, side("click"), side("purchase"), 240, name)
         .select(
           col("user_id"),
           col("left_ts").cast("timestamp_ntz").as("left_ts"),

@@ -89,4 +89,40 @@ object Sessions {
       // are exactly the ones worth a parallel listing).
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+
+  /** Run `body` with `pins` set on the session's conf, then restore each
+    * pinned key (LIFO) to its prior explicit value, or unset it if it had
+    * none. `getAll` holds explicit settings only; `getOption` would
+    * return the registered default and leave the key set afterwards.
+    *
+    * This is the only place graft changes a session conf. Session confs
+    * are shared by every thread of the session, so scopes are serialized
+    * JVM-wide on one reentrant monitor held for the whole of `body`: two
+    * scopes on different threads never interleave their save and
+    * restore (one would capture the other's pins as "prior"), and
+    * same-thread nesting stays legal. The monitor does not isolate
+    * queries planned OUTSIDE any scope: one planned on another thread
+    * while `body` runs still sees the pins. No pins, no scope.
+    */
+  def withConfs[T](spark: SparkSession, pins: (String, String)*)(body: => T): T =
+    if (pins.isEmpty) body
+    else ConfScope.synchronized {
+      def put(kv: (String, Option[String])): Unit = kv match {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      val explicit = spark.conf.getAll
+      val prior = pins.map { case (k, _) => k -> explicit.get(k) }
+      pins.foreach { case (k, v) => put(k -> Some(v)) }
+      try body
+      finally prior.reverse.foreach(put)
+    }
+
+  private object ConfScope
+
+  /** Partition count for `bytes` of data at a 64 MB target: one partition
+    * per started 64 MB, at least one. The data-derived width of graft's
+    * small loop shuffles and narrow coalesces over materialized caches.
+    */
+  def partitionsFor(bytes: Long): Int = math.max(1L, bytes / (64L << 20) + 1).toInt
 }

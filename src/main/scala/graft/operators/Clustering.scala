@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Sessions
+
 /** Deterministic k-means-lite over an embedding column — corpus
   * clustering for mixture balancing / topic bucketing of training data
   * (beyond-reference; the batch companion to [[SimilaritySearch]]'s IVF
@@ -282,24 +284,9 @@ object Clustering {
     // adaptive re-planning has nothing to decide — the shuffle output
     // cardinality is ≤ k by construction at ANY corpus size — but its
     // per-exchange stage materialization adds a driver barrier per round
-    // (measured ~0.4 s over 2 rounds at sf0.1). Scoped + restored, like
-    // Zones.withBucketedMergeConfs — but NOT serialized under a global
-    // monitor like that scope: this pin lives for the whole multi-round
-    // loop (seconds), and the keys it touches are not save/restored by
-    // any other scope in this codebase, so there is no cross-scope
-    // restore race. SINGLE-TENANT SESSION ASSUMPTION: any UNRELATED
-    // query planned on this shared session while the loop runs would
-    // pick up shuffle.partitions ≈ 1 (single-task shuffles) — the
-    // operators here run one query at a time per session (the driver's
-    // bench/verify contract); a multi-tenant caller must clone the
-    // session (spark.newSession()) before invoking kmeansLite.
+    // (measured ~0.4 s over 2 rounds at sf0.1).
     val spark = vecs.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.getOption(aqeKey)
-    val prevParts = spark.conf.getOption(partsKey)
-    spark.conf.set(aqeKey, "false")
-    try {
+    Sessions.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
       val base = vecs.select(col(idCol), col(vecCol)).cache()
       val dim = base.select(size(col(vecCol))).head().getInt(0)
       // on the FUSED route every exchange inside the loop is the centroid
@@ -310,39 +297,33 @@ object Clustering {
       // (32 reduce tasks for a 64-row aggregate, measured ~0.15 s of pure
       // scheduling per Lloyd round at sf0.1). The broadcast route keeps
       // the session value: its argmin groupBy(id) is corpus-sized.
-      if (k >= kernelFrom)
-        spark.conf.set(partsKey,
-          math.max(1L, k.toLong * dim * 24 / (64L << 20) + 1).toString)
-      val outCols =
-        if (keepVector) Seq(col(idCol), col(vecCol), col("cluster"), col("dist"))
-        else Seq(col(idCol), col("cluster"), col("dist"))
-      var assigned = base.withColumn("cluster", col(idCol) % k)
-      var result: DataFrame = assigned.withColumn("dist", lit(0.0)).select(outCols: _*)
-      for (_ <- 1 to iters) {
-        val cents = centroids(assigned, vecCol, "cluster", dim)
-        // the keep-forms carry the vector with the assignment, so the next
-        // round's centroid recompute reads it directly — no per-round
-        // re-join against `base` (one shuffle saved per iteration)
-        val keep =
-          if (k >= kernelFrom) assignFusedKeep(base, idCol, vecCol, cents)
-          else assignKeep(base, idCol, vecCol, cents)
-        result = keep.select(outCols: _*)
-        assigned = keep.select(col(idCol), col(vecCol), col("cluster"))
-      }
-      // evaluate the final assignment while the cache is hot, then release
-      // it — callers get a plan-free frame, and no cached partitions leak
-      // past the operator
-      val out = result.localCheckpoint()
-      base.unpersist()
-      out
-    } finally {
-      prevAqe match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None => spark.conf.unset(aqeKey)
-      }
-      prevParts match {
-        case Some(v) => spark.conf.set(partsKey, v)
-        case None => spark.conf.unset(partsKey)
+      val loopPins =
+        if (k < kernelFrom) Nil
+        else Seq("spark.sql.shuffle.partitions" ->
+          Sessions.partitionsFor(k.toLong * dim * 24).toString)
+      Sessions.withConfs(spark, loopPins: _*) {
+        val outCols =
+          if (keepVector) Seq(col(idCol), col(vecCol), col("cluster"), col("dist"))
+          else Seq(col(idCol), col("cluster"), col("dist"))
+        var assigned = base.withColumn("cluster", col(idCol) % k)
+        var result: DataFrame = assigned.withColumn("dist", lit(0.0)).select(outCols: _*)
+        for (_ <- 1 to iters) {
+          val cents = centroids(assigned, vecCol, "cluster", dim)
+          // the keep-forms carry the vector with the assignment, so the next
+          // round's centroid recompute reads it directly — no per-round
+          // re-join against `base` (one shuffle saved per iteration)
+          val keep =
+            if (k >= kernelFrom) assignFusedKeep(base, idCol, vecCol, cents)
+            else assignKeep(base, idCol, vecCol, cents)
+          result = keep.select(outCols: _*)
+          assigned = keep.select(col(idCol), col(vecCol), col("cluster"))
+        }
+        // evaluate the final assignment while the cache is hot, then release
+        // it — callers get a plan-free frame, and no cached partitions leak
+        // past the operator
+        val out = result.localCheckpoint()
+        base.unpersist()
+        out
       }
     }
   }

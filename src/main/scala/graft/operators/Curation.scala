@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
+
 /** Corpus-curation operators for training-data pipelines: term weighting,
   * duplicate-cluster resolution, test-set decontamination, deterministic
   * splits and stratified sampling. Beyond-reference scope (the reference
@@ -637,7 +639,7 @@ object Curation {
     // inputs), so results are bit-identical. outdeg likewise computes
     // once (cached) instead of re-aggregating the edge cache per round.
     val n = nodesRaw.count()
-    // small-graph branch (the withLoopAqePolicy cut): the cached frames
+    // small-graph branch (the loopConfs cut): the cached frames
     // carry the INPUT's fan-out partitioning (a corpus rebalanced to one
     // partition per core → a 64-way edge cache), and every round rescans
     // them — at gate scale that is 96+ scheduled tasks per round over
@@ -651,7 +653,7 @@ object Curation {
       if (n > SmallGraphNodes) (eRaw, nodesRaw)
       else (coalesceSmall(eRaw, eRaw.count()), coalesceSmall(nodesRaw, n))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).cache()
-    withLoopAqePolicy(edges.sparkSession, n) {
+    Sessions.withConfs(edges.sparkSession, loopConfs(n): _*) {
       var ranks = nodes.select(col("node"), (lit(1.0) / n).as("rank"))
       for (_ <- 1 to iters) {
         val contribs = e
@@ -675,12 +677,11 @@ object Curation {
   }
 
   /** Data-derived narrow coalesce for the small-graph loop reads — see
-    * the [[withLoopAqePolicy]] partition note. Pure plan change: values,
+    * the [[loopConfs]] partition note. Pure plan change: values,
     * caches and (decimal-summed) aggregates are partitioning-independent.
     */
   private def coalesceSmall(df: DataFrame, rows: Long): DataFrame =
-    df.coalesce(math.max(1L,
-      rows * LoopShuffleBytesPerRow / LoopShuffleTargetPartitionBytes + 1).toInt)
+    df.coalesce(Sessions.partitionsFor(rows * LoopShuffleBytesPerRow))
 
   /** Below this many nodes a PageRank round's shuffles are single-task
     * scale — AQE has nothing to decide (no partitions to coalesce, no
@@ -689,69 +690,36 @@ object Curation {
     */
   val SmallGraphNodes = 1000000L
 
-  /** Scale-CONDITIONAL AQE scope for iterative graph loops — the
+  /** Scale-CONDITIONAL AQE policy for iterative graph loops — the
     * resolution of BASELINE.md's round-7 adjudication (which rejected a
     * blanket pin): at real scale a round's contribution shuffle is
     * O(edges) with hub-node skew, exactly where AQE's skew-split and
-    * coalescing earn their barriers, so AQE stays ON there; below
-    * [[SmallGraphNodes]] the same barriers are pure driver overhead on
-    * single-task shuffles and the loop pins AQE off (scoped + restored).
-    * The cut is on the MEASURED node count, so the 100 TB posture is
-    * untouched by construction.
+    * coalescing earn their barriers, so AQE stays ON there (no pins);
+    * below [[SmallGraphNodes]] the same barriers are pure driver overhead
+    * on single-task shuffles and the loop pins AQE off. The cut is on the
+    * MEASURED node count, so the 100 TB posture is untouched by
+    * construction.
+    *
+    * With AQE off nothing coalesces the loop's shuffles, so the pin also
+    * sizes them from the node count: a round's rank/contribution shuffles
+    * carry ≤ a few tens of MB below the cut, so the honest partition
+    * count is ⌈n·bytes / 64 MB⌉ ≈ 1 — not the session default's
+    * one-task-per-core fan-out, which at gate scale spends more wall on
+    * task scheduling than on rank arithmetic (measured: 32-128 task
+    * stages per round on kilobyte frames, 0.3-0.8 s/round of pure
+    * overhead).
     */
-  /** Per-session depth + the conf values saved by the OUTERMOST pin —
-    * the save/restore must be reference-counted: two overlapping loops
-    * on one session would otherwise each capture the other's pinned
-    * values as `prev` and leave them pinned session-wide forever after
-    * both return. Entries live only while a pin is active.
-    */
-  private val aqeLoopState =
-    new java.util.IdentityHashMap[
-      org.apache.spark.sql.SparkSession, (Int, Seq[(String, Option[String])])]
+  private def loopConfs(nNodes: Long): Seq[(String, String)] =
+    if (nNodes > SmallGraphNodes) Nil
+    else Seq(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" ->
+        Sessions.partitionsFor(nNodes * LoopShuffleBytesPerRow).toString)
 
   /** Bytes per (node, rank) shuffle row, generously rounded up (long +
-    * double + row overhead) — sizes the small-graph loop's shuffle
-    * partitioning from the MEASURED node count (guide §2.2: partitions
-    * in the 100 MB-1 GB band, derived from data size rather than a
-    * constant). Below [[SmallGraphNodes]] (AQE already pinned off there
-    * — no coalescing to do it for us) a round's rank/contribution
-    * shuffles carry ≤ a few tens of MB, so the honest partition count is
-    * ⌈n·bytes / 64 MB⌉ ≈ 1 — not the session default's one-task-per-core
-    * fan-out, which at gate scale spends more wall on task scheduling
-    * than on rank arithmetic (measured: 32-128 task stages per round on
-    * kilobyte frames, 0.3-0.8 s/round of pure overhead). Above the cut
-    * nothing is touched: AQE stays on and sizes partitions itself.
+    * double + row overhead).
     */
   private val LoopShuffleBytesPerRow = 64L
-  private val LoopShuffleTargetPartitionBytes = 64L << 20
-
-  private def withLoopAqePolicy[A](
-      spark: org.apache.spark.sql.SparkSession, nNodes: Long)(body: => A): A =
-    if (nNodes > SmallGraphNodes) body
-    else {
-      val parts = math.max(1L,
-        nNodes * LoopShuffleBytesPerRow / LoopShuffleTargetPartitionBytes + 1).toString
-      val pins = Seq(
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> parts)
-      aqeLoopState.synchronized {
-        val (depth, saved) = Option(aqeLoopState.get(spark))
-          .getOrElse((0, pins.map { case (k, _) => k -> spark.conf.getOption(k) }))
-        if (depth == 0) pins.foreach { case (k, v) => spark.conf.set(k, v) }
-        aqeLoopState.put(spark, (depth + 1, saved))
-      }
-      try body
-      finally aqeLoopState.synchronized {
-        val (depth, saved) = aqeLoopState.get(spark)
-        if (depth == 1) {
-          aqeLoopState.remove(spark)
-          saved.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None) => spark.conf.unset(k)
-          }
-        } else aqeLoopState.put(spark, (depth - 1, saved))
-      }
-    }
 
   /** PageRank with per-round dangling-mass redistribution: the rank mass
     * sitting on SINK nodes (no out-edges — real domain graphs are full of
@@ -781,7 +749,7 @@ object Curation {
     val nodesRaw = eRaw.select(col("src").as("node"))
       .unionByName(eRaw.select(col("dst").as("node"))).distinct().cache()
     // N as a driver literal, outdeg cached; AQE scale-conditional (see
-    // [[withLoopAqePolicy]]). The dangling mass stays a per-round
+    // [[loopConfs]]). The dangling mass stays a per-round
     // one-row broadcast (data-dependent). Small-graph loop reads
     // coalesce to the data-derived width — the [[pageRankLite]] note.
     val n = nodesRaw.count()
@@ -789,7 +757,7 @@ object Curation {
       if (n > SmallGraphNodes) (eRaw, nodesRaw)
       else (coalesceSmall(eRaw, eRaw.count()), coalesceSmall(nodesRaw, n))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).cache()
-    withLoopAqePolicy(edges.sparkSession, n) {
+    Sessions.withConfs(edges.sparkSession, loopConfs(n): _*) {
       var ranks = nodes.select(col("node"), (lit(1.0) / n).as("rank"))
       for (_ <- 1 to iters) {
         val dangling = ranks

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
+import graft.Sessions
+
 /** Deduplication operators for training-data pipelines, from exact to
   * near-duplicate. Beyond-reference scope (the reference has no dedup; its
   * closest analog is the INSERT IGNORE key-dedup, db_staging_sql.sql:94-96).
@@ -601,7 +603,7 @@ object Dedup {
     * note). Grows with the data; never widens an RDD.
     */
   private def coalesceByRows(df: DataFrame, rows: Long, bytesPerRow: Long): DataFrame =
-    df.coalesce(math.max(1L, rows * bytesPerRow / (64L << 20) + 1).toInt)
+    df.coalesce(Sessions.partitionsFor(rows * bytesPerRow))
 
   /** [[bandedFromSigs]] that also carries each banded row's SLICE HASH
     * (`__h` — the [[sigSliceHashes]] value for its band, derived with

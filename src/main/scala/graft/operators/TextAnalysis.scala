@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
+
 /** Text-analysis primitives for large-scale training-data pipelines:
   * tokenization, n-gram shingling, quality scoring, language ID, document
   * fingerprinting. All pure Catalyst column expressions (no UDFs) so they
@@ -457,7 +459,7 @@ object TextAnalysis {
     // exact and the batch pick is a total order.
     vocab = {
       val words = vocab.count()
-      vocab.coalesce(math.max(1L, words * 40L / (64L << 20) + 1).toInt)
+      vocab.coalesce(Sessions.partitionsFor(words * 40L))
     }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var rank = 1

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Sessions
+
 /** Parquet-backed warehouse zones (staging / warehouse / datamart dirs)
   * with the write disciplines the reference implements as SQL statements:
   *
@@ -323,7 +325,7 @@ object Zones {
       }
     val stageName = s"${name}__stage"
     spark.sql(s"DROP TABLE IF EXISTS `$stageName`")
-    withBucketedMergeConfs(spark) {
+    Sessions.withConfs(spark, BucketedMergeConfs: _*) {
       // pin the RETURNED audit frame's physical plan now, inside this
       // scope: executedPlan is a lazy val, so materializing it here (plan
       // construction only — nothing executes) fixes the zone-side
@@ -383,40 +385,14 @@ object Zones {
     *    re-introduces an `Exchange` on the zone side nondeterministically.
     *    Disabling the heuristic inside this scope makes the
     *    zone-side-never-shuffles guarantee deterministic.
+    *
+    * Plan audits that derive a merge-shaped plan lazily (after
+    * [[upsertBucketed]] returned) mirror the write's scope with
+    * `Sessions.withConfs(spark, BucketedMergeConfs: _*)`.
     */
   val BucketedMergeConfs: Seq[(String, String)] = Seq(
     "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
     "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
-
-  /** Monitor for [[withBucketedMergeConfs]]: session confs are SHARED
-    * across threads, and concurrent scopes (parallel test suites, the
-    * guide-§2.6 overlapped-jobs pattern) each save-and-restore the same
-    * keys — thread B's `finally` can restore the session DEFAULT while
-    * thread A is still planning inside its own scope, and thread A's
-    * merge then shuffles the zone side nondeterministically
-    * (requireAllClusterKeysForCoPartition silently back to true). The
-    * monitor serializes scopes across threads; same-thread nesting
-    * (callers wrap [[upsertBucketed]], which opens its own scope) stays
-    * legal because JVM monitors are reentrant and the LIFO save/restore
-    * then sees the outer scope's values.
-    */
-  private object BucketedMergeConfLock
-
-  /** Run `body` with [[BucketedMergeConfs]] pinned, restoring the prior
-    * values (set or unset) afterwards. Exposed so plan audits that derive
-    * a merge-shaped plan lazily (after `upsertBucketed` returned) can
-    * mirror the exact conf scope the real write ran under.
-    */
-  def withBucketedMergeConfs[T](spark: SparkSession)(body: => T): T =
-    BucketedMergeConfLock.synchronized {
-      val prev = BucketedMergeConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      BucketedMergeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
 
   private def stage(
       df: DataFrame, path: String, partitionBy: Seq[String],

@@ -2,7 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+
+import graft.Sessions
 
 /** Structured-Streaming operators over the events stream (beyond-reference:
   * the reference is strictly daily batch, SURVEY §2.8 — its daily-drop
@@ -63,35 +65,32 @@ object EventStreams {
       spark: SparkSession,
       events: DataFrame,
       keyCols: Seq[String],
-      queryName: String,
-      statePartitions: Int = 0): DataFrame = {
-    withStatePartitions(spark, statePartitions) {
-      val q = dedupWithinWatermark(events, keyCols)
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      queryName: String): DataFrame = {
+    runOneShot(spark, dedupWithinWatermark(events, keyCols)
+      .writeStream
+      .format("memory")
+      .queryName(queryName)
+      .outputMode(OutputMode.Append()))
     spark.table(queryName)
   }
 
-  /** Pin `spark.sql.shuffle.partitions` (= the state-store count, read
-    * once at query start) for the duration of one one-shot stream and
-    * restore the prior value — the streaming analog of
-    * [[graft.sources.Zones.withBucketedMergeConfs]]. `statePartitions`
-    * ≤ 0 leaves the session value untouched.
+  /** State stores of a one-shot stream: one per shuffle partition (four
+    * for a stream-stream join), so `spark.sql.shuffle.partitions` at query
+    * start. A one-shot drop over modest traffic wants fewer, bigger
+    * stores than the batch shuffle default.
     */
-  private def withStatePartitions[A](
-      spark: SparkSession, statePartitions: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    if (statePartitions > 0) spark.conf.set(key, statePartitions.toString)
-    try body
-    finally if (statePartitions > 0) spark.conf.set(key, prev)
-  }
+  private val StatePartitions = 8
+
+  /** Start `writer` as a one-shot (AvailableNow) stream with
+    * [[StatePartitions]] pinned and wait for it to finish. The query
+    * clones the session at `start()` and reads the partition count from
+    * the clone, so the pin covers the start only: no conf scope is held
+    * while the stream runs.
+    */
+  private def runOneShot[T](spark: SparkSession, writer: DataStreamWriter[T]): Unit =
+    Sessions.withConfs(spark, "spark.sql.shuffle.partitions" -> StatePartitions.toString) {
+      writer.trigger(Trigger.AvailableNow()).start()
+    }.awaitTermination()
 
   /** Cross-RUN streaming dedup: each micro-batch drops rows whose key
     * already sits in a persisted fingerprint zone, then appends the
@@ -576,20 +575,12 @@ object EventStreams {
       spark: SparkSession,
       events: Dataset[EventRow],
       gapMinutes: Int,
-      queryName: String,
-      statePartitions: Int = 0): DataFrame = {
-    // one state store per shuffle partition; a one-shot drop wants fewer,
-    // bigger stores than the batch shuffle default
-    withStatePartitions(spark, statePartitions) {
-      val q = sessionize(events, gapMinutes)
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      queryName: String): DataFrame = {
+    runOneShot(spark, sessionize(events, gapMinutes)
+      .writeStream
+      .format("memory")
+      .queryName(queryName)
+      .outputMode(OutputMode.Append()))
     spark.table(queryName)
   }
 
@@ -604,19 +595,13 @@ object EventStreams {
       events: Dataset[EventRow],
       gapMinutes: Int,
       sinkDir: String,
-      checkpointDir: String,
-      statePartitions: Int = 0): DataFrame = {
-    withStatePartitions(spark, statePartitions) {
-      val q = sessionize(events, gapMinutes)
-        .writeStream
-        .format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", checkpointDir)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      checkpointDir: String): DataFrame = {
+    runOneShot(spark, sessionize(events, gapMinutes)
+      .writeStream
+      .format("parquet")
+      .option("path", sinkDir)
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append()))
     // a run that closes zero sessions commits a file-less sink (only
     // _spark_metadata): reading it would die on schema inference even
     // though the stream succeeded AND checkpointed — a rerun no-ops
@@ -703,21 +688,12 @@ object EventStreams {
       left: Dataset[EventRow],
       right: Dataset[EventRow],
       withinMinutes: Int,
-      queryName: String,
-      statePartitions: Int = 0): DataFrame = {
-    // stream-stream joins allocate FOUR state stores per shuffle
-    // partition (left/right × keys/values); a one-shot drop over modest
-    // traffic wants fewer, bigger stores than the batch shuffle default
-    withStatePartitions(spark, statePartitions) {
-      val q = intervalJoin(left, right, withinMinutes)
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      queryName: String): DataFrame = {
+    runOneShot(spark, intervalJoin(left, right, withinMinutes)
+      .writeStream
+      .format("memory")
+      .queryName(queryName)
+      .outputMode(OutputMode.Append()))
     spark.table(queryName)
   }
 

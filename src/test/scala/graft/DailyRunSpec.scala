@@ -44,9 +44,8 @@ class DailyRunSpec extends SparkSpec {
     assert(agg.select("DATE_SK").distinct().count() == 2)
     // the aggregate zone is a bucketed table: the day-2 merge-shape join
     // and the star join on PRODUCT_SK must not shuffle the aggregate side
-    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try Zones.withBucketedMergeConfs(spark) {
+    Sessions.withConfs(spark,
+        ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: Zones.BucketedMergeConfs: _*) {
       val aggTable = spark.table(DailyRun.AggregateTable)
       val dim = Zones.read(spark, s"$wh/warehouse/dim_product").select("PRODUCT_SK")
       assertZoneSideUnshuffled(aggTable.join(dim, "PRODUCT_SK"), "aggregate star join")
@@ -54,8 +53,6 @@ class DailyRunSpec extends SparkSpec {
         .join(Zones.read(spark, s"$wh/warehouse/aggregate").select("PRODUCT_SK", "DATE_SK"),
           Seq("PRODUCT_SK", "DATE_SK"), "left_anti")
       assertZoneSideUnshuffled(merge, "aggregate upsert-shape join")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
     }
     // ledger carries both SUCCESS rows with the stats message
     val ledger = Zones.read(spark, s"$wh/control/process_log")

@@ -328,6 +328,33 @@ class ModulesSpec extends SparkSpec {
     val memorySink = SparkEntry.queries("st3_sessionize_stream")(spark, dir)
     assert(sunk.count() > 0, "parquet sink is empty")
     assertSameRows(sunk, memorySink, "parquet-sink vs memory-sink sessionize")
+    // the state-partition pin covers only the query's start(); the stream
+    // must still have run with it (batch 0's offset log records the conf)
+    val offsetMeta = scala.io.Source.fromFile(s"$tmp/ckpt/offsets/0")
+    try assert(offsetMeta.getLines().exists(_.contains("\"spark.sql.shuffle.partitions\":\"8\"")),
+      "stream did not start with 8 state partitions")
+    finally offsetMeta.close()
+  }
+
+  test("session confs change only inside Sessions.withConfs") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val confWrite = """conf\.(set|unset)\(""".r
+    val member = """^  (private )?(def|val|object) """.r
+    val (inScope, outside) = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toIndexedSeq
+        // the helper's lines: from its def to the next member of Sessions
+        val scope = lines.indexWhere(_.contains("def withConfs[")) match {
+          case -1 => Range(0, 0)
+          case start => start until lines.indexWhere(member.findFirstIn(_).nonEmpty, start + 1)
+        }
+        lines.indices.filter(i => confWrite.findFirstIn(lines(i)).nonEmpty)
+          .map(i => (scope.contains(i), s"$p:${i + 1}: ${lines(i).trim}"))
+      }.partition(_._1)
+    assert(inScope.nonEmpty, "no conf write found in Sessions.withConfs: is the scan rooted right?")
+    assert(outside.isEmpty,
+      s"session conf changed outside Sessions.withConfs:\n${outside.map(_._2).mkString("\n")}")
   }
 
   test("streaming: stream-stream interval join emits in-window matches only") {

@@ -158,9 +158,8 @@ class PlanAuditSpec extends SparkSpec {
     import graft.sources.Zones
     val wh = java.nio.file.Files.createTempDirectory("aqe_matrix").toFile.getAbsolutePath
     val tbl = "graft_aqe_bucket_zone"
-    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try Zones.withBucketedMergeConfs(spark) {
+    try Sessions.withConfs(spark,
+        ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: Zones.BucketedMergeConfs: _*) {
       val day1 = (1 to 200).map(i => (i.toLong, 10, i * 1.0)).toDF("product_sk", "date_sk", "price")
       Zones.upsertBucketed(spark, tbl, s"$wh/agg", day1,
         Seq("product_sk", "date_sk"), "date_sk", Seq("product_sk"), 8)
@@ -176,10 +175,7 @@ class PlanAuditSpec extends SparkSpec {
         case p => fail(s"expected an adaptive plan under AQE, got ${p.getClass}:\n$p")
       }
       assertZoneSideUnshuffled(mergeShape, "bucketed merge under AQE (final plan)")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
     // bloom pre-filter: the fact-side kill must survive AQE's runtime
     // re-planning too — same below-the-join assert, final plan
     val bf = SparkEntry.queries("bf1_bloom_prefilter_join")(spark, dir)

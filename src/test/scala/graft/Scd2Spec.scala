@@ -232,25 +232,22 @@ class Scd2Spec extends SparkSpec {
       prices.toSeq.toDF("id", "price").select(col("id"), col("price"), lit(1).as("psize"))
     val keys = (Seq("id"), Seq("id"), Seq("price"))
     val tzSentinel = lit(Scd2.SentinelTs).cast("timestamp")
-    val prevTz = spark.conf.get("spark.sql.session.timeZone")
-    try {
-      Scd2.applyZoned(spark, zone, snap(Map(1L -> 10.0)), keys._1, keys._2, keys._3,
-        lit("2024-01-01 00:00:00").cast("timestamp"), tzSentinel) // tsType = "timestamp"
-      spark.conf.set("spark.sql.session.timeZone", "Asia/Ho_Chi_Minh")
-      val e = intercept[IllegalStateException] {
+    Scd2.applyZoned(spark, zone, snap(Map(1L -> 10.0)), keys._1, keys._2, keys._3,
+      lit("2024-01-01 00:00:00").cast("timestamp"), tzSentinel) // tsType = "timestamp"
+    val e = Sessions.withConfs(spark, "spark.sql.session.timeZone" -> "Asia/Ho_Chi_Minh") {
+      intercept[IllegalStateException] {
         Scd2.applyZoned(spark, zone, snap(Map(1L -> 11.0)), keys._1, keys._2, keys._3,
           lit("2024-01-02 00:00:00").cast("timestamp"), tzSentinel)
       }
-      assert(e.getMessage.contains("timezone mismatch"), e.getMessage)
-      // back under the pinned TZ the zone processes normally
-      spark.conf.set("spark.sql.session.timeZone", prevTz)
-      Scd2.applyZoned(spark, zone, snap(Map(1L -> 11.0)), keys._1, keys._2, keys._3,
-        lit("2024-01-02 00:00:00").cast("timestamp"), tzSentinel)
-      // the 1-row history expired + re-inserted = 2 rows (a restarted zone
-      // would instead show 1 row, a TZ-shifted one 2 currents + 0 expired)
-      val h = spark.read.parquet(zone)
-      assert(h.count() == 2)
-      assert(h.filter(col("expired_at") =!= tzSentinel).count() == 1)
-    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+    }
+    assert(e.getMessage.contains("timezone mismatch"), e.getMessage)
+    // back under the pinned TZ the zone processes normally
+    Scd2.applyZoned(spark, zone, snap(Map(1L -> 11.0)), keys._1, keys._2, keys._3,
+      lit("2024-01-02 00:00:00").cast("timestamp"), tzSentinel)
+    // the 1-row history expired + re-inserted = 2 rows (a restarted zone
+    // would instead show 1 row, a TZ-shifted one 2 currents + 0 expired)
+    val h = spark.read.parquet(zone)
+    assert(h.count() == 2)
+    assert(h.filter(col("expired_at") =!= tzSentinel).count() == 1)
   }
 }

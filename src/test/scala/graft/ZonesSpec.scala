@@ -60,14 +60,13 @@ class ZonesSpec extends SparkSpec {
     import spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("bucketzone").toFile.getAbsolutePath
     val tbl = "graft_test_bucket_zone"
-    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // the plan audit below derives the merge plan lazily (after the
     // method restored its conf scope), so mirror the EXACT conf scope the
     // real write ran under — including autoBucketedScan=false, without
     // which the planner may nondeterministically drop the bucketed layout
     // ("disabled by query planner") and the zone side shuffles
-    try Zones.withBucketedMergeConfs(spark) {
+    try Sessions.withConfs(spark,
+        ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: Zones.BucketedMergeConfs: _*) {
       val day1 = (1 to 100).map(i => (i.toLong, 10, i * 1.0)).toDF("product_sk", "date_sk", "price")
       Zones.upsertBucketed(spark, tbl, s"$wh/agg", day1,
         Seq("product_sk", "date_sk"), "date_sk", Seq("product_sk"), 8)
@@ -86,10 +85,7 @@ class ZonesSpec extends SparkSpec {
       // the zone side of the merge join reads its buckets in place; only
       // the small increment shuffles to match
       assertZoneSideUnshuffled(merged, "bucketed zone merge")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
   test("partitioned upsert rewrites only touched partitions; pruning hits the plan") {
