@@ -107,11 +107,10 @@ object ScaleDiag {
       Dedup.writeEmbeddingSignatureIndex(spark, zonePath, corpus, "vec_id", "e",
         bands = bands, bitsPerBand = bits, mode = "overwrite")
       val zone = Dedup.readEmbeddingSignatureIndex(spark, zonePath)
-      val counts = Dedup.readBucketCounts(spark, zonePath)
       val sec = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         Dedup.embeddingNearDupIncremental(zone, inc, "vec_id", "e", 0.99,
-          bands = bands, bitsPerBand = bits, indexCounts = counts).count()
+          bands = bands, bitsPerBand = bits).count()
         (System.nanoTime() - t0) / 1e9
       }.min
       val candidates = inc

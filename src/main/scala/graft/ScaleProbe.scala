@@ -279,8 +279,7 @@ object ScaleProbe {
     sec("e3_fixed_8x8") = timedMin {
       Dedup.embeddingNearDupIncremental(
         Dedup.readEmbeddingSignatureIndex(spark, embZoneF), incEmbs, "vec_id", "e",
-        0.99, bands = 8, bitsPerBand = 8,
-        indexCounts = Dedup.readBucketCounts(spark, embZoneF))
+        0.99, bands = 8, bitsPerBand = 8)
         .count()
     }
     val e3fMissed = missedPlants(embPlantSrc,

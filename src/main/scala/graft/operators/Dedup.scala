@@ -59,8 +59,8 @@ object Dedup {
   /** Per-(band, key) row counts of a bucketed frame — the precomputable
     * side input of [[boundedBucketJoin]]. Operators issuing several
     * bounded joins over the SAME banded frame (a self-join's two sides,
-    * an increment probing cross-batch AND within-batch) should compute
-    * this ONCE and pass it to every call: the count is a full scan of the
+    * an increment's cross-cluster AND within-increment joins) should
+    * compute this ONCE and pass it to every call: the count is a full scan of the
     * frame, and re-deriving it per side re-executes whatever produced the
     * frame (hyperplane signatures, banding) unless that work is cached.
     */
@@ -87,21 +87,9 @@ object Dedup {
           ceil(col("__cx").cast("double") / maxBucket).cast("int").as("__gx"),
           ceil(col("__cy").cast("double") / maxBucket).cast("int").as("__gy"))
 
-  /** Per-frame emptiness of several small frames in ONE driver action (a
-    * tagged limit-1 union) — operators issuing multiple bounded joins pay
-    * one probe job, not one per join.
-    */
-  private def emptiness(frames: Seq[DataFrame]): Seq[Boolean] = {
-    val present = frames.zipWithIndex
-      .map { case (f, i) => f.select(lit(i).as("__t")).limit(1) }
-      .reduce(_ unionByName _)
-      .collect().map(_.getInt(0)).toSet
-    frames.indices.map(i => !present.contains(i))
-  }
-
   /** [[boundedBucketJoin]] with the oversized-bucket list (and its
     * emptiness verdict) supplied by the caller — the shape for operators
-    * that probe several joins' lists in one action via [[emptiness]].
+    * that answer several joins' verdicts with one action.
     */
   private def boundedBucketJoinWith(
       x: DataFrame,
@@ -408,8 +396,9 @@ object Dedup {
 
   /** Record (or refresh) the zone's geometry side-meta — see
     * [[guardZoneGeometry]]. Underscore-prefixed, so invisible to the
-    * zone's parquet readers, like `_counts`. Unioned with any stored
-    * fields, so a writer recording fewer fields keeps the others.
+    * zone's parquet readers (Spark skips `_`-named paths). Unioned with
+    * any stored fields, so a writer recording fewer fields keeps the
+    * others.
     */
   private[graft] def recordZoneGeometry(
       spark: org.apache.spark.sql.SparkSession,
@@ -435,63 +424,6 @@ object Dedup {
 
   def readSignatureIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
-
-  /** Fold a batch of embedding signature rows' bucket counts into the
-    * zone's `_counts` side-file (underscore paths are invisible to the
-    * main parquet read). Counts
-    * tune only the hot-bucket defense's ENGAGEMENT and split granularity
-    * — the grid decomposition is exact for any split factors — so the
-    * side-zone is a pure efficiency artifact: absent → operators count
-    * in-plan; stale → the defense is merely mis-tuned, never wrong.
-    *
-    * Self-healing: in append mode, a MISSING counts zone (a crash inside
-    * a previous swap's delete-then-rename window is the one way to lose
-    * it) rebuilds from the FULL index — seeding from
-    * just this batch would silently discard the whole history's counts,
-    * and an UNDERcounting zone is the one staleness direction that
-    * matters (historical mega-buckets would drop off the oversized
-    * list). The index was written before this call, so the recount
-    * already includes the fresh batch.
-    */
-  private def mergeBucketCountsZone(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      batch: DataFrame,
-      replace: Boolean,
-      bandsPerRow: Int): Unit = {
-    import graft.sources.Zones
-    def countsOf(rows: DataFrame) =
-      bucketCounts(rows.select(posexplode(col("bkeys")).as(Seq("band", "key"))))
-    def recountAll() = countsOf(readEmbeddingSignatureIndex(spark, path))
-    val fresh = countsOf(batch)
-    val target = s"$path/_counts"
-    if (replace) Zones.overwriteSwap(fresh.repartition(1), target)
-    else if (!Zones.exists(spark, s"$target/_SUCCESS"))
-      Zones.overwriteSwap(recountAll().repartition(1), target)
-    else {
-      val unioned = Zones.read(spark, target).unionByName(fresh)
-        .groupBy("band", "key").agg(sum("__n").as("__n"))
-        .cache()
-      // STALENESS audit, not just the missing-zone heal: a crash between
-      // a PREVIOUS append's index write and its counts merge leaves the
-      // zone present-but-undercounting — and every later union-merge
-      // folds in only its own batch, so the lost batch's counts never
-      // return and a megabucket that crossed the bound inside it stays
-      // invisible to the grid-salting engagement forever (the one
-      // staleness direction the zone doc calls out as mattering). The
-      // invariant is exact: every index row contributes `bandsPerRow`
-      // count units, so Σ__n must equal bandsPerRow × index rows — one
-      // footer-count of the index per append buys the audit.
-      val total = unioned.agg(coalesce(sum("__n"), lit(0L))).head().getLong(0)
-      val merged =
-        if (total == bandsPerRow.toLong * readEmbeddingSignatureIndex(spark, path).count())
-          unioned
-        else recountAll()
-      Zones.overwriteSwap(merged.repartition(1), target)
-      unioned.unpersist()
-    }
-    ()
-  }
 
   /** Per-(band, key) bucket counts of a signature-index frame — what a
     * pipeline publishes next to each day's index partition, so its
@@ -565,18 +497,6 @@ object Dedup {
       .select(carryCols.map(col) ++ Seq(col("bk.band").as("band"), col("bk.key").as("key")): _*)
       .groupBy((carryCols ++ Seq("band", "key")).map(col): _*)
       .agg(count(lit(1)).as("__n"))
-  }
-
-  /** An embedding signature zone's stored bucket counts, if maintained —
-    * pass to [[embeddingNearDupIncremental]] as `indexCounts` to skip the
-    * index-side counting scan.
-    */
-  def readBucketCounts(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] = {
-    import graft.sources.Zones
-    if (Zones.exists(spark, s"$path/_counts/_SUCCESS"))
-      Some(Zones.read(spark, s"$path/_counts"))
-    else None
   }
 
   /** (band, key) rows from STORED signatures — banding is a pure slice
@@ -851,9 +771,6 @@ object Dedup {
     // and a real increment's width grows with its rows.
     val incBanded = coalesceByRows(incBanded0, nIncBanded, 100L)
     val inc = coalesceByRows(inc0, math.max(1L, nIncBanded / bands), 2000L)
-    // ONE bucket-count pass per distinct frame, shared by the join sides
-    // below, and ONE driver probe for both joins' oversized lists
-    val incCounts = bucketCounts(incBanded)
     // the INDEX side is pruned to the increment's band keys BEFORE any
     // exchange: whole buckets are kept, so candidates / bucket counts /
     // grid factors are bit-identical, but the daily shuffle moves
@@ -875,18 +792,8 @@ object Dedup {
       // cached: the survivor set feeds BOTH the bucket-count derivation
       // and the cross join — without the cache each re-runs the zone scan
       .cache()
-    // index-side bucket counts come from the SURVIVORS: for any (band,
-    // key) the increment actually probes, EVERY zone row of that bucket
-    // passes the row prefilter (its slice hash is in the bloom by
-    // definition), so survivor counts are EXACT for exactly the keys
-    // oversizedBuckets consults (it inner-joins the increment's counts)
-    val idxCounts = bucketCounts(idxBanded)
-    val ovCross = oversizedBuckets(incCounts, idxCounts, maxBucket).cache()
-    val ovWithin = oversizedBuckets(incCounts, incCounts, maxBucket).cache()
-    val Seq(crossDormant, withinDormant) = emptiness(Seq(ovCross, ovWithin))
     incrementPairs(
-      bandSide(incBanded, "x"), bandSide(idxBanded, "y"),
-      (ovCross, crossDormant), (ovWithin, withinDormant),
+      bandSide(incBanded, "x"), bandSide(idxBanded, "y"), maxBucket,
       sizeRatioOk("sz_x", "sz_y", threshold),
       index.select(col("id"), col("hgrams")), inc.select(col("id"), col("hgrams")),
       confirmPairs(_, _, threshold))
@@ -896,31 +803,50 @@ object Dedup {
     * (MinHash and embedding): cross-batch candidates (the increment's
     * band rows `incX` probing the stored index's `idxY`) ∪
     * within-increment candidates, each through the exact hot-bucket
-    * bounded join with its oversized list and dormancy verdict supplied
-    * by the caller, kept by the per-pair filter `keep` (over the `_x` /
+    * bounded join, kept by the per-pair filter `keep` (over the `_x` /
     * `_y` columns); then the candidate-id fetch of the stored payload
     * and the caller's `confirm` over (candidates, id + payload rows).
     * Cross-batch ids are normalized so output matches the full
     * recompute's id_a < id_b contract regardless of which batch holds
     * the lower id.
+    *
+    * `idxY` is the caller's bloom-pruned zone band rows. Pruning keeps
+    * WHOLE buckets: every zone row of a (band, key) the increment probes
+    * survives (its key is in the bloom by definition), so survivor
+    * bucket counts are EXACT for every key the oversized lists consult
+    * (only keys the increment holds).
     */
   private def incrementPairs(
       incX: DataFrame,
       idxY: DataFrame,
-      cross: (DataFrame, Boolean),
-      within: (DataFrame, Boolean),
+      maxBucket: Int,
       keep: Column,
       indexPayload: DataFrame,
       incPayload: DataFrame,
       confirm: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    // ONE shuffle counts both sides' buckets (a side-tagged union, one
+    // group-by) and ONE `isEmpty` decides dormancy for both joins: a join
+    // whose own list is empty stays exact on the salted path (every salt
+    // is (0, 0)), so a shared verdict never changes a pair
+    val ov = incX.select(col("band"), col("key"), lit(1).as("__x"))
+      .unionByName(idxY.select(col("band"), col("key"), lit(0).as("__x")))
+      .groupBy("band", "key")
+      .agg(sum(col("__x")).as("__cx"), sum(lit(1) - col("__x")).as("__cy"))
+      .filter(col("__cx") > 0 && (col("__cx") > maxBucket || col("__cy") > maxBucket))
+    val dormant = ov.isEmpty
+    def grid(n: String) = ceil(col(n).cast("double") / maxBucket).cast("int")
+    val ovCross = ov.filter(col("__cy") > 0)
+      .select(col("band"), col("key"), grid("__cx").as("__gx"), grid("__cy").as("__gy"))
+    val ovWithin = ov.filter(col("__cx") > maxBucket)
+      .select(col("band"), col("key"), grid("__cx").as("__gx"), grid("__cx").as("__gy"))
     val incY = incX.select(incX.columns.map(c =>
       if (c.endsWith("_x")) col(c).as(c.dropRight(2) + "_y") else col(c)): _*)
-    val crossCand = boundedBucketJoinWith(incX, idxY, "id_x", "id_y", cross._1, cross._2)
+    val crossCand = boundedBucketJoinWith(incX, idxY, "id_x", "id_y", ovCross, dormant)
       .filter(keep)
       .select(
         least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"))
-    val withinCand = boundedBucketJoinWith(incX, incY, "id_x", "id_y", within._1, within._2)
+    val withinCand = boundedBucketJoinWith(incX, incY, "id_x", "id_y", ovWithin, dormant)
       .filter(col("id_x") < col("id_y") && keep)
       .select(col("id_x").as("id_a"), col("id_y").as("id_b"))
     val cand = crossCand.unionByName(withinCand).distinct()
@@ -1009,28 +935,19 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Banded sign-bit LSH signatures as (band, key) rows: `bands`
-    * independent signatures of `bitsPerBand` random hyperplanes each.
-    * Two vectors at angle θ share a given band with P = (1 − θ/π)^r, and
-    * are candidates if ANY band matches: P(miss) = (1 − (1−θ/π)^r)^bands.
-    * At a 0.99-cosine threshold (θ ≤ 0.142 rad) the default 8×8 scheme
-    * misses a true pair with P ≤ 3.5e-6 — and the near-1 similarities
-    * real near-dups carry make it ~1e-13. Each band key has 2^r values,
-    * so candidate volume scales as bands·n²/2^r per band-bucket — tune
-    * `bitsPerBand` up with corpus size to keep buckets O(1).
-    */
-  private def bandedSignatures(
-      v: Column,
-      planes: Seq[Array[Double]],
-      bands: Int,
-      bitsPerBand: Int): Column =
-    transform(bandKeyArray(v, planes, bands, bitsPerBand),
-      (k, b) => struct(b.as("band"), k.as("key")))
-
   /** Bipartite embedding near-dup join (e.g. new-batch probes vs corpus):
     * pairs (id_a from `left`, id_b from `right`) with cosine ≥ threshold.
-    * Candidates come from the banded LSH bucket join — the scale path; no
-    * cross join at any corpus size. Recall per [[bandedSignatures]].
+    * Candidates come from the banded sign-bit LSH bucket join — the scale
+    * path; no cross join at any corpus size. Each side bands through
+    * [[bandKeyArray]]: `bands` independent signatures of `bitsPerBand`
+    * random hyperplanes, one (band, key) row per band. Two vectors at
+    * angle θ share a given band with P = (1 − θ/π)^r, and are candidates
+    * if ANY band matches: P(miss) = (1 − (1−θ/π)^r)^bands. At a
+    * 0.99-cosine threshold (θ ≤ 0.142 rad) the 8×8 scheme misses a true
+    * pair with P ≤ 3.5e-6 — and the near-1 similarities real near-dups
+    * carry make it ~1e-13. Each band key has 2^r values, so candidate
+    * volume scales as bands·nL·nR/2^r — tune `bitsPerBand` up with
+    * corpus size to keep buckets O(1).
     */
   def embeddingNearDupJoin(
       left: DataFrame,
@@ -1044,82 +961,56 @@ object Dedup {
       bitsPerBand: Int = AutoGeometry,
       seed: Long = 42L,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    // self-join (left eq right): signatures, band rows, and bucket
-    // counts are computed ONCE and shared by both sides
-    val self = (left eq right) && leftId == rightId && leftVec == rightVec
     // null vectors can't be near anything — dropped, not crashed (the
     // dim probe below would NPE on a null-first row; same guard as
     // embeddingSignatureRows / embeddingNearDupIncremental)
     val l = left.select(col(leftId).as("id_a"), col(leftVec).cast("array<double>").as("va"))
       .filter(col("va").isNotNull)
-    val r =
-      if (self) l.toDF("id_b", "vb")
-      else right.select(col(rightId).as("id_b"), col(rightVec).cast("array<double>").as("vb"))
-        .filter(col("vb").isNotNull)
+    val r = right.select(col(rightId).as("id_b"), col(rightVec).cast("array<double>").as("vb"))
+      .filter(col("vb").isNotNull)
     // one action yields row count AND dimensionality: an EMPTY side is a
     // routine production input (a day with no embeddings) and must return
     // an empty pair frame, not crash the dim lookup; the count also
-    // proves small joins dormant for free — a self-join of ≤ maxBucket
-    // vectors cannot exceed the bound (a bucket holds at most n rows),
-    // and a bipartite join with BOTH sides ≤ maxBucket holds at most
-    // nL×nR ≤ maxBucket² candidates in any task. The left side is sized
-    // with a BOUNDED limit-probe (reads ≤ maxBucket+1 rows, stops there)
-    // and only when the right is already small — a large bipartite join
-    // pays nothing new.
+    // proves small joins dormant for free — with BOTH sides ≤ maxBucket a
+    // join task holds at most nL×nR ≤ maxBucket² candidates. The left
+    // side is sized with a BOUNDED limit-probe (reads ≤ maxBucket+1 rows,
+    // stops there) and only when the right is already small — a large
+    // join pays nothing new.
     val stats = r.agg(count(lit(1)), first(size(col("vb")))).head()
     val nRight = stats.getLong(0)
     if (nRight == 0)
       return l.select("id_a").limit(0).crossJoin(r.select("id_b").limit(0))
     val dim = stats.getInt(1)
     val smallBoth = nRight <= maxBucket &&
-      (self || l.select(lit(1)).limit(maxBucket + 1).count() <= maxBucket)
+      l.select(lit(1)).limit(maxBucket + 1).count() <= maxBucket
     // auto geometry sizes from the RIGHT side's count — the corpus side
-    // of the bipartite shape (probes-vs-corpus), and the whole input on
-    // a self-join. The left count is only known cheaply when small; the
-    // right bound is what prices the random-collision term anyway.
+    // of the bipartite shape (probes-vs-corpus). The left count is only
+    // known cheaply when small; the right bound is what prices the
+    // random-collision term anyway.
     val (bands0, bitsPerBand0) = resolveGeometry(bands, bitsPerBand, nRight)
     val planes = SimilaritySearch.hyperplanes(dim, bands0 * bitsPerBand0, seed)
     // cached only when read twice: the counting path feeds each band
     // frame to its bucket-count pass AND the join (uncached, the
     // hyperplane signature math — bands × bitsPerBand dot products per
-    // vector, the expensive part — would run twice per side); the self
-    // path reuses lb as both join sides. A small bipartite join reads
-    // each frame exactly once — caching it would only cost memory writes.
-    val needCache = self || !smallBoth
-    val lb0 = l.select(
-      col("id_a"),
-      explode(bandedSignatures(col("va"), planes, bands0, bitsPerBand0)).as("bk"))
-      .select(col("id_a"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val lb = if (needCache) lb0.cache() else lb0
-    val rb =
-      if (self) lb.withColumnRenamed("id_a", "id_b")
-      else {
-        val rb0 = r.select(
-          col("id_b"),
-          explode(bandedSignatures(col("vb"), planes, bands0, bitsPerBand0)).as("bk"))
-          .select(col("id_b"), col("bk.band").as("band"), col("bk.key").as("key"))
-        if (needCache) rb0.cache() else rb0
-      }
+    // vector, the expensive part — would run twice per side). A small
+    // join reads each frame exactly once — caching it would only cost
+    // memory writes.
+    def bandRows(side: DataFrame, id: String, v: String): DataFrame = {
+      val b = side.select(col(id),
+        posexplode(bandKeyArray(col(v), planes, bands0, bitsPerBand0)).as(Seq("band", "key")))
+      if (smallBoth) b else b.cache()
+    }
+    val lb = bandRows(l, "id_a", "va")
+    val rb = bandRows(r, "id_b", "vb")
     // ids-only candidates first; vectors join back once per distinct pair,
     // so the band shuffle moves (long, int, long) rows — not embeddings.
     // Hot-bucket-bounded: near-identical embedding families (boilerplate
     // pages, stock images) pile behind one sign-bit key otherwise.
-    val cand = (
+    val cand =
       if (smallBoth) lb.join(rb, Seq("band", "key"))
-      else {
-        val lCounts = Some(bucketCounts(lb))
-        val rCounts = if (self) lCounts else Some(bucketCounts(rb))
-        boundedBucketJoin(lb, rb, "id_a", "id_b", maxBucket,
-          xCounts = lCounts, yCounts = rCounts)
-      })
-      .select("id_a", "id_b")
+      else boundedBucketJoin(lb, rb, "id_a", "id_b", maxBucket)
+    cand.select("id_a", "id_b")
       .distinct()
-    // self-join: drop self-pairs and the mirrored ordering BEFORE the
-    // vector join — the band self-join emits (a,a) for every doc and
-    // both orderings of every candidate, which would double the confirm
-    // join's shuffle volume and cosine work just to be filtered after
-    val candOriented = if (self) cand.filter(col("id_a") < col("id_b")) else cand
-    candOriented
       .join(l, "id_a")
       .join(r, "id_b")
       .withColumn("sim", SimilaritySearch.cosine(col("va"), col("vb")))
@@ -1410,8 +1301,11 @@ object Dedup {
   }
 
   /** Per-band sign-bit keys as an array (index b = band b's key) — the
-    * stored form of [[bandedSignatures]]: banding a stored row back into
-    * (band, key) probes is a posexplode, no vector math. Dispatches to
+    * ONE embedding band-row derivation: every embedding LSH path (the
+    * bipartite join, the stored `bkeys` column, the incremental probe,
+    * `IndexRun`) bands through a posexplode of this array, so a stored
+    * row bands back into (band, key) probes with no vector math and the
+    * key encoding cannot fork between writer and reader. Dispatches to
     * the fused [[graft.functions.SignBitBands]] kernel when the session
     * registers it: the plane matrix rides as ONE reference object
     * instead of bands×bits×dim plan literals (4,096 nodes at the default
@@ -1645,7 +1539,6 @@ object Dedup {
     // dim, and the resolved geometry — nothing below re-scans the batch.
     val sig = embeddingSignatureRowsStats(df, idCol, vecCol, bands, bitsPerBand, seed)
     if (sig.n == 0) return
-    val keyed = sig.rows.cache()
     // dim is part of the hash function: same seed at a different
     // dimensionality draws different hyperplanes (see [[guardZoneGeometry]])
     val geometry = Seq(
@@ -1656,14 +1549,8 @@ object Dedup {
     // row-count-sized file count (Zones.sizedForWrite — the
     // writeSignatureIndex rationale); sig.n rode out of the derivation's
     // own stats aggregation, so the sizing costs no extra scan
-    graft.sources.Zones.sizedForWrite(keyed, sig.n).write.mode(mode).parquet(path)
+    graft.sources.Zones.sizedForWrite(sig.rows, sig.n).write.mode(mode).parquet(path)
     recordZoneGeometry(spark, path, geometry)
-    // bucket counts ride next to the index (hidden _counts side-file):
-    // daily probes then never recount the corpus — see [[readBucketCounts]]
-    mergeBucketCountsZone(
-      spark, path, keyed, replace = mode == "overwrite", bandsPerRow = sig.bands)
-    keyed.unpersist()
-    ()
   }
 
   def readEmbeddingSignatureIndex(
@@ -1677,7 +1564,15 @@ object Dedup {
     * (a posexplode of `bkeys` — no hyperplane math, no corpus rescan
     * beyond the index zone). Ids-only candidates shuffle first;
     * vectors join back once per distinct pair. Output: (id_a < id_b),
-    * matching the self-join [[embeddingNearDupJoin]]'s contract.
+    * the same pair set a full recompute over index ∪ increment yields
+    * for pairs touching the increment.
+    *
+    * The probe front end is the MinHash probe's
+    * ([[minhashLshPairsIncrementalFromSigs]]): one bloom over the
+    * increment's (band, key) rows at every size, the row prefilter on
+    * the stored `bkeys` plus the per-band prune on the zone scan, then
+    * the shared [[incrementPairs]] back end, which counts survivors for
+    * the hot-bucket defense.
     *
     * Geometry defaults ([[AutoGeometry]]): the increment's keys must
     * come from the SAME (bands, bitsPerBand, seed, dim) hash family the
@@ -1688,7 +1583,7 @@ object Dedup {
     * explicit shape — its writer already knows it. Prefer
     * [[embeddingNearDupIncrementalAt]] where the zone PATH is at hand:
     * it reads the full recorded `_geometry` (including a non-default
-    * seed) and the stored counts, so nothing is assumed.
+    * seed), so nothing is assumed.
     */
   def embeddingNearDupIncremental(
       index: DataFrame,
@@ -1699,8 +1594,7 @@ object Dedup {
       bands: Int = AutoGeometry,
       bitsPerBand: Int = AutoGeometry,
       seed: Long = 42L,
-      maxBucket: Int = DefaultMaxBucket,
-      indexCounts: Option[DataFrame] = None): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val inc = increment.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       // a NULL vector can't be near-anything — dropped, not crashed
       // (mirrors embeddingSignatureRows; also keeps the dim probe null-safe)
@@ -1723,104 +1617,36 @@ object Dedup {
         if (head.isEmpty) sigGeometry(nInc) else { val b = head(0).getInt(0); (b, b) }
       }
     val planes = SimilaritySearch.hyperplanes(dim, bands0 * bitsPerBand0, seed)
-    // no cache: incSig's one consumer is incBandX, which caches itself
-    val incSig = inc
-      .withColumn("bkeys", bandKeyArray(col("v"), planes, bands0, bitsPerBand0))
     def bandRows(df: DataFrame, as: String): DataFrame =
       df.select(col("id").as(as), posexplode(col("bkeys")).as(Seq("band", "key")))
     // cache(), not localCheckpoint — the d9-path rationale (measured
-    // indistinguishable, recoverable on executor loss)
-    val incBandX0 = bandRows(incSig, "id_x").cache()
-    // zone-probe prune (see minhashLshPairsIncrementalFromSigs): the
-    // stored index's band rows are bloom-filtered to the increment's keys
-    // on the scan, so the band-join exchange moves touched buckets only —
-    // one bloom shared with the counts prune below. On the counted
-    // branch the downstream consumers (≥4 reads of the materialized
-    // checkpoint) also coalesce to the measured-rows width — the
-    // d9-path coalesceByRows rationale (the checkpoint inherits the
-    // corpus rebalance's fan-out; ~32 B/band row, 64 MB target).
-    val (incBandX, probeBloom) =
-      if (nInc * bands0 <= ZoneProbes.BroadcastProbeMaxRows) {
-        // materialize the checkpoint in parallel before keyBloom's
-        // single-task agg reads through it; right-size the bloom
-        val nKeys = incBandX0.count()
-        (coalesceByRows(incBandX0, nKeys, 32L),
-          Some(ZoneProbes.keyBloom(incBandX0, Seq("band", "key"), nKeys)))
-      } else (incBandX0, None)
-    // row-level zone prefilter BEFORE the bands×rows explode (see
-    // [[prefilterZoneRowsByBkeys]]): a codegen'd OR of per-band bloom
-    // probes over the stored bkeys arrays on the scan; only survivors
-    // explode. Cached: both the counts derivation and the cross join
-    // consume it, and without the cache each would re-run the zone scan
-    val idxPre = probeBloom.fold(index)(prefilterZoneRowsByBkeys(index, _, bands0))
-    val idxBand0 = ZoneProbes.pruneByBloom(
-      bandRows(idxPre, "id_y"), probeBloom, Seq("band", "key"))
-    // cache only the SURVIVOR set (bloom engaged): with the bloom
-    // disengaged this frame is the unpruned bands×corpus explode, and
-    // caching it would materialize corpus-scale state for one consumer
-    val idxBand = // survivor set: truncate like the probe side above
-      if (probeBloom.isDefined) idxBand0.cache() else idxBand0
-    // increment ≤ maxBucket AND index ≤ maxBucket prove BOTH joins
-    // dormant — any bucket pair holds at most nInc×nIdx ≤ maxBucket²
-    // candidates — without a counting pass or driver probe. The index
-    // side is sized with a BOUNDED limit-probe against the index ITSELF
-    // (reads ≤ maxBucket+1 rows then stops — cheap at any corpus size),
-    // NOT the stored counts zone: the zone is an efficiency artifact
-    // that may legitimately lag the index (crash between index append
-    // and counts merge), and an undercounting zone must never disengage
-    // the defense. The probe is only attempted when NO counts zone is
-    // supplied: with one, the counted path below costs no index scan
-    // anyway, so the probe job would be pure overhead. The early daily
-    // steady state (bounded increment, young corpus) takes this path; a
-    // grown index falls through to the counted grid-salted machinery.
-    val smallBoth = nInc <= maxBucket && indexCounts.isEmpty &&
-      index.select(lit(1)).limit(maxBucket + 1).count() <= maxBucket
-    val none = incBandX.select(col("band"), col("key"),
-      lit(1).as("__gx"), lit(1).as("__gy")).limit(0)
-    val (crossDormant, withinDormant, ovCross, ovWithin) =
-      if (smallBoth) (true, true, none, none)
-      else if (nInc <= maxBucket) {
-        // a bounded increment makes the WITHIN join dormant BY
-        // CONSTRUCTION (no bucket can exceed nInc ≤ maxBucket rows) and
-        // caps the cross join's increment axis at one grid cell — so the
-        // oversized list derives from the INDEX counts alone (the stored
-        // zone, or one counting pass), with no increment-side counting
-        // and a single tiny-frame emptiness probe. The 1×gy grid is the
-        // same exact decomposition with the x factor pinned.
-        // with the row prefilter engaged, survivor counts are exact for
-        // every probed key (see the d9 analog) and cost O(survivors);
-        // the stored counts zone is only worth its scan when no bloom
-        // engaged (huge increment — everything corpus-proportional then)
-        val idxCounts =
-          if (probeBloom.isDefined) bucketCounts(idxBand)
-          else indexCounts.getOrElse(bucketCounts(idxBand))
-        val oc = idxCounts.filter(col("__n") > maxBucket)
-          .select(col("band"), col("key"), lit(1).as("__gx"),
-            ceil(col("__n").cast("double") / maxBucket).cast("int").as("__gy"))
-          .cache()
-        (oc.isEmpty, true, oc, none)
-      } else {
-        // one bucket-count pass per distinct frame (increment ×3, index
-        // ×1) and one driver probe for both joins' oversized lists; the
-        // stored counts prune to the increment's band keys (exact — the
-        // oversized list inner-joins the two count frames)
-        val incCounts = bucketCounts(incBandX)
-        // survivor counts when the prefilter engaged (exact for probed
-        // keys — the d9 analog); stored counts only without a bloom
-        val idxCounts =
-          if (probeBloom.isDefined) bucketCounts(idxBand)
-          else ZoneProbes.pruneByBloom(
-            indexCounts.getOrElse(bucketCounts(idxBand)), probeBloom, Seq("band", "key"))
-        val oc = oversizedBuckets(incCounts, idxCounts, maxBucket).cache()
-        val ow = oversizedBuckets(incCounts, incCounts, maxBucket).cache()
-        val Seq(cd, wd) = emptiness(Seq(oc, ow))
-        (cd, wd, oc, ow)
-      }
+    // indistinguishable, recoverable on executor loss). No cache on the
+    // signed increment itself: its one consumer is this band frame.
+    val incBandX0 = bandRows(
+      inc.withColumn("bkeys", bandKeyArray(col("v"), planes, bands0, bitsPerBand0)),
+      "id_x").cache()
+    // materialize the cache in parallel before keyBloom's single-task agg
+    // reads through it, and right-size the bloom; downstream reads
+    // coalesce to the measured-rows width (the d9-path coalesceByRows
+    // rationale, ~32 B/band row)
+    val nKeys = incBandX0.count()
+    val incBandX = coalesceByRows(incBandX0, nKeys, 32L)
+    // ONE bloom over the increment's (band, key) rows serves both zone
+    // prunes, with no size gate (the MinHash probe's rationale): the row
+    // prefilter on the stored bkeys arrays BEFORE the bands×rows explode
+    // (see [[prefilterZoneRowsByBkeys]]), then the per-band prune of the
+    // exploded rows. Cached: the survivor set feeds both the bucket-count
+    // derivation and the cross join
+    val probeBloom = ZoneProbes.keyBloom(incBandX0, Seq("band", "key"), nKeys)
+    val idxBand = ZoneProbes.pruneByBloom(
+        bandRows(prefilterZoneRowsByBkeys(index, probeBloom, bands0), "id_y"),
+        probeBloom, Seq("band", "key"))
+      .cache()
     // both joins hot-bucket-bounded (see [[boundedBucketJoin]]): a stored
     // boilerplate-embedding family shares one sign-bit key per band; the
     // cosine confirm reads the index side's vectors by candidate id
     incrementPairs(
-      incBandX, idxBand, (ovCross, crossDormant), (ovWithin, withinDormant), lit(true),
+      incBandX, idxBand, maxBucket, lit(true),
       index.select(col("id"), col("v")), inc.select(col("id"), col("v")),
       (cand, vecs) => cand
         .join(vecs.select(col("id").as("id_a"), col("v").as("va")), "id_a")
@@ -1832,11 +1658,10 @@ object Dedup {
 
   /** [[embeddingNearDupIncremental]] against a zone PATH: the probe keys
     * itself under the zone's recorded `_geometry` — bands, bits AND seed,
-    * so even a non-default or re-seeded writer is matched exactly — and
-    * rides the stored `_counts` for the hot-bucket defense (no index
-    * counting scan). The production daily entry point for raw
-    * (non-versioned) signature zones; a zone predating the side-meta
-    * falls back to the rows-derived square shape.
+    * so even a non-default or re-seeded writer is matched exactly. The
+    * production daily entry point for raw (non-versioned) signature
+    * zones; a zone predating the side-meta falls back to the
+    * rows-derived square shape.
     */
   def embeddingNearDupIncrementalAt(
       spark: org.apache.spark.sql.SparkSession,
@@ -1852,7 +1677,6 @@ object Dedup {
       bands = g.get("bands").map(_.toInt).getOrElse(AutoGeometry),
       bitsPerBand = g.get("bits_per_band").map(_.toInt).getOrElse(AutoGeometry),
       seed = g.getOrElse("seed", 42L),
-      maxBucket = maxBucket,
-      indexCounts = readBucketCounts(spark, path))
+      maxBucket = maxBucket)
   }
 }

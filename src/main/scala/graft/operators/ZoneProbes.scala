@@ -13,13 +13,14 @@ import org.apache.spark.sql.functions._
   * BOTH sides on the key — a daily shuffle of the whole standing index,
   * the one cost in these paths that grows with the corpus instead of the
   * increment (the round-10 d9 10×-corpus ratio of 1.19× was exactly this
-  * term). The fix here: the increment's key set rides to the zone scan as
-  * a BROADCAST left-semi before any exchange, so the only zone rows that
-  * ever enter a shuffle are those in buckets the increment actually
-  * touches — O(candidates). The zone still pays one linear SCAN (columnar,
-  * pruned to the key columns); no FILE-SKIPPING layout can avoid that for
-  * hash-image keys — sorting/clustering by band key gives row groups
-  * min/max ranges over a UNIFORM key space, and a daily increment's ~10⁵
+  * term). The fix here: the increment's key set rides to the zone scan —
+  * as a BROADCAST left-semi or a plan-literal BLOOM — before any exchange,
+  * so the only zone rows that ever enter a shuffle are those in buckets
+  * the increment actually touches — O(candidates). The zone still pays
+  * one linear SCAN (columnar, pruned to the key columns); no
+  * FILE-SKIPPING layout can avoid that for hash-image keys —
+  * sorting/clustering by band key gives row groups min/max ranges over
+  * a UNIFORM key space, and a daily increment's ~10⁵
   * uniformly-spread probe keys intersect every such range, so parquet
   * stats prune nothing (the expected probes-per-row-group is far above
   * zero at any realistic file count) — and a bucketed layout would only
@@ -27,10 +28,10 @@ import org.apache.spark.sql.functions._
   * month-fold lifecycle (bucket files cannot be written through the
   * path-based day-partition publish). What the scan CAN shed (round 14)
   * is per-row work and payload width: Dedup's probes evaluate the band
-  * bloom as a row-level exists() over the STORED signature arrays inside
-  * the scan stage (no bands×rows explode, no string keys for dead rows),
-  * and the confirm stage fetches its heavy payload columns
-  * (hgrams/vectors) by the BOUNDED candidate-id list as a pushable
+  * bloom as a row-level OR of per-band probes over the STORED signature
+  * arrays inside the scan stage (no bands×rows explode, no string keys
+  * for dead rows), and the confirm stage fetches its heavy payload
+  * columns (hgrams/vectors) by the BOUNDED candidate-id list as a pushable
   * parquet In — THERE row-group stats do skip, because candidate ids are
   * few and id layout is write-ordered, not hash-image.
   *
@@ -39,15 +40,19 @@ import org.apache.spark.sql.functions._
   * operator (bucket counts, grid-salting factors, candidate joins) sees
   * bit-identical inputs for every key that can still match.
   *
-  * Dispatch: the broadcast is bounded by the INCREMENT's distinct-key
-  * count. Past [[BroadcastProbeMaxRows]] the semi prune hands off to an
-  * explicit BLOOM prune (one distributed agg over the increment keys →
-  * an ≤8 MB plan literal filtering the zone scan) — explicit because
-  * Spark's InjectRuntimeFilter never blooms the right side of a
-  * LEFT ANTI join, so "the optimizer covers it" was an unverifiable
-  * claim at exactly the scale that matters. Past [[BloomProbeMaxRows]]
-  * the plain shuffle join stands: the increment is then a material
-  * fraction of the corpus and the exchange is proportionally sane.
+  * Dispatch: the two incremental LSH probes (MinHash and embedding)
+  * build ONE [[keyBloom]] over the increment's band keys at every size
+  * and prune with [[pruneByBloom]] — a key set past the bloom's sizing
+  * only raises its fpp, pruning less but never wrongly. The fingerprint
+  * [[zoneAntiJoin]] dispatches on the INCREMENT's distinct-key count:
+  * up to [[BroadcastProbeMaxRows]] a broadcast semi; past it an explicit
+  * BLOOM prune (one distributed agg over the increment keys → an ≤8 MB
+  * plan literal filtering the zone scan) — explicit because Spark's
+  * InjectRuntimeFilter never blooms the right side of a LEFT ANTI join,
+  * so "the optimizer covers it" was an unverifiable claim at exactly the
+  * scale that matters. Past [[BloomProbeMaxRows]] the plain shuffle join
+  * stands: the increment is then a material fraction of the corpus and
+  * the exchange is proportionally sane.
   */
 object ZoneProbes {
 
@@ -132,16 +137,10 @@ object ZoneProbes {
     * positives keep WHOLE extra key groups, and pruning semantics only
     * require a superset of the matching groups, so every downstream
     * consumer (bucket counts, grid factors, candidate joins) stays
-    * exact. `None` (a disengaged caller) passes the zone through.
+    * exact.
     */
-  def pruneByBloom(
-      zone: DataFrame, bloom: Option[Array[Byte]], keys: Seq[String]): DataFrame =
-    bloom match {
-      case None => zone
-      case Some(b) =>
-        zone.filter(call_function("graft_might_contain",
-          lit(b), xxhash64(keys.map(col): _*)))
-    }
+  def pruneByBloom(zone: DataFrame, bloom: Array[Byte], keys: Seq[String]): DataFrame =
+    zone.filter(call_function("graft_might_contain", lit(bloom), xxhash64(keys.map(col): _*)))
 
   /** `increment LEFT ANTI zone` on `keys`, with the corpus-scale side
     * kept out of every exchange: the probe direction is INVERTED — the

@@ -367,10 +367,11 @@ object IndexRun {
     * way to query a size-policy index (a caller passing this binary's
     * default geometry against a version built wider would compute keys
     * from different hyperplanes and silently match nothing). Reads meta
-    * (kilobytes) + the stored counts zone (the hot-bucket defense's
-    * input, no index counting scan); returns (id_a < id_b) pairs at
-    * cosine ≥ `threshold`, or an empty pair frame when no version is
-    * live yet.
+    * (kilobytes) for the geometry; the probe counts its bloom-pruned
+    * survivors for the hot-bucket defense, so the version's counts zone
+    * (read by the concentration policy) is not consulted. Returns
+    * (id_a < id_b) pairs at cosine ≥ `threshold`, or an empty pair
+    * frame when no version is live yet.
     */
   def sigQuery(
       spark: SparkSession,
@@ -386,15 +387,12 @@ object IndexRun {
         increment.select(col(idCol).as("id_a"), col(idCol).as("id_b")).limit(0)
       case Some(live) =>
         val meta = spark.read.parquet(s"$live/meta").head()
-        val counts = spark.read.parquet(s"$live/counts")
-          .groupBy("band", "key").agg(sum("__n").as("__n"))
         Dedup.embeddingNearDupIncremental(
           spark.read.parquet(s"$live/index"), increment, idCol, vecCol, threshold,
           bands = meta.getAs[Int]("bands"),
           bitsPerBand = meta.getAs[Int]("bits_per_band"),
           seed = meta.getAs[Long]("seed"),
-          maxBucket = maxBucket,
-          indexCounts = Some(counts))
+          maxBucket = maxBucket)
     }
   }
 

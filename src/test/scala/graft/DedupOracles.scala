@@ -32,9 +32,11 @@ object DedupOracles {
       .select("id_a", "id_b")
   }
 
-  /** Self-join form of [[embeddingNearDupJoin]]: same output contract as
-    * the brute-force [[embeddingNearDupPairs]] (id_a < id_b), candidates
-    * via banded LSH buckets.
+  /** All near-dup pairs inside one frame through [[embeddingNearDupJoin]]:
+    * the frame is passed as both sides of the bipartite join, and the
+    * `id_a < id_b` filter drops the self-pairs and mirrored orderings
+    * that emits, giving the brute-force [[embeddingNearDupPairs]]
+    * contract with candidates via banded LSH buckets.
     */
   def embeddingNearDupPairsLsh(
       df: DataFrame,

@@ -143,13 +143,20 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(got.filter(col("id_a") < 1000L).count() >= 10, "cross-batch pairs missing")
     assert(got.filter(col("id_a") === 2000L && col("id_b") === 2001L).count() == 1,
       "within-increment pair missing")
-    // stored counts prove increment+index small → the count-free dormant
-    // path — bitwise identical to the counted path above
-    val viaCounts = Dedup.embeddingNearDupIncremental(
+    // a zone written by an older layout also holds a `_counts/` bucket-count
+    // side-dir: the probe ignores it (pairs unchanged) and a later append
+    // still passes the geometry guard
+    Dedup.readEmbeddingSignatureIndex(spark, zone)
+      .select(posexplode(col("bkeys")).as(Seq("band", "key")))
+      .groupBy("band", "key").agg(count(lit(1)).as("__n"))
+      .write.parquet(s"$zone/_counts")
+    val withCountsDir = Dedup.embeddingNearDupIncremental(
       Dedup.readEmbeddingSignatureIndex(spark, zone), inc, "id", "v", 0.999,
-      bands = 8, bitsPerBand = 4,
-      indexCounts = Dedup.readBucketCounts(spark, zone))
-    assertSameRows(viaCounts, expected, "count-free small path vs counted path")
+      bands = 8, bitsPerBand = 4)
+    assertSameRows(withCountsDir, expected, "probe of a zone holding a _counts/ dir")
+    Dedup.writeEmbeddingSignatureIndex(spark, zone, inc, "id", "v")
+    assert(Dedup.readEmbeddingSignatureIndex(spark, zone).count() == 40L + incVecs.size,
+      "append to a zone holding a _counts/ dir must land under the stored geometry")
   }
 
   test("persisted IVF index returns bit-identical results to build-per-query IVF") {
@@ -239,9 +246,9 @@ class DedupSimilaritySpec extends SparkSpec {
       "planted copies must all pair across and within the increment")
 
     // embedding increment: a 50-row identical family in the zone and a
-    // 10-row one in the increment. maxBucket = 8 engages both joins
-    // (increment > maxBucket); maxBucket = 40 takes the bounded-increment
-    // branch, whose 1×gy grid still splits the 50-row zone bucket
+    // 10-row one in the increment. maxBucket = 8 engages both joins;
+    // maxBucket = 40 engages only the cross join (the 50-row zone bucket
+    // splits, the 10-row increment bucket stays under the bound)
     val ez = s"$root/emb"
     val zoneVecs = emb.filter(col("id") < 120).unionByName(
       (0 until 50).map(j => (1000L + j, Seq.fill(8)(1.0))).toDF("id", "v"))
@@ -255,7 +262,7 @@ class DedupSimilaritySpec extends SparkSpec {
       bands = 4, bitsPerBand = 4, maxBucket = maxBucket)
     val looseEI = ePairs(Dedup.DefaultMaxBucket)
     assertSameRows(ePairs(8), looseEI, "embedding increment with defense engaged vs dormant")
-    assertSameRows(ePairs(40), looseEI, "embedding increment, bounded-increment grid vs dormant")
+    assertSameRows(ePairs(40), looseEI, "embedding increment, cross join engaged vs dormant")
     assert(looseEI.filter(col("id_b") >= 2000L && col("id_b") < 3000L).count() == 50L * 10 + 45,
       "planted embedding family must pair across and within the increment")
   }
@@ -444,56 +451,6 @@ class DedupSimilaritySpec extends SparkSpec {
       .join(exactPairs, Seq("query_id", "neighbor_id"), "left_semi").count()
     val recall = hit.toDouble / exactPairs.count()
     assert(recall >= 0.55, s"random-data recall@10 = $recall (probe baseline 0.5)")
-  }
-
-  test("counts side-zone self-heals from the index after a crash-lost _counts dir") {
-    import spark.implicits._
-    val zone = java.nio.file.Files.createTempDirectory("graft_counts_heal")
-      .toFile.getAbsolutePath + "/idx"
-    val rnd = new scala.util.Random(13)
-    def vecs(from: Long, n: Int) =
-      (from until from + n).map(i => (i, Seq.fill(8)(rnd.nextGaussian()))).toDF("id", "v")
-    Dedup.writeEmbeddingSignatureIndex(spark, zone, vecs(0L, 30), "id", "v",
-      bands = 4, bitsPerBand = 4, mode = "overwrite")
-    Dedup.writeEmbeddingSignatureIndex(spark, zone, vecs(100L, 30), "id", "v",
-      bands = 4, bitsPerBand = 4)
-    // crash inside the counts swap's delete-then-rename window: the
-    // side-zone is gone, the index survives
-    val fs = new org.apache.hadoop.fs.Path(zone)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(s"$zone/_counts"), true)
-    assert(Dedup.readBucketCounts(spark, zone).isEmpty)
-    // the next append must rebuild the FULL history's counts from the
-    // index itself — seeding from just its own batch would leave
-    // historical mega-buckets off the oversized list silently
-    Dedup.writeEmbeddingSignatureIndex(spark, zone, vecs(200L, 30), "id", "v",
-      bands = 4, bitsPerBand = 4)
-    val healed = Dedup.readBucketCounts(spark, zone).get
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val truth = Dedup.readEmbeddingSignatureIndex(spark, zone)
-      .select(posexplode(col("bkeys")).as(Seq("band", "key")))
-      .groupBy("band", "key").count()
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(healed == truth, "healed counts must equal a full recount of the index")
-
-    // STALE zone (present but undercounting): a crash between a previous
-    // append's INDEX write and its counts merge — simulated by appending
-    // rows to the index parquet directly, behind the zone API's back.
-    // The missing-zone heal can't see this; the next append's invariant
-    // audit (Σ__n == bands × index rows) must trigger the full recount.
-    val lost = vecs(300L, 25).select(col("id"), col("v").cast("array<double>").as("v"))
-    graft.operators.Dedup.embeddingSignatureRows(lost, "id", "v", 4, 4)
-      .write.mode("append").parquet(zone)
-    Dedup.writeEmbeddingSignatureIndex(spark, zone, vecs(400L, 20), "id", "v",
-      bands = 4, bitsPerBand = 4)
-    val healed2 = Dedup.readBucketCounts(spark, zone).get
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val truth2 = Dedup.readEmbeddingSignatureIndex(spark, zone)
-      .select(posexplode(col("bkeys")).as(Seq("band", "key")))
-      .groupBy("band", "key").count()
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(healed2 == truth2,
-      "a present-but-stale counts zone must be detected and fully recounted")
   }
 
   test("semanticDedup equals the brute-force within-cluster ε-ball rule") {

@@ -650,7 +650,7 @@ class PlanAuditSpec extends SparkSpec {
     // ── bloom probe prune (the band-key form d9/e3 use — one plan-literal
     // bloom instead of a per-prune broadcast build): result identity, and
     // the might_contain filter must sit below the zone's exchange ──
-    val bloom = Some(graft.operators.ZoneProbes.keyBloom(probe, Seq("band", "key")))
+    val bloom = graft.operators.ZoneProbes.keyBloom(probe, Seq("band", "key"))
     val bloomJoined = graft.operators.ZoneProbes.pruneByBloom(
         spark.read.parquet(s"$root/bands"), bloom, Seq("band", "key"))
       .withColumnRenamed("id", "id_y").join(probe, Seq("band", "key"))
