@@ -44,8 +44,13 @@ def main():
         if only and name not in only:
             continue
         exp = canon(con.execute(sql).df())
-        got = canon(con.execute(
-            f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')").df())
+        try:
+            got = canon(con.execute(
+                f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')").df())
+        except Exception as e:
+            print(f"FAIL {name}: spark output missing: {e}")
+            n_fail += 1
+            continue
         if list(exp.columns) != list(got.columns) or exp.shape != got.shape:
             print(f"FAIL {name}: shape/columns differ exp={exp.shape} got={got.shape}")
             n_fail += 1

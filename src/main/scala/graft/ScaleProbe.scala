@@ -43,7 +43,7 @@ object ScaleProbe {
     * with no zone writes, so re-running is sound): the repo's standing
     * adjudication protocol, SPARK_GRAFT_PROBE_RUNS (default 3). The
     * mutating probes (k5 append, the CorpusRun days) stay single-run —
-    * a re-run would append again / hit the ranToday gate.
+    * a re-run would append again / hit the SUCCESS-today gate.
     */
   private val ProbeRuns = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "3").toInt
   private def timedMin(body: => Unit): Double =
@@ -122,7 +122,8 @@ object ScaleProbe {
     // state. Pair legs (d9/e3/e5/k5) overwrite their own zones; the
     // ledger-gated CorpusRun legs instead wipe their warehouse dirs at
     // leg start (below) — re-entering a kept wh would return SKIPPED
-    // (ranToday) and abort the require. A full run still starts clean.
+    // (SUCCESS-today gate) and abort the require. A full run still starts
+    // clean.
     if (SkipLegs.isEmpty) Zones.delete(spark, workDir)
     val meta = readGenMeta(genDir)
     val PlantOffset = meta.plantOffset
@@ -386,7 +387,7 @@ object ScaleProbe {
     }
     if (!SkipLegs("corpus")) {
     // fresh warehouse even on a resumed run: CorpusRun is ledger-gated
-    // (ranToday/anyRunning), so a kept wh from a partial prior run would
+    // (RunLedger.gate), so a kept wh from a partial prior run would
     // SKIP instead of running — the ADVICE-r13 resume trap
     Zones.delete(spark, wh)
     require(CorpusRun.run(spark, day1, wh, "2026-08-01 02:00:00") == "SUCCESS")

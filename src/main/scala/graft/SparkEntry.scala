@@ -974,9 +974,11 @@ object SparkEntry {
     // from the real SCD2 round — the full start→transform→finish path.
     "sp3_log_message" -> ((s, dir) => {
       val stats = scdRound2Stats(s, dir)
-      val (ledger0, runId) =
-        RunLedger.startRun(RunLedger.empty(s), "transform_data", "2024-01-02 00:00:00")
-      RunLedger.finishRun(ledger0, runId, "SUCCESS", "2024-01-02 00:05:00", Some(stats))
+      val empty = RunLedger.empty(s)
+      val runId = RunLedger.gate(empty, "transform_data", "2024-01-02 00:00:00").get
+      RunLedger.finishRun(
+        RunLedger.startRun(empty, runId, "transform_data", "2024-01-02 00:00:00"),
+        runId, "SUCCESS", "2024-01-02 00:05:00", RunLedger.statsMessage(stats))
         .select(col("id"), col("process_name"), col("status"), col("message"))
     }),
     // S9: row UPDATE by key (SP_ETL_Update_Log_Status's UPDATE ... WHERE
@@ -990,8 +992,7 @@ object SparkEntry {
         lit(null).cast("timestamp").as("end_time"),
         lit("RUNNING").as("status"),
         lit(null).cast("string").as("message"))
-      RunLedger.finishRun(ledger, 13L, "SUCCESS", "2024-03-01 09:00:00",
-          messageOverride = Some("closed by daily run"))
+      RunLedger.finishRun(ledger, 13L, "SUCCESS", "2024-03-01 09:00:00", "closed by daily run")
         .select(col("id"), col("process_name"), col("status"), col("message"),
           col("end_time").cast("timestamp_ntz").as("end_time"))
     }),
@@ -1986,7 +1987,7 @@ object SparkEntry {
     "c9_corpus_run_ledger" -> ((s, dir) => {
       val wh = corpusRunWarehouse(s, dir)
       def n(pat: String) = regexp_extract(col("message"), pat, 1).cast("bigint")
-      graft.sources.Zones.read(s, s"$wh/control/corpus_log")
+      RunLedger.read(s, s"$wh/control/corpus_log")
         .filter(col("process_name") === graft.pipeline.CorpusRun.ProcessName &&
           col("status") === "SUCCESS")
         .select(
@@ -2694,7 +2695,7 @@ object SparkEntry {
     * increments through [[graft.pipeline.CorpusRun.run]] end to end —
     * quality suite, exact/near/semantic dedup against the standing zones,
     * paragraph excision, publish, stats, ledger. Re-invocations hit the
-    * ranToday gate (SKIPPED) and measure reads of the standing output.
+    * SUCCESS-today gate (SKIPPED) and measure reads of the standing output.
     *
     * Planted structure (all offsets collision-free: base doc_id < 10^7):
     *   day1 = base docs with doc_id % 3 == 0

@@ -57,7 +57,6 @@ import graft.sources.Zones
   */
 object CorpusRun {
   val ProcessName = "corpus_pipeline"
-  val StaleRunningHours = 24
 
   /** Quality floor: documents shorter than this many whitespace tokens
     * (or mostly non-alphabetic) never enter the dedup stages.
@@ -189,32 +188,11 @@ object CorpusRun {
       whDir: String,
       runTs: String,
       qualityRules: Seq[QualityRule] = defaultQualityRules,
-      semantic: Option[SemanticStage] = None,
-      // a hard-killed run (no FAILED row) leaves a RUNNING row that the
-      // stale-unblock can only pass once runTs moves `staleRunningHours`
-      // past it — but a same-day retry's runTs can never be 24h later
-      // than a same-day crash, so the default makes the day unrunnable
-      // until tomorrow (when runDate would be wrong). Operators retrying
-      // a hard-killed day pass a smaller window here.
-      staleRunningHours: Int = StaleRunningHours): String = {
-    val runDate = runTs.substring(0, 10)
+      semantic: Option[SemanticStage] = None): String = {
     val ledgerPath = s"$whDir/control/corpus_log"
-    val ledger0 =
-      if (Zones.exists(spark, ledgerPath)) Zones.read(spark, ledgerPath)
-      else RunLedger.empty(spark)
-    if (RunLedger.ranToday(ledger0, ProcessName, runDate) ||
-        RunLedger.anyRunning(ledger0, ProcessName, runTs, staleRunningHours)) return "SKIPPED"
-    val (ledger1, runId) = RunLedger.startRun(ledger0, ProcessName, runTs)
-    Zones.overwriteSwap(ledger1, ledgerPath)
-    try runStages(spark, incrementDir, whDir, runTs, runDate, ledgerPath, runId, qualityRules, semantic)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
-        val failed = RunLedger.finishRun(
-          Zones.read(spark, ledgerPath), runId, "FAILED", runTs,
-          messageOverride = Some(s"FAILED: $msg"))
-        Zones.overwriteSwap(failed, ledgerPath)
-        throw e
+    RunLedger.guarded(spark, ledgerPath, ProcessName, runTs) {
+      runStages(spark, incrementDir, whDir, runTs, runTs.substring(0, 10), ledgerPath,
+        qualityRules, semantic)
     }
   }
 
@@ -255,7 +233,6 @@ object CorpusRun {
       runTs: String,
       runDate: String,
       ledgerPath: String,
-      runId: Long,
       qualityRules: Seq[QualityRule],
       semantic: Option[SemanticStage]): String = {
     val docsPath = s"$whDir/corpus/docs"
@@ -373,14 +350,15 @@ object CorpusRun {
     // unconditionally — compactZones folds SUCCESS days only. The
     // admissible set is enumerated driver-side from the partition
     // listing, so the probe filter is a literal isin: exact static
-    // partition pruning, no runtime cast games.
-    val successDaySet: Set[String] = Zones.read(spark, ledgerPath)
+    // partition pruning, no runtime cast games. Read once per run: no
+    // stage writes the ledger, and stage [7]'s fold reuses the set.
+    val successDays: Set[String] = RunLedger.read(spark, ledgerPath)
       .filter(col("process_name") === ProcessName && col("status") === "SUCCESS")
       .select(substring(col("start_time").cast("string"), 1, 10).as("d"))
       .distinct().collect().map(_.getString(0)).toSet
     def publishedPriorFilter(path: String): Column = {
       val admissible = listIngestDays(spark, path)
-        .filter(v => v < runDate && (v.length == 7 || successDaySet.contains(v)))
+        .filter(v => v < runDate && (v.length == 7 || successDays.contains(v)))
       if (admissible.isEmpty) lit(false)
       else col("ingest_day").isin(admissible: _*)
     }
@@ -900,18 +878,8 @@ object CorpusRun {
     // sibling SUCCESS day of the failed day's month folds, the
     // folded-month guard in runStages refuses the retry loudly (a
     // post-fold retry would admit future siblings as prior days).
-    val successDays: Set[String] = Zones.read(spark, ledgerPath)
-      .filter(col("process_name") === ProcessName && col("status") === "SUCCESS")
-      .select(substring(col("start_time").cast("string"), 1, 10).as("d"))
-      .distinct().collect().map(_.getString(0)).toSet
     val compacted = compactZones(spark, whDir, runDate, foldEligible = successDays)
-
-    val done = RunLedger.finishRun(
-      Zones.read(spark, ledgerPath), runId, "SUCCESS", runTs,
-      messageOverride = Some(
-        message + (if (compacted.isEmpty) "" else s" COMPACTED: $compacted")))
-    Zones.overwriteSwap(done, ledgerPath)
-    "SUCCESS"
+    message + (if (compacted.isEmpty) "" else s" COMPACTED: $compacted")
   }
 
   /** Zone retention/compaction lifecycle — returns a human summary of

@@ -33,11 +33,6 @@ object DailyRun {
   val AggregateTable = "graft_aggregate"
   val AggregateBuckets = 32
 
-  /** A RUNNING row older than this no longer blocks the gate — covers a
-    * hard-killed driver that never reached its FAILED close.
-    */
-  val StaleRunningHours = 24
-
   def main(args: Array[String]): Unit = {
     val Array(landingDir, whDir, runTs) = args.take(3)
     val spark = Sessions
@@ -50,41 +45,20 @@ object DailyRun {
   }
 
   /** Returns "SKIPPED" (gate) or "SUCCESS"; rethrows after recording a
-    * FAILED ledger row if any stage fails.
+    * FAILED ledger row if any stage fails ([[RunLedger.guarded]]).
     */
-  def run(spark: SparkSession, landingDir: String, whDir: String, runTs: String): String = {
-    val runDate = runTs.substring(0, 10)
-    val ledgerPath = s"$whDir/control/process_log"
-    val ledger0 =
-      if (Zones.exists(spark, ledgerPath)) Zones.read(spark, ledgerPath)
-      else RunLedger.empty(spark)
-    // gates BEFORE registering (the reference's livelock, inverted)
-    if (RunLedger.ranToday(ledger0, ProcessName, runDate) ||
-        RunLedger.anyRunning(ledger0, ProcessName, runTs, StaleRunningHours)) return "SKIPPED"
-    val (ledger1, runId) = RunLedger.startRun(ledger0, ProcessName, runTs)
-    Zones.overwriteSwap(ledger1, ledgerPath)
-    // any failure past this point must close the RUNNING row, or the
-    // mutual-exclusion gate would skip every future run
-    try runStages(spark, landingDir, whDir, runTs, runDate, ledgerPath, runId)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
-        val failed = RunLedger.finishRun(
-          Zones.read(spark, ledgerPath), runId, "FAILED", runTs,
-          messageOverride = Some(s"FAILED: $msg"))
-        Zones.overwriteSwap(failed, ledgerPath)
-        throw e
+  def run(spark: SparkSession, landingDir: String, whDir: String, runTs: String): String =
+    RunLedger.guarded(spark, s"$whDir/control/process_log", ProcessName, runTs) {
+      runStages(spark, landingDir, whDir, runTs, runTs.substring(0, 10))
     }
-  }
 
+  /** Stages [3]–[7]; returns the SUCCESS ledger message. */
   private def runStages(
       spark: SparkSession,
       landingDir: String,
       whDir: String,
       runTs: String,
-      runDate: String,
-      ledgerPath: String,
-      runId: Long): String = {
+      runDate: String): String = {
     // [3] landing → staging raw (truncate-and-load). Corrupt landing
     // files are quarantined, counted, and SURFACED in the run ledger —
     // at warehouse scale one truncated upload must neither kill the
@@ -131,12 +105,8 @@ object DailyRun {
     // without shuffling the (at scale, 100 TB) aggregate side
     val today = dimDate.filter(col("FULL_DATE") === lit(runDate).cast("date"))
       .select("DATE_SK", "CALENDAR_YEAR", "INT_MONTH").head()
-    val snapshot = Zones.read(spark, productPath).select(
-      col("BRAND_SK"), col("PRODUCT_SK"), col("ID_CONFIG"),
-      lit(today.getInt(0)).as("DATE_SK"),
-      lit(today.getInt(1)).as("CALENDAR_YEAR"),
-      lit(today.getInt(2)).as("CALENDAR_MONTH"),
-      col("MAX_PRICE"), col("MIN_PRICE"))
+    val snapshot = ProductPipeline.aggregateSnapshot(
+      Zones.read(spark, productPath), today.getInt(0), today.getInt(1), today.getInt(2))
     Zones.upsertBucketed(
       spark, AggregateTable, s"$whDir/warehouse/aggregate", snapshot,
       Seq("PRODUCT_SK", "DATE_SK"), "DATE_SK", Seq("PRODUCT_SK"), AggregateBuckets)
@@ -150,15 +120,10 @@ object DailyRun {
       ProductPipeline.datamartQuarterly(aggregate, dimDate),
       s"$whDir/datamart/dm_product_quarterly_trend")
 
-    val message = RunLedger.statsMessage(stats) + (
+    RunLedger.statsMessage(stats) + (
       if (quarantined.isEmpty) ""
       else s" QUARANTINED ${quarantined.size} corrupt landing file(s) to " +
         s"${Zones.quarantineDir(landingDir)}.")
-    val done = RunLedger.finishRun(
-      Zones.read(spark, ledgerPath), runId, "SUCCESS", runTs,
-      messageOverride = Some(message))
-    Zones.overwriteSwap(done, ledgerPath)
-    "SUCCESS"
   }
 
   /** Returns the landing frame plus any quarantined corrupt-file paths

@@ -38,7 +38,6 @@ import graft.sources.Zones
   */
 object IndexRun {
   val ProcessName = "index_pipeline"
-  val StaleRunningHours = 24
   val NCells = 16
   val RetrainInflation = 1.5
 
@@ -547,7 +546,7 @@ object IndexRun {
   }
 
   /** Returns "SKIPPED" (gate) or "SUCCESS"; rethrows after recording a
-    * FAILED ledger row if any stage fails.
+    * FAILED ledger row if any stage fails ([[RunLedger.guarded]]).
     */
   def run(
       spark: SparkSession,
@@ -562,15 +561,7 @@ object IndexRun {
       semTargetOccupancy: Int = SemTargetOccupancy,
       semOccupancyInflation: Double = SemOccupancyInflation): String = {
     val runDate = runTs.substring(0, 10)
-    val ledgerPath = s"$whDir/control/index_log"
-    val ledger0 =
-      if (Zones.exists(spark, ledgerPath)) Zones.read(spark, ledgerPath)
-      else RunLedger.empty(spark)
-    if (RunLedger.ranToday(ledger0, ProcessName, runDate) ||
-        RunLedger.anyRunning(ledger0, ProcessName, runTs, StaleRunningHours)) return "SKIPPED"
-    val (ledger1, runId) = RunLedger.startRun(ledger0, ProcessName, runTs)
-    Zones.overwriteSwap(ledger1, ledgerPath)
-    try {
+    RunLedger.guarded(spark, s"$whDir/control/index_log", ProcessName, runTs) {
       val indexBase = s"$whDir/index/ivf"
       // a NULL embedding (a failed upstream embed) is unindexable by
       // either leg — dropped here once, so the quantizer sample can't
@@ -628,24 +619,11 @@ object IndexRun {
         }
       // the LSH signature index rides the same nightly increment — its
       // own version lineage, drift signal, and pointer under index/sig
-      val message = ivfMessage + " " + sigStage(
+      ivfMessage + " " + sigStage(
         spark, s"$whDir/index/sig", increment, idCol, vecCol, runDate,
         sigRetrainInflation) + " " + semStage(
         spark, s"$whDir/index/sem", increment, idCol, vecCol, runDate,
         semTargetOccupancy, semOccupancyInflation)
-      val done = RunLedger.finishRun(
-        Zones.read(spark, ledgerPath), runId, "SUCCESS", runTs,
-        messageOverride = Some(message))
-      Zones.overwriteSwap(done, ledgerPath)
-      "SUCCESS"
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
-        val failed = RunLedger.finishRun(
-          Zones.read(spark, ledgerPath), runId, "FAILED", runTs,
-          messageOverride = Some(s"FAILED: $msg"))
-        Zones.overwriteSwap(failed, ledgerPath)
-        throw e
     }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.operators.{Clean, Scd2, ScdStats, SurrogateKeys, Upsert}
+import graft.operators.{Clean, Scd2, ScdStats, SurrogateKeys}
 
 /** The reference's six-stage daily batch (run_all.bat:20-64) as set-based
   * Spark transformations over DataFrames. Every stage that the reference
@@ -202,23 +202,18 @@ object ProductPipeline {
         StructField("ID_CONFIG", IntegerType))))
   }
 
-  /** Stage 6 — load_aggregate.py:90-107: daily snapshot of DIM_PRODUCT
-    * upserted into AGGREGATE keyed (PRODUCT_SK, DATE_SK).
+  /** Stage 6 — load_aggregate.py:90-107: the day's snapshot of
+    * DIM_PRODUCT, upserted into AGGREGATE keyed (PRODUCT_SK, DATE_SK) by
+    * the caller.
     */
-  def loadAggregate(
-      dimProduct: DataFrame,
-      aggregate: DataFrame,
-      dateSk: Int,
-      calendarYear: Int,
-      calendarMonth: Int): DataFrame = {
-    val snapshot = dimProduct.select(
+  def aggregateSnapshot(
+      dimProduct: DataFrame, dateSk: Int, calendarYear: Int, calendarMonth: Int): DataFrame =
+    dimProduct.select(
       col("BRAND_SK"), col("PRODUCT_SK"), col("ID_CONFIG"),
       lit(dateSk).as("DATE_SK"),
       lit(calendarYear).as("CALENDAR_YEAR"),
       lit(calendarMonth).as("CALENDAR_MONTH"),
       col("MAX_PRICE"), col("MIN_PRICE"))
-    Upsert.upsert(aggregate, snapshot, Seq("PRODUCT_SK", "DATE_SK"))
-  }
 
   /** Stage 7a — DM_PRODUCT_DAILY_PRICE (load_datamart.py:112-133):
     * midrange-"AVG" rollup, full refresh.

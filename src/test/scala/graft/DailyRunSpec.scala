@@ -104,11 +104,14 @@ class DailyRunSpec extends SparkSpec {
   }
 
   test("a stale RUNNING row (hard-killed driver) stops blocking after StaleRunningHours") {
-    val (ledger, _) = graft.control.RunLedger.startRun(
-      graft.control.RunLedger.empty(spark), DailyRun.ProcessName, "2025-11-22 10:00:00")
-    assert(graft.control.RunLedger.anyRunning(
-      ledger, DailyRun.ProcessName, "2025-11-22 12:00:00", DailyRun.StaleRunningHours))
-    assert(!graft.control.RunLedger.anyRunning(
-      ledger, DailyRun.ProcessName, "2025-11-23 12:00:00", DailyRun.StaleRunningHours))
+    import graft.control.RunLedger
+    val ledger = RunLedger.startRun(
+      RunLedger.empty(spark), 1L, DailyRun.ProcessName, "2025-11-22 10:00:00")
+    assert(RunLedger.gate(ledger, DailyRun.ProcessName, "2025-11-22 12:00:00").isEmpty)
+    val stillFresh = java.time.LocalDateTime.of(2025, 11, 22, 10, 0)
+      .plusHours(RunLedger.StaleRunningHours - 1)
+      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+    assert(RunLedger.gate(ledger, DailyRun.ProcessName, stillFresh).isEmpty)
+    assert(RunLedger.gate(ledger, DailyRun.ProcessName, "2025-11-23 12:00:00").contains(2L))
   }
 }

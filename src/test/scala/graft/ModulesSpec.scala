@@ -165,19 +165,73 @@ class ModulesSpec extends SparkSpec {
   }
 
   test("run ledger: idempotency + mutual-exclusion gates") {
-    val l0 = RunLedger.empty(spark)
-    assert(!RunLedger.ranToday(l0, "transform", "2025-11-23"))
-    val (l1, id1) = RunLedger.startRun(l0, "transform", "2025-11-23 06:00:00")
-    assert(RunLedger.anyRunning(l1, "transform"))
-    assert(!RunLedger.anyRunning(l1, "crawl"))
-    val l2 = RunLedger.finishRun(l1, id1, "SUCCESS", "2025-11-23 06:05:00",
-      Some(graft.operators.ScdStats(239, 239, 0)))
-    assert(!RunLedger.anyRunning(l2, "transform"))
-    assert(RunLedger.ranToday(l2, "transform", "2025-11-23"))
-    assert(!RunLedger.ranToday(l2, "transform", "2025-11-24"))
+    val now = java.time.LocalDateTime.of(2025, 11, 23, 12, 0)
+    def ts(t: java.time.LocalDateTime) =
+      t.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+    def ledger(rows: (Long, String, java.time.LocalDateTime, String)*) = {
+      import spark.implicits._
+      rows.map { case (id, process, start, status) =>
+        (id, process, ts(start),
+          if (status == "RUNNING") None else Some(ts(start.plusMinutes(5))), status)
+      }.toDF("id", "process_name", "start_time", "end_time", "status").select(
+        col("id"), col("process_name"), col("start_time").cast("timestamp"),
+        col("end_time").cast("timestamp"), col("status"), col("status").as("message"))
+    }
+    val stale = now.minusHours(RunLedger.StaleRunningHours + 2)
+    // (case, ledger rows, gate answer for "transform" at `now`)
+    val table = Seq(
+      ("empty ledger", ledger(), Some(1L)),
+      ("SUCCESS today → skip", ledger((1L, "transform", now.minusHours(6), "SUCCESS")), None),
+      ("SUCCESS yesterday → run",
+        ledger((1L, "transform", now.minusDays(1), "SUCCESS")), Some(2L)),
+      ("FAILED today → run", ledger((4L, "transform", now.minusHours(6), "FAILED")), Some(5L)),
+      ("fresh RUNNING → skip", ledger((1L, "transform", now.minusHours(2), "RUNNING")), None),
+      ("RUNNING just inside the stale window → skip",
+        ledger((1L, "transform", stale.plusHours(3), "RUNNING")), None),
+      ("stale RUNNING (hard-killed driver) → run",
+        ledger((1L, "transform", stale, "RUNNING")), Some(2L)),
+      ("another process's rows do not gate, but count toward the id",
+        ledger((1L, "transform", now.minusDays(1), "SUCCESS"),
+          (7L, "crawl", now.minusHours(6), "SUCCESS"),
+          (8L, "crawl", now.minusHours(1), "RUNNING")), Some(9L)))
+    for ((name, l, expected) <- table)
+      assert(RunLedger.gate(l, "transform", ts(now)) == expected, name)
+
+    // the lifecycle the pipelines run: register, close SUCCESS with the
+    // verbatim SP message, then today skips and tomorrow runs
+    val id1 = RunLedger.gate(RunLedger.empty(spark), "transform", ts(now)).get
+    val l1 = RunLedger.startRun(RunLedger.empty(spark), id1, "transform", ts(now))
+    assert(RunLedger.gate(l1, "transform", ts(now)).isEmpty)
+    assert(RunLedger.gate(l1, "crawl", ts(now)).contains(id1 + 1))
+    val l2 = RunLedger.finishRun(l1, id1, "SUCCESS", ts(now.plusMinutes(5)),
+      RunLedger.statsMessage(graft.operators.ScdStats(239, 239, 0)))
+    assert(RunLedger.gate(l2, "transform", ts(now)).isEmpty)
+    assert(RunLedger.gate(l2, "transform", ts(now.plusDays(1))).contains(id1 + 1))
     val msg = l2.filter(col("id") === id1).select("message").head().getString(0)
     assert(msg == "SCD Type 2 completed successfully. Rows Processed: 239. " +
       "New Rows Inserted: 239. Old Rows Expired (Updated): 0.")
+  }
+
+  test("run ledger: a FAILED close that fails too does not mask the stage's error") {
+    val ledgerPath = java.nio.file.Files.createTempDirectory("graft_ledger").toFile
+      .getAbsolutePath + "/process_log"
+    val stageError = new IllegalStateException("stage failed")
+    val thrown = intercept[IllegalStateException] {
+      RunLedger.guarded(spark, ledgerPath, "transform", "2025-11-23 06:00:00") {
+        // the RUNNING row is on disk: truncate it so the FAILED close
+        // cannot read the ledger back
+        for (f <- new java.io.File(ledgerPath).listFiles() if f.getName.endsWith(".parquet")) {
+          val raf = new java.io.RandomAccessFile(f, "rw")
+          raf.setLength(f.length() / 2)
+          raf.close()
+        }
+        throw stageError
+      }
+    }
+    assert(thrown eq stageError)
+    assert(thrown.getSuppressed.length == 1, "the ledger error rides along as suppressed")
+    assert(thrown.getSuppressed.head.isInstanceOf[org.apache.spark.SparkException],
+      thrown.getSuppressed.head)
   }
 
   test("sql registry: commands stored as rows execute against temp views") {

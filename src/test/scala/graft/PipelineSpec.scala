@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Scd2
+import graft.operators.{Scd2, Upsert}
 import graft.pipeline.ProductPipeline
 
 /** End-to-end six-stage pipeline over the reference fixture corpus:
@@ -39,10 +39,9 @@ class PipelineSpec extends SparkSpec {
     assert(p3.getAs[java.math.BigDecimal]("MAX_PRICE").doubleValue() == 22990000.0)
 
     // aggregate upsert: day-1 snapshot, then an idempotent re-run
-    val agg1 = ProductPipeline.loadAggregate(
-      dimProduct, emptyAggregate(dimProduct), 2154, 2025, 11)
+    val agg1 = loadAggregate(dimProduct, emptyAggregate(dimProduct), 2154)
     assert(agg1.count() == dimProduct.count())
-    val agg2 = ProductPipeline.loadAggregate(dimProduct, agg1, 2154, 2025, 11)
+    val agg2 = loadAggregate(dimProduct, agg1, 2154)
     assert(agg2.count() == agg1.count(), "re-run must not duplicate (PRODUCT_SK, DATE_SK)")
 
     // datamart rollups incl. the 'QQ4' quarter-label quirk
@@ -94,17 +93,25 @@ class PipelineSpec extends SparkSpec {
     assert(stale == 0, "dim prices must reflect the day-2 snapshot")
 
     // aggregate: day-2 snapshot lands under a new DATE_SK; day 1 untouched
-    val agg1 = ProductPipeline.loadAggregate(prod1, emptyAggregate(prod1), 2154, 2025, 11)
-    val agg2 = ProductPipeline.loadAggregate(prod2, agg1, 2155, 2025, 11)
+    val agg1 = loadAggregate(prod1, emptyAggregate(prod1), 2154)
+    val agg2 = loadAggregate(prod2, agg1, 2155)
     assert(agg2.filter(col("DATE_SK") === 2154).count() == prod1.count())
     assert(agg2.filter(col("DATE_SK") === 2155).count() == prod2.count())
     val daily = ProductPipeline.datamartDaily(agg2)
     assert(daily.select("DATE_SK").distinct().count() == 2)
   }
 
+  /** Stage 6 over in-memory frames: the day's snapshot upserted into the
+    * aggregate keyed (PRODUCT_SK, DATE_SK).
+    */
+  private def loadAggregate(
+      dimProduct: org.apache.spark.sql.DataFrame,
+      aggregate: org.apache.spark.sql.DataFrame,
+      dateSk: Int) =
+    Upsert.upsert(
+      aggregate, ProductPipeline.aggregateSnapshot(dimProduct, dateSk, 2025, 11),
+      Seq("PRODUCT_SK", "DATE_SK"))
+
   private def emptyAggregate(dimProduct: org.apache.spark.sql.DataFrame) =
-    dimProduct.limit(0).select(
-      col("BRAND_SK"), col("PRODUCT_SK"), col("ID_CONFIG"),
-      lit(0).as("DATE_SK"), lit(0).as("CALENDAR_YEAR"), lit(0).as("CALENDAR_MONTH"),
-      col("MAX_PRICE"), col("MIN_PRICE"))
+    ProductPipeline.aggregateSnapshot(dimProduct.limit(0), 0, 0, 0)
 }
