@@ -150,7 +150,10 @@ object SparkEntry {
     val h1 = Scd2.apply(
       Scd2.emptyHistory(snap1, "timestamp_ntz"), snap1,
       Seq("id"), Seq("id"), Seq("price", "psize"), ts1, sentinel)
-    Scd2.applyWithStats(h1, snap2, Seq("id"), Seq("id"), Seq("price", "psize"), ts2, sentinel)._2
+    val (h2, stats) =
+      Scd2.applyWithStats(h1, snap2, Seq("id"), Seq("id"), Seq("price", "psize"), ts2, sentinel)
+    h2.unpersist()
+    stats
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Run statistics mirroring the reference SP's OUT params
@@ -28,12 +28,13 @@ final case class ScdStats(rowsInput: Long, rowsInserted: Long, rowsExpired: Long
   *     change (Spark `=!=` matches).
   *   - the "current row" marker is the literal timestamp 9999-12-31 00:00:00.
   *
-  * Scale notes: `changedKeys` is the deliberate common-subexpression the
-  * reference materializes as a work table — we cache it, it is consumed by
-  * both the expire-mark join and the re-insert semi join. The expire-mark
-  * join keys on `expireKey`, so at 100 TB it shuffles history once on the
-  * natural key; daily change sets are typically small relative to history,
-  * so Spark will broadcast them under AQE.
+  * Scale notes: `changedKeys` is the common subexpression the reference
+  * materializes as a work table. Both of its consumers (the expire-mark
+  * join and the re-insert semi join) sit in the one plan the round
+  * writes, so exchange reuse computes it once without a cache. The
+  * expire-mark join keys on `expireKey`, so at 100 TB it shuffles history
+  * once on the natural key; daily change sets are typically small
+  * relative to history, so Spark will broadcast them under AQE.
   */
 object Scd2 {
   val CreatedAt = "created_at"
@@ -95,8 +96,8 @@ object Scd2 {
     // 2. EXPIRED_KEYS: current×staging on matchKey where any compared attr
     //    differs (NULL-rejecting <>). Keys are folded for the join but the
     //    emitted expire-key values are the folded form (both sides agree
-    //    under keyNorm, so either side's fold is canonical).
-    //    Cached: consumed by steps 3 and 4.
+    //    under keyNorm, so either side's fold is canonical). Consumed by
+    //    steps 3 and 4 in one plan: exchange reuse computes it once.
     val t = current.alias("t")
     val s = staging.alias("s")
     val changedKeys = t
@@ -104,7 +105,6 @@ object Scd2 {
       .where(compareCols.map(c => col(s"t.$c") =!= col(s"s.$c")).reduce(_ || _))
       .select(expireKey.map(k => keyNorm(col(s"t.$k")).as(s"__ck_$k")): _*)
       .distinct()
-      .cache()
 
     // 3. expire: mark current rows whose (normalized) expireKey is in changedKeys
     val hit = changedKeys.withColumn("__scd_hit", lit(true))
@@ -187,6 +187,9 @@ object Scd2 {
 
   /** [[applyZoned]] + the reference SP's OUT-param counts (same contract
     * as [[applyWithStats]]) — the form the production pipeline uses.
+    * Rows-in is one count of `staging`; inserted/expired are observed on
+    * the zone write itself, so nothing is cached and no job is added for
+    * them.
     */
   def applyZonedWithStats(
       spark: org.apache.spark.sql.SparkSession,
@@ -219,7 +222,7 @@ object Scd2 {
     checkZoneTz(spark, path, tsType)
     // the two touched partition VALUES as driver-side literals: the
     // sentinel day is a constant; the run day comes from the caller (the
-    // pipeline already has it) or one local 1-row eval of runTs
+    // pipeline already has it) or a local eval of runTs
     val Array(sentinelDay, day) = runDay match {
       case Some(d) =>
         Array(evalDays(spark, date_format(sentinel, "yyyy-MM-dd"))(0), d)
@@ -227,33 +230,50 @@ object Scd2 {
         evalDays(spark, date_format(sentinel, "yyyy-MM-dd"), date_format(runTs, "yyyy-MM-dd"))
     }
     val current =
-      if (!graft.sources.Zones.exists(spark, path)) emptyHistory(staging, tsType)
+      // hasDataFiles, not exists: an empty first round leaves a fileless
+      // zone dir that a parquet read cannot infer a schema from
+      if (!graft.sources.Zones.hasDataFiles(spark, path)) emptyHistory(staging, tsType)
       else spark.read.parquet(path)
         // same-day rerun safety: today's partition rides along so dynamic
         // overwrite re-emits earlier tombstones instead of dropping them
         .filter(col(ExpiredDay).isin(sentinelDay, day))
         .drop(ExpiredDay)
-    val (next, stats) =
-      if (withStats) {
-        val (n, st) = applyWithStats(
-          current, staging, matchKey, expireKey, compareCols, runTs, sentinel, keyNorm)
-        (n, Some(st))
-      } else
-        (apply(current, staging, matchKey, expireKey, compareCols, runTs, sentinel, keyNorm),
-          None)
-    next
+    val next = apply(current, staging, matchKey, expireKey, compareCols, runTs, sentinel, keyNorm)
       .withColumn(ExpiredDay, date_format(col(ExpiredAt), "yyyy-MM-dd"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(ExpiredDay)
-      .parquet(path)
+    // rows in: one plain count. Observing `staging` instead would not do:
+    // it appears three times in the plan, and AQE may prune a branch whose
+    // collector then reports 0. Inserted/expired are observed at the root
+    // of the frame the write already runs, so they cost no job.
+    val rowsInput = if (withStats) Some(staging.count()) else None
+    val counts = new Observation()
+    val (inserted, expired) = statCounts(runTs)
+    val written = if (withStats) next.observe(counts, inserted, expired) else next
+    graft.sources.Zones.replacePartitions(written, path, Seq(ExpiredDay))
     stampZoneTz(spark, path, tsType)
-    stats
+    rowsInput.map(n => stats(n, counts.get))
   }
 
+  /** The reference SP's inserted/expired ROW_COUNT()s over a round's
+    * result: rows carrying this run's created_at, and rows closed with
+    * this run's expired_at. `count_if` reads 0, not NULL, on an empty
+    * round.
+    */
+  private def statCounts(runTs: Column): (Column, Column) = (
+    count_if(col(CreatedAt) === runTs).as("rows_inserted"),
+    count_if(col(ExpiredAt) === runTs).as("rows_expired"))
+
+  private def stats(rowsInput: Long, count: String => Any): ScdStats =
+    ScdStats(rowsInput,
+      count("rows_inserted").asInstanceOf[Long], count("rows_expired").asInstanceOf[Long])
+
+  /** Formats constant day expressions without a Spark job: the optimizer
+    * folds a projection over a one-row local relation.
+    */
   private def evalDays(
       spark: org.apache.spark.sql.SparkSession, exprs: Column*): Array[String] = {
-    val row = spark.range(1).select(exprs: _*).head()
+    val one = spark.createDataFrame(
+      java.util.List.of(Row.empty), org.apache.spark.sql.types.StructType(Nil))
+    val row = one.select(exprs: _*).head()
     Array.tabulate(exprs.length)(row.getString)
   }
 
@@ -298,7 +318,11 @@ object Scd2 {
   }
 
   /** Same as `apply`, also computing the reference's OUT-param counts
-    * (rowsInput / rowsInserted / rowsExpired). Triggers extra jobs.
+    * (rowsInput / rowsInserted / rowsExpired) with the same count
+    * expressions the zoned write observes. Runs two actions: a count of
+    * the cached staging, then one aggregate that fills the cache of the
+    * result. The staging cache is dropped after counting; the returned
+    * frame is cached and owned by the caller, who unpersists it.
     */
   def applyWithStats(
       history: DataFrame,
@@ -311,19 +335,11 @@ object Scd2 {
       keyNorm: Column => Column = identity): (DataFrame, ScdStats) = {
     val cachedStaging = staging.cache()
     val result = apply(history, cachedStaging, matchKey, expireKey, compareCols, runTs, sentinel, keyNorm)
+      .cache()
     val rowsInput = cachedStaging.count()
-    // inserted = rows carrying this run's created_at; expired = rows newly
-    // closed with this run's expired_at — identical to the SPs ROW_COUNT()s,
-    // computed as ONE conditional aggregate over the cached result (the
-    // former two filtered count() actions re-scheduled the full cached
-    // frame per stat — two jobs plus their driver gaps for one pass of
-    // work; guide §1/§5 driver-action discipline).
-    val cachedResult = result.cache()
-    val statsRow = cachedResult.agg(
-      sum(when(col(CreatedAt) === runTs, 1L).otherwise(0L)),
-      sum(when(col(ExpiredAt) === runTs, 1L).otherwise(0L))).head()
-    val rowsInserted = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
-    val rowsExpired = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-    (cachedResult, ScdStats(rowsInput, rowsInserted, rowsExpired))
+    val (inserted, expired) = statCounts(runTs)
+    val counts = result.agg(inserted, expired).head()
+    cachedStaging.unpersist()
+    (result, stats(rowsInput, counts.getAs[Long](_)))
   }
 }

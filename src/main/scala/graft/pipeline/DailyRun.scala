@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
@@ -15,7 +15,7 @@ import graft.sources.{CsvIngest, Zones}
   *   → ingest landing CSV (or parquet) → staging raw
   *   → clean → SCD2 history zone
   *   → dim_brand / dim_product → aggregate snapshot (partitioned upsert)
-  *   → datamart rollups (full refresh)
+  *   → datamart rollups (tonight's day and the current quarter only)
   *   → run ledger SUCCESS row with the SCD2 stats message
   *
   * Usage: runMain graft.pipeline.DailyRun <landingDir> <warehouseDir> <runTs>
@@ -63,8 +63,11 @@ object DailyRun {
     // files are quarantined, counted, and SURFACED in the run ledger —
     // at warehouse scale one truncated upload must neither kill the
     // nightly nor silently shrink the row counts (Zones.readRobust).
+    // Zones the code owns are read back with their known schema, so no
+    // read runs a schema-inference job.
     val (raw, quarantined) = readLanding(spark, landingDir, runTs)
-    Zones.overwriteAll(raw, s"$whDir/staging/products_general")
+    val stagingPath = s"$whDir/staging/products_general"
+    Zones.overwriteAll(raw, stagingPath)
 
     // [4] clean + SCD2 into the expiry-day-partitioned history zone: each
     // run rewrites ONLY the sentinel (live) partition and today's expired
@@ -73,8 +76,7 @@ object DailyRun {
     // would rewrite a thousand closed days nightly to expire a few
     // thousand rows.
     val dimDate = ensureDimDate(spark, whDir)
-    val cleaned = ProductPipeline.clean(
-      Zones.read(spark, s"$whDir/staging/products_general"), dimDate)
+    val cleaned = ProductPipeline.clean(Zones.read(spark, stagingPath, raw.schema), dimDate)
     val historyPath = s"$whDir/staging/products_expired"
     val stats = ProductPipeline.scdUpdateZoned(
       spark, historyPath, cleaned, lit(runTs).cast("timestamp_ntz"), runDate)
@@ -88,12 +90,14 @@ object DailyRun {
       .drop(Scd2.ExpiredDay)
     val brandPath = s"$whDir/warehouse/dim_brand"
     val productPath = s"$whDir/warehouse/dim_product"
+    val emptyBrand = ProductPipeline.emptyDimBrand(spark)
+    val emptyProduct = ProductPipeline.emptyDimProduct(spark)
     val brand0 =
-      if (Zones.exists(spark, brandPath)) Zones.read(spark, brandPath)
-      else ProductPipeline.emptyDimBrand(spark)
+      if (Zones.exists(spark, brandPath)) Zones.read(spark, brandPath, emptyBrand.schema)
+      else emptyBrand
     val product0 =
-      if (Zones.exists(spark, productPath)) Zones.read(spark, productPath)
-      else ProductPipeline.emptyDimProduct(spark)
+      if (Zones.exists(spark, productPath)) Zones.read(spark, productPath, emptyProduct.schema)
+      else emptyProduct
     val (brand1, product1) = ProductPipeline.loadDims(history, brand0, product0, sentinel)
     // stage BOTH before swapping either: product1's plan reads the current
     // dim_brand files, which the swap replaces
@@ -102,23 +106,39 @@ object DailyRun {
     // [6] aggregate snapshot — per-day partitioned upsert into the
     // BUCKETED zone table: day partitions keep pruning, PRODUCT_SK
     // buckets let the daily merge and every downstream star join run
-    // without shuffling the (at scale, 100 TB) aggregate side
-    val today = dimDate.filter(col("FULL_DATE") === lit(runDate).cast("date"))
-      .select("DATE_SK", "CALENDAR_YEAR", "INT_MONTH").head()
+    // without shuffling the (at scale, 100 TB) aggregate side. One
+    // dim_date query collects tonight's quarter (at most 92 rows):
+    // today's keys and the quarter's DATE_SK bounds both come from it
+    // (DATE_SK numbers days consecutively).
+    val quarter = dimDate
+      .filter(col("QUARTER_OF_YEAR") === trunc(lit(runDate).cast("date"), "quarter"))
+      .select(col("DATE_SK"), col("CALENDAR_YEAR"), col("INT_MONTH"),
+        col("FULL_DATE") === lit(runDate).cast("date"))
+      .collect()
+    val today = quarter.find(_.getBoolean(3)).getOrElse(
+      throw new IllegalStateException(s"run date $runDate is outside dim_date"))
     val snapshot = ProductPipeline.aggregateSnapshot(
-      Zones.read(spark, productPath), today.getInt(0), today.getInt(1), today.getInt(2))
+      Zones.read(spark, productPath, emptyProduct.schema),
+      today.getInt(0), today.getInt(1), today.getInt(2))
+    val aggregatePath = s"$whDir/warehouse/aggregate"
     Zones.upsertBucketed(
-      spark, AggregateTable, s"$whDir/warehouse/aggregate", snapshot,
+      spark, AggregateTable, aggregatePath, snapshot,
       Seq("PRODUCT_SK", "DATE_SK"), "DATE_SK", Seq("PRODUCT_SK"), AggregateBuckets)
 
-    // [7] datamart rollups (full refresh — load_datamart.py:112,138);
-    // reading through the table keeps the bucketed distribution visible
-    val aggregate = spark.table(AggregateTable)
-    Zones.overwriteAll(
-      ProductPipeline.datamartDaily(aggregate), s"$whDir/datamart/dm_product_daily_price")
-    Zones.overwriteAll(
-      ProductPipeline.datamartQuarterly(aggregate, dimDate),
-      s"$whDir/datamart/dm_product_quarterly_trend")
+    // [7] datamart rollups (load_datamart.py:112,138 rebuilds both in
+    // full): replace only tonight's daily partition and the current
+    // quarter's partition, each from the aggregate days it depends on.
+    // The aggregate is read by path, not through the bucketed table, so
+    // the few small day files pack into a few scan tasks, not one per
+    // bucket.
+    val aggregate = Zones.read(spark, aggregatePath, snapshot.schema)
+    val quarterSks = quarter.map(_.getInt(0))
+    refreshDatamart(spark, s"$whDir/datamart/dm_product_daily_price", Seq("DATE_SK"),
+      aggregate, col("DATE_SK") === today.getInt(0))(ProductPipeline.datamartDaily)
+    refreshDatamart(spark, s"$whDir/datamart/dm_product_quarterly_trend",
+      Seq("CALENDAR_YEAR", "QUARTER_NAME"), aggregate,
+      col("DATE_SK").between(quarterSks.min, quarterSks.max))(
+      ProductPipeline.datamartQuarterly(_, dimDate))
 
     RunLedger.statsMessage(stats) + (
       if (quarantined.isEmpty) ""
@@ -151,13 +171,26 @@ object DailyRun {
     }
   }
 
+  /** Replace the datamart partitions that `rollup` derives from the
+    * aggregate rows in `scope`. A datamart zone written before the
+    * datamarts were partitioned (one flat full refresh) is rebuilt once
+    * from the whole aggregate by the same rollup.
+    */
+  private def refreshDatamart(
+      spark: SparkSession,
+      path: String,
+      partitionBy: Seq[String],
+      aggregate: DataFrame,
+      scope: Column)(rollup: DataFrame => DataFrame): Unit =
+    if (Zones.exists(spark, path) && !Zones.isPartitionedBy(spark, path, partitionBy.head))
+      Zones.overwriteAll(rollup(aggregate), path, partitionBy)
+    else Zones.replacePartitions(rollup(aggregate.filter(scope)), path, partitionBy)
+
   private def ensureDimDate(spark: SparkSession, whDir: String): DataFrame = {
     val path = s"$whDir/warehouse/dim_date"
-    if (!Zones.exists(spark, path)) {
-      val dd = graft.operators.DimDate.generate(spark)
-      val upper = dd.columns.foldLeft(dd)((d, c) => d.withColumnRenamed(c, c.toUpperCase))
-      Zones.overwriteAll(upper, path)
-    }
-    Zones.read(spark, path)
+    val dd = graft.operators.DimDate.generate(spark)
+    val upper = dd.toDF(dd.columns.map(_.toUpperCase).toSeq: _*)
+    if (!Zones.exists(spark, path)) Zones.overwriteAll(upper, path)
+    Zones.read(spark, path, upper.schema)
   }
 }

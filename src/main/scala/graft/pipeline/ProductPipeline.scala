@@ -84,7 +84,10 @@ object ProductPipeline {
         sentinelNum(col("BO_NHO"), mysqlIntCast(stripGb(col("BO_NHO")))).cast("int").as("BO_NHO"),
         coalesce(col("DATE_SK"), lit(0)).cast("int").as("SK_DATE"),
         col("NGAY"),
-        col("ID_CONFIG"))
+        // the reference column is INT; a landing file written as int64
+        // must not carry BIGINT into the dims, which are read back with
+        // their INT schema
+        col("ID_CONFIG").cast("int").as("ID_CONFIG"))
   }
 
   val scdCompareCols: Seq[String] =
@@ -216,7 +219,9 @@ object ProductPipeline {
       col("MAX_PRICE"), col("MIN_PRICE"))
 
   /** Stage 7a — DM_PRODUCT_DAILY_PRICE (load_datamart.py:112-133):
-    * midrange-"AVG" rollup, full refresh.
+    * midrange-"AVG" rollup. Each `DATE_SK`'s rows depend only on that
+    * day's aggregate rows, so `DailyRun` passes tonight's aggregate
+    * partition and replaces tonight's datamart partition.
     */
   def datamartDaily(aggregate: DataFrame): DataFrame =
     aggregate
@@ -227,7 +232,10 @@ object ProductPipeline {
   /** Stage 7b — DM_PRODUCT_QUARTERLY_TREND (load_datamart.py:138-161).
     * QUARTER_NAME preserves the reference's CONCAT('Q', d.QUARTER) even
     * though live DIM_DATE.QUARTER values are already 'Q1'… → 'QQ1' (the
-    * documented quirk; FIXTURES.md A6).
+    * documented quirk; FIXTURES.md A6). Each (CALENDAR_YEAR,
+    * QUARTER_NAME)'s rows depend only on that quarter's days, so
+    * `DailyRun` passes the current quarter's aggregate days and replaces
+    * that one partition.
     */
   def datamartQuarterly(aggregate: DataFrame, dimDate: DataFrame): DataFrame =
     aggregate

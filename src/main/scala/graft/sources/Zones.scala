@@ -46,7 +46,7 @@ object Zones {
     * throws schema-inference errors, and an upsert that trusts bare
     * [[exists]] would poison the zone permanently on its first empty day.
     */
-  private def hasDataFiles(spark: SparkSession, path: String): Boolean = {
+  def hasDataFiles(spark: SparkSession, path: String): Boolean = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     fs.exists(root) && {
@@ -135,14 +135,28 @@ object Zones {
           .join(touched, col(partitionCol) <=> col("__tp"), "left_semi")
         graft.operators.Upsert.upsert(touchedCurrent, increment, keys)
       }
-    // per-write option (NOT the session conf): scoping dynamic overwrite
-    // to this writer leaves later partitioned overwrites in the session
-    // with the default truncate semantics
-    merged.write
+    replacePartitions(merged, path, Seq(partitionCol))
+  }
+
+  /** Replace the partitions `df` holds and leave every other partition of
+    * the zone untouched (dynamic partition overwrite). A per-write option,
+    * NOT the session conf: scoping dynamic overwrite to this writer leaves
+    * later partitioned overwrites in the session with the default
+    * truncate semantics.
+    */
+  def replacePartitions(df: DataFrame, path: String, partitionBy: Seq[String]): Unit =
+    df.write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
+      .partitionBy(partitionBy: _*)
       .parquet(path)
+
+  /** Whether the zone at `path` is laid out in `column=value` directories. */
+  def isPartitionedBy(spark: SparkSession, path: String, column: String): Boolean = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(root) &&
+      fs.listStatus(root).exists(st => st.isDirectory && st.getPath.getName.startsWith(s"$column="))
   }
 
   /** Durable overwrite for read-modify-write cycles (new zone content is
@@ -448,6 +462,16 @@ object Zones {
   def read(spark: SparkSession, path: String): DataFrame = {
     recoverSwap(spark, path)
     spark.read.parquet(path)
+  }
+
+  /** [[read]] with the schema the code already owns (the frame it just
+    * wrote, or the zone's fixed shape): no schema-inference job.
+    */
+  def read(
+      spark: SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    recoverSwap(spark, path)
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Directory corrupt files are moved to by [[readRobust]] — sibling of

@@ -31,7 +31,7 @@ class ConfScopeSpec extends SparkSpec {
     val key = "spark.sql.requireAllClusterKeysForCoPartition"
     spark.conf.unset(key)
     val default = spark.conf.get(key)
-    val wh = java.nio.file.Files.createTempDirectory("confscope_unset").toFile.getAbsolutePath
+    val wh = tempDir("confscope_unset")
     val tbl = "graft_confscope_unset_zone"
     try Zones.upsertBucketed(spark, tbl, s"$wh/agg",
       (1 to 20).map(i => (i.toLong, 10, i * 1.0)).toDF("product_sk", "date_sk", "price"),
@@ -56,7 +56,7 @@ class ConfScopeSpec extends SparkSpec {
     val clustersAlone = clusters()
     val ranksAlone = ranks()
 
-    val wh = java.nio.file.Files.createTempDirectory("confscope_zone").toFile.getAbsolutePath
+    val wh = tempDir("confscope_zone")
     val tbl = "graft_confscope_zone"
     // z1-style: two daily upserts into a bucketed zone; broadcasts off so
     // the merge is the shuffled join the audit inspects

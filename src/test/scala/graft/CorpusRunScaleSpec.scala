@@ -68,7 +68,7 @@ class CorpusRunScaleSpec extends SparkSpec {
   }
 
   test(s"$nDays daily corpus folds: flat per-day time, immutable closed days, exact closure") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus_scale").toFile.getAbsolutePath
+    val tmp = tempDir("graft_corpus_scale")
     val wh = s"$tmp/wh"
     val day1 = java.time.LocalDate.parse("2026-04-01")
     val docsRoot = s"$wh/corpus/docs"
@@ -173,7 +173,7 @@ class CorpusRunScaleSpec extends SparkSpec {
 
   test("retention compaction: closed months fold, probe reads stay equivalent, docs content-identical") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus_compact").toFile.getAbsolutePath
+    val tmp = tempDir("graft_corpus_compact")
     val wh = s"$tmp/wh"
     def doc(i: Long) =
       (i, s"w${i}a w${i}b w${i}c w${i}d w${i}e w${i}f w${i}g w${i}h", s"s${i % 3}")
@@ -273,7 +273,7 @@ class CorpusRunScaleSpec extends SparkSpec {
   test("compaction crash recovery: a completed stage replays, a partial stage discards") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact_crash").toFile.getAbsolutePath
+    val tmp = tempDir("graft_compact_crash")
     val wh = s"$tmp/wh"
     def doc(i: Long) =
       (i, s"w${i}a w${i}b w${i}c w${i}d w${i}e w${i}f w${i}g w${i}h", s"s${i % 3}")
@@ -354,7 +354,7 @@ class CorpusRunScaleSpec extends SparkSpec {
   test("compaction crash BETWEEN month overwrite and day deletes: recovery finishes the deletes, no doubling") {
     import spark.implicits._
     import org.apache.hadoop.fs.{FileUtil, Path}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact_crash2").toFile.getAbsolutePath
+    val tmp = tempDir("graft_compact_crash2")
     val wh = s"$tmp/wh"
     def doc(i: Long) =
       (i, s"x${i}a x${i}b x${i}c x${i}d x${i}e x${i}f x${i}g x${i}h", s"s${i % 3}")
@@ -420,7 +420,7 @@ class CorpusRunScaleSpec extends SparkSpec {
   test("fold recovery deletes ONLY the crashed pass's manifest days — a day folded-eligible after the stage survives") {
     import spark.implicits._
     import org.apache.hadoop.fs.{FileUtil, Path}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fold_manifest").toFile.getAbsolutePath
+    val tmp = tempDir("graft_fold_manifest")
     val wh = s"$tmp/wh"
     val dir = s"$tmp/in"
     Seq((1L, "z1a z1b z1c z1d z1e z1f z1g z1h", "s0"))
@@ -466,7 +466,7 @@ class CorpusRunScaleSpec extends SparkSpec {
 
   test("a day whose month has been folded refuses to (re)run") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_folded_retry").toFile.getAbsolutePath
+    val tmp = tempDir("graft_folded_retry")
     val wh = s"$tmp/wh"
     val dir = s"$tmp/in"
     Seq((1L, "y1a y1b y1c y1d y1e y1f y1g y1h", "s0"))

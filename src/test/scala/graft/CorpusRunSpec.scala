@@ -39,7 +39,7 @@ class CorpusRunSpec extends SparkSpec {
   }
 
   test("three-day corpus run: dedup across days, append-only history, consistent stats") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus").toFile.getAbsolutePath
+    val tmp = tempDir("graft_corpus")
     val wh = s"$tmp/wh"
     def drop(day: String, df: DataFrame): String = {
       val dir = s"$tmp/in_$day"
@@ -180,7 +180,7 @@ class CorpusRunSpec extends SparkSpec {
   }
 
   test("quality suite: planted low-quality docs dropped by named rule, counts in the ledger") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus_q").toFile.getAbsolutePath
+    val tmp = tempDir("graft_corpus_q")
     val wh = s"$tmp/wh"
     val clean = (1L to 3L).map(i =>
       (i, s"regular healthy document number $i with plain sensible words", "web"))
@@ -219,7 +219,7 @@ class CorpusRunSpec extends SparkSpec {
   test("semantic stage: 3 days maintained ≡ from-scratch SemDeDup on the union, retry idempotent") {
     import spark.implicits._
     import graft.pipeline.CorpusRun.SemanticStage
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus_sem").toFile.getAbsolutePath
+    val tmp = tempDir("graft_corpus_sem")
     val wh = s"$tmp/wh"
     def drop(day: String, d: Seq[(Long, String, String)], e: Seq[(Long, Seq[Double])])
         : (String, SemanticStage) = {
@@ -316,7 +316,7 @@ class CorpusRunSpec extends SparkSpec {
   test("semantic zone holds only PUBLISHED docs: a fully-excised sem-kept doc never drops future docs") {
     import spark.implicits._
     import graft.pipeline.CorpusRun.SemanticStage
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus_semx").toFile.getAbsolutePath
+    val tmp = tempDir("graft_corpus_semx")
     val wh = s"$tmp/wh"
     def drop(day: String, d: Seq[(Long, String, String)], e: Seq[(Long, Seq[Double])])
         : (String, SemanticStage) = {
@@ -376,7 +376,7 @@ class CorpusRunSpec extends SparkSpec {
     import spark.implicits._
     import graft.pipeline.{CorpusRun, IndexRun}
     import graft.pipeline.CorpusRun.SemanticStage
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus_semk").toFile.getAbsolutePath
+    val tmp = tempDir("graft_corpus_semk")
     val wh = s"$tmp/wh"
     // trip bar Σn/k > 2×1.0: day 1's three vectors at k=1 overflow it
     def drop(day: String, d: Seq[(Long, String, String)], e: Seq[(Long, Seq[Double])])
@@ -460,7 +460,7 @@ class CorpusRunSpec extends SparkSpec {
     import spark.implicits._
     import graft.pipeline.IndexRun
     import graft.pipeline.CorpusRun.SemanticStage
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus_backfill").toFile.getAbsolutePath
+    val tmp = tempDir("graft_corpus_backfill")
     val wh = s"$tmp/wh"
     def drop(day: String, d: Seq[(Long, String, String)], e: Seq[(Long, Seq[Double])])
         : (String, SemanticStage) = {
@@ -527,7 +527,7 @@ class CorpusRunSpec extends SparkSpec {
 
   test("hostile feeds: all-dropped day 1 succeeds; duplicate ids fail loudly; FAILED-day partitions never probe; empty retry evicts leftovers") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus_hostile").toFile.getAbsolutePath
+    val tmp = tempDir("graft_corpus_hostile")
     val wh = s"$tmp/wh"
     def drop(name: String, d: Seq[(Long, String, String)]): String = {
       val dir = s"$tmp/in_$name"
@@ -601,7 +601,7 @@ class CorpusRunSpec extends SparkSpec {
 
   test("cross-day paragraph excision: boilerplate cut in place, ≡ batch d10 on the union") {
     import graft.operators.TextAnalysis
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corpus_para").toFile.getAbsolutePath
+    val tmp = tempDir("graft_corpus_para")
     val wh = s"$tmp/wh"
     def drop(day: String, df: DataFrame): String = {
       val dir = s"$tmp/in_$day"
@@ -736,7 +736,7 @@ class CorpusRunSpec extends SparkSpec {
 
   test("warehouse geometry guard: a binary with moved MinHash constants refuses the standing corpus; legacy warehouses adopt") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_whgeom").toFile.getAbsolutePath
+    val tmp = tempDir("graft_whgeom")
     val wh = s"$tmp/wh"
     def drop(day: String, df: DataFrame): String = {
       val dir = s"$tmp/in_$day"

@@ -54,8 +54,8 @@ class DailyRunScaleSpec extends SparkSpec {
   }
 
   test(s"$nDays daily runs: flat per-day wall time, closed history partitions immutable") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_scale").toFile.getAbsolutePath
-    val landing = java.nio.file.Files.createTempDirectory("graft_landing_scale").toFile.getAbsolutePath
+    val wh = tempDir("graft_wh_scale")
+    val landing = tempDir("graft_landing_scale")
     val day1 = java.time.LocalDate.parse("2025-11-23")
     val historyRoot = s"$wh/staging/products_expired"
     val sentinelDir = s"$historyRoot/${graft.operators.Scd2.ExpiredDay}=9999-12-31"

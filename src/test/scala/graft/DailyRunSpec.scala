@@ -11,13 +11,27 @@ import graft.sources.Zones
   */
 class DailyRunSpec extends SparkSpec {
 
-  test("daily pipeline: day 1, idempotent same-day rerun, day 2 changes") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toFile.getAbsolutePath
-    val landing = java.nio.file.Files.createTempDirectory("graft_landing").toFile.getAbsolutePath
+  /** [[DailyRun.run]], asserting that the night leaves no cached plan in
+    * the session (a cache left per night is heap that grows with the
+    * nights). Caches other suites left in this JVM are cleared first, so
+    * the assert sees this night alone.
+    */
+  private def runNight(landing: String, wh: String, runTs: String): String = {
+    spark.catalog.clearCache()
+    val outcome = DailyRun.run(spark, landing, wh, runTs)
+    assert(spark.sharedState.cacheManager.isEmpty, s"the night of $runTs left cached plans")
+    outcome
+  }
 
-    // day 1 landing = fixture raw rows as parquet (no CSV → parquet path)
-    fixture("products_general").write.mode("overwrite").parquet(s"$landing/day1")
-    assert(DailyRun.run(spark, s"$landing/day1", wh, "2025-11-23 18:51:37") == "SUCCESS")
+  test("daily pipeline: day 1, idempotent same-day rerun, day 2 changes") {
+    val wh = tempDir("graft_wh")
+    val landing = tempDir("graft_landing")
+
+    // day 1 landing = fixture raw rows as parquet (no CSV → parquet path),
+    // ID_CONFIG stored as int64 the way many writers store integers
+    fixture("products_general").withColumn("ID_CONFIG", col("ID_CONFIG").cast("long"))
+      .write.mode("overwrite").parquet(s"$landing/day1")
+    assert(runNight(s"$landing/day1", wh, "2025-11-23 18:51:37") == "SUCCESS")
 
     val history1 = Zones.read(spark, s"$wh/staging/products_expired")
     assert(history1.count() == 239)
@@ -25,7 +39,7 @@ class DailyRunSpec extends SparkSpec {
     assert(Zones.read(spark, s"$wh/datamart/dm_product_daily_price").count() > 0)
 
     // same-day rerun: gate must skip without touching zones
-    assert(DailyRun.run(spark, s"$landing/day1", wh, "2025-11-23 20:00:00") == "SKIPPED")
+    assert(runNight(s"$landing/day1", wh, "2025-11-23 20:00:00") == "SKIPPED")
     assert(Zones.read(spark, s"$wh/staging/products_expired").count() == 239)
 
     // day 2: 30 price drops → expired rows + re-inserts + a second
@@ -35,7 +49,7 @@ class DailyRunSpec extends SparkSpec {
         when(col("ID") <= 30, concat((col("ID") * 1000).cast("string"), lit("đ")))
           .otherwise(col("GIA_MOI")))
       .write.mode("overwrite").parquet(s"$landing/day2")
-    assert(DailyRun.run(spark, s"$landing/day2", wh, "2025-11-24 18:51:37") == "SUCCESS")
+    assert(runNight(s"$landing/day2", wh, "2025-11-24 18:51:37") == "SUCCESS")
 
     val history2 = Zones.read(spark, s"$wh/staging/products_expired")
     assert(history2.count() > 239, "day-2 re-inserts must append history")
@@ -61,8 +75,8 @@ class DailyRunSpec extends SparkSpec {
   }
 
   test("a failing stage closes the RUNNING row as FAILED and does not deadlock the gate") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toFile.getAbsolutePath
-    val landing = java.nio.file.Files.createTempDirectory("graft_landing").toFile.getAbsolutePath
+    val wh = tempDir("graft_wh")
+    val landing = tempDir("graft_landing")
 
     // empty landing dir → the parquet read in stage 3 fails
     intercept[Exception] {
@@ -74,13 +88,13 @@ class DailyRunSpec extends SparkSpec {
 
     // the crash must not block the retry
     fixture("products_general").write.mode("overwrite").parquet(s"$landing/day1")
-    assert(DailyRun.run(spark, s"$landing/day1", wh, "2025-11-23 19:00:00") == "SUCCESS")
+    assert(runNight(s"$landing/day1", wh, "2025-11-23 19:00:00") == "SUCCESS")
     assert(Zones.read(spark, s"$wh/staging/products_expired").count() == 239)
   }
 
   test("corrupt landing file: run succeeds, file quarantined, loss surfaced in the ledger") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toFile.getAbsolutePath
-    val landing = java.nio.file.Files.createTempDirectory("graft_landing").toFile.getAbsolutePath
+    val wh = tempDir("graft_wh")
+    val landing = tempDir("graft_landing")
     fixture("products_general").repartition(4).write.mode("overwrite").parquet(s"$landing/day1")
     val files = new java.io.File(s"$landing/day1").listFiles()
       .filter(_.getName.endsWith(".parquet"))
@@ -90,7 +104,7 @@ class DailyRunSpec extends SparkSpec {
     raf.setLength(victim.length() / 2)
     raf.close()
 
-    assert(DailyRun.run(spark, s"$landing/day1", wh, "2025-11-23 18:51:37") == "SUCCESS")
+    assert(runNight(s"$landing/day1", wh, "2025-11-23 18:51:37") == "SUCCESS")
     // the nightly survived, processed the intact files only, and the
     // ledger message NAMES the loss next to the (reduced) row counts
     val n = Zones.read(spark, s"$wh/staging/products_general").count()
@@ -101,6 +115,59 @@ class DailyRunSpec extends SparkSpec {
     assert(msg.contains("QUARANTINED 1 corrupt landing file"), msg)
     assert(new java.io.File(
       Zones.quarantineDir(s"$landing/day1"), victim.getName).isFile)
+  }
+
+  test("incremental datamart ≡ full-refresh rollups over the whole aggregate, " +
+      "across a quarter boundary and an unpartitioned-zone upgrade") {
+    import graft.pipeline.ProductPipeline
+    val wh = tempDir("graft_wh_dm")
+    val landing = tempDir("graft_landing_dm")
+    val dailyPath = s"$wh/datamart/dm_product_daily_price"
+    val quarterlyPath = s"$wh/datamart/dm_product_quarterly_trend"
+    def fullRefresh() = {
+      val aggregate = Zones.read(spark, s"$wh/warehouse/aggregate")
+      (ProductPipeline.datamartDaily(aggregate),
+        ProductPipeline.datamartQuarterly(aggregate, Zones.read(spark, s"$wh/warehouse/dim_date")))
+    }
+    def census(dir: String): Map[String, (Long, Long)] =
+      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> (f.length, f.lastModified)).toMap
+    // 2025-10-01 opens Q4; the night before it finds a datamart zone from
+    // before the datamarts were partitioned
+    val nights = Seq("2025-09-29", "2025-09-30", "2025-10-01", "2025-10-02")
+    var closed = Map.empty[String, Map[String, (Long, Long)]]
+    nights.zipWithIndex.foreach { case (day, i) =>
+      fixture("products_general")
+        .withColumn("GIA_MOI",
+          when(col("ID") % 7 === i, concat((col("ID") * 1000 + i).cast("string"), lit("đ")))
+            .otherwise(col("GIA_MOI")))
+        .write.mode("overwrite").parquet(s"$landing/night$i")
+      if (day == "2025-09-30") {
+        val (daily, quarterly) = fullRefresh()
+        Zones.overwriteAll(daily, dailyPath)
+        Zones.overwriteAll(quarterly, quarterlyPath)
+      }
+      if (day == "2025-10-02") {
+        val sk = Zones.read(spark, s"$wh/warehouse/aggregate").agg(max("DATE_SK")).head().getInt(0)
+        closed = Map(
+          "daily" -> census(s"$dailyPath/DATE_SK=$sk"),
+          "quarterly" -> census(s"$quarterlyPath/CALENDAR_YEAR=2025/QUARTER_NAME=QQ3"))
+      }
+      assert(runNight(s"$landing/night$i", wh, s"$day 18:51:37") == "SUCCESS")
+      val (daily, quarterly) = fullRefresh()
+      assertSameRows(Zones.read(spark, dailyPath), daily, s"daily datamart after $day")
+      assertSameRows(Zones.read(spark, quarterlyPath), quarterly, s"quarterly datamart after $day")
+    }
+    assert(Zones.isPartitionedBy(spark, dailyPath, "DATE_SK"))
+    assert(Zones.isPartitionedBy(spark, quarterlyPath, "CALENDAR_YEAR"))
+    assert(Zones.read(spark, quarterlyPath).select("QUARTER_NAME").distinct()
+      .collect().map(_.getString(0)).toSet == Set("QQ3", "QQ4"))
+    // the last night rewrote neither the day before it nor the closed quarter
+    closed.foreach { case (zone, files) => assert(files.nonEmpty, zone) }
+    val sk = Zones.read(spark, s"$wh/warehouse/aggregate").agg(max("DATE_SK")).head().getInt(0)
+    assert(census(s"$dailyPath/DATE_SK=${sk - 1}") == closed("daily"))
+    assert(census(s"$quarterlyPath/CALENDAR_YEAR=2025/QUARTER_NAME=QQ3") == closed("quarterly"))
   }
 
   test("a stale RUNNING row (hard-killed driver) stops blocking after StaleRunningHours") {

@@ -88,8 +88,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("incremental dedup against the persisted signature index equals the full recompute") {
-    val zone = java.nio.file.Files.createTempDirectory("d9_sig")
-      .toFile.getAbsolutePath + "/idx"
+    val zone = tempDir("d9_sig") + "/idx"
     val day1 = corpus.filter(col("doc_id") % 3 =!= 0)
     val day2 = corpus.filter(col("doc_id") % 3 === 0)
     Dedup.writeSignatureIndex(spark, zone, day1, "doc_id", "text", 3, 32, mode = "overwrite")
@@ -113,8 +112,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("incremental embedding near-dup vs stored keys equals the self-join LSH over the union") {
     import spark.implicits._
-    val zone = java.nio.file.Files.createTempDirectory("e3_sig")
-      .toFile.getAbsolutePath + "/idx"
+    val zone = tempDir("e3_sig") + "/idx"
     val rnd = new scala.util.Random(7)
     val dim = 16
     def vec() = Array.fill(dim)(rnd.nextGaussian())
@@ -160,8 +158,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("persisted IVF index returns bit-identical results to build-per-query IVF") {
-    val zone = java.nio.file.Files.createTempDirectory("k4_ivf")
-      .toFile.getAbsolutePath + "/idx"
+    val zone = tempDir("k4_ivf") + "/idx"
     val emb = Tables.load(spark, sf, "embeddings")
     val queries = emb.filter(col("vec_id") < 20).select(
       (col("vec_id") + 1000000L).as("vec_id"),
@@ -227,7 +224,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // the shared increment probe, defense engaged on both of its joins:
     // one planted text copied 8× into the zone and 8× into the increment
     // puts 8 rows behind every band key of each side (> maxBucket = 4)
-    val root = java.nio.file.Files.createTempDirectory("graft_hot_inc").toFile.getAbsolutePath
+    val root = tempDir("graft_hot_inc")
     val planted = docs.filter(col("doc_id") === docs.agg(min("doc_id")).head().get(0))
       .select("text")
     def copies(from: Long) =
@@ -268,7 +265,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("incremental IVF append: assignment-only fold, query ≡ rebuild-from-union, drift policy") {
-    val root = java.nio.file.Files.createTempDirectory("k5_ivf").toFile.getAbsolutePath
+    val root = tempDir("k5_ivf")
     val zone = s"$root/idx"
     val emb = Tables.load(spark, sf, "embeddings")
     val day1 = emb.filter(col("vec_id") % 2 === 0)
@@ -555,7 +552,7 @@ class DedupSimilaritySpec extends SparkSpec {
       .join(v.select(col("vec_id").as("id"), col("e").as("v")), "id")
     // the zone the daily pipeline would store: parquet roundtrip must be
     // byte-equivalent input (doubles survive parquet exactly)
-    val zone = java.nio.file.Files.createTempDirectory("e5_zone").toFile.getAbsolutePath
+    val zone = tempDir("e5_zone")
     index.write.parquet(s"$zone/assign")
     val got = Dedup.semanticDedupIncremental(
       spark.read.parquet(s"$zone/assign"), probes, "vec_id", "e", 0.95)
@@ -597,7 +594,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // semantic dedup of an empty corpus: empty assignment, no Lloyd crash
     assert(Dedup.semanticDedup(none, "id", "v", 4, 2, 0.9).count() == 0)
     // empty increment against a populated index
-    val zone = java.nio.file.Files.createTempDirectory("graft_empty_emb").toFile.getAbsolutePath
+    val zone = tempDir("graft_empty_emb")
     Dedup.writeEmbeddingSignatureIndex(spark, s"$zone/idx", vecs, "id", "v", mode = "overwrite")
     assert(Dedup.embeddingNearDupIncremental(
       Dedup.readEmbeddingSignatureIndex(spark, s"$zone/idx"), none, "id", "v", 0.9).count() == 0)
@@ -616,7 +613,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("signature zone geometry guard: mixed-hash-function appends refuse, legacy zones adopt") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zonegeom").toFile.getAbsolutePath
+    val tmp = tempDir("graft_zonegeom")
 
     // ── MinHash zone ─────────────────────────────────────────────────────
     val docs1 = Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text")
@@ -676,7 +673,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("AutoGeometry defaults: fresh writes size via the policy, appends and probes ride the stored shape") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_autogeom").toFile.getAbsolutePath
+    val tmp = tempDir("graft_autogeom")
     val zone = s"$tmp/zone"
     // 5000 > 4096 rows: one past the policy floor — sigGeometry picks 9×9
     // (the writer-default blowup the round-12 census measured happened

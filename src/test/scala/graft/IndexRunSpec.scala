@@ -48,7 +48,7 @@ class IndexRunSpec extends SparkSpec {
       .head().getAs[String]("message")
 
   test("index pipeline: build, drift-logged append, retrain trip, post-retrain calm") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_indexrun").toFile.getAbsolutePath
+    val tmp = tempDir("graft_indexrun")
     val wh = s"$tmp/wh"
     val base = s"$wh/index/ivf"
     def index: String = IndexRun.currentIndexPath(spark, base)
@@ -135,7 +135,7 @@ class IndexRunSpec extends SparkSpec {
 
   test("signature index: build, concentration-logged append, re-seed retrain trip, post-retrain calm") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sigrun").toFile.getAbsolutePath
+    val tmp = tempDir("graft_sigrun")
     val wh = s"$tmp/wh"
     val base = s"$wh/index/sig"
     def sig: String = IndexRun.currentSigIndexPath(spark, base)
@@ -226,7 +226,7 @@ class IndexRunSpec extends SparkSpec {
 
   test("signature index: size-policy geometry frozen per version, appends under stored geometry, growth-tripped widening rebuild") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_siggeom").toFile.getAbsolutePath
+    val tmp = tempDir("graft_siggeom")
     val wh = s"$tmp/wh"
     val base = s"$wh/index/sig"
     def sig: String = IndexRun.currentSigIndexPath(spark, base)
@@ -325,7 +325,7 @@ class IndexRunSpec extends SparkSpec {
 
   test("semantic index: build, frozen-geometry append, occupancy re-cluster at grown k, retry idempotent, e5 contract post-retrain") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_semrun").toFile.getAbsolutePath
+    val tmp = tempDir("graft_semrun")
     val wh = s"$tmp/wh"
     val base = s"$wh/index/sem"
     def sem: String = IndexRun.currentSigIndexPath(spark, base)
@@ -425,7 +425,7 @@ class IndexRunSpec extends SparkSpec {
 
   test("semantic stage: earliest-day backfill appends under the frozen geometry, never rebuilds over later days") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_semrun_backfill").toFile.getAbsolutePath
+    val tmp = tempDir("graft_semrun_backfill")
     val wh = s"$tmp/wh"
     val base = s"$wh/index/sem"
     def drop(day: String, df: DataFrame): String = {
@@ -475,7 +475,7 @@ class IndexRunSpec extends SparkSpec {
   }
 
   test("bootstrap + hostile input: tiny day 1 clamps k, null vectors drop, re-ingested id survives retrain unsquared") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_indexrun_boot").toFile.getAbsolutePath
+    val tmp = tempDir("graft_indexrun_boot")
     val wh = s"$tmp/wh"
     def drop(day: String, df: DataFrame): String = {
       val dir = s"$tmp/in_$day"

@@ -12,7 +12,7 @@ import graft.sources.JdbcSource
 class JdbcSourceSpec extends SparkSpec {
 
   private lazy val dbDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_derby").toFile
+    val d = new java.io.File(tempDir("graft_derby"))
     d.delete() // Derby wants to create the directory itself
     d.getAbsolutePath
   }

@@ -119,7 +119,7 @@ class ModulesSpec extends SparkSpec {
 
   test("csv ingest: header-driven column intersection with stamps (load_staging semantics)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("csv_ingest").toFile
+    val dir = new java.io.File(tempDir("csv_ingest"))
     val f = new java.io.File(dir, "products_raw_2025_11_23.csv")
     // crawler header superset incl. columns the DB table doesn't have
     java.nio.file.Files.writeString(f.toPath,
@@ -148,7 +148,7 @@ class ModulesSpec extends SparkSpec {
   }
 
   test("csv ingest: latest-by-mtime file resolution") {
-    val dir = java.nio.file.Files.createTempDirectory("csv_latest").toFile
+    val dir = new java.io.File(tempDir("csv_latest"))
     def mk(name: String, mtime: Long): Unit = {
       val f = new java.io.File(dir, name)
       java.nio.file.Files.writeString(f.toPath, "ID\n1\n")
@@ -213,8 +213,7 @@ class ModulesSpec extends SparkSpec {
   }
 
   test("run ledger: a FAILED close that fails too does not mask the stage's error") {
-    val ledgerPath = java.nio.file.Files.createTempDirectory("graft_ledger").toFile
-      .getAbsolutePath + "/process_log"
+    val ledgerPath = tempDir("graft_ledger") + "/process_log"
     val stageError = new IllegalStateException("stage failed")
     val thrown = intercept[IllegalStateException] {
       RunLedger.guarded(spark, ledgerPath, "transform", "2025-11-23 06:00:00") {
@@ -258,7 +257,7 @@ class ModulesSpec extends SparkSpec {
     val events = Tables.load(spark, "/root/testdata/sf0.001", "events")
     val batch = EventStreams.windowedCounts(events)
 
-    val tmp = java.nio.file.Files.createTempDirectory("stream").toFile.getAbsolutePath
+    val tmp = tempDir("stream")
     val landing = s"$tmp/landing"
     events.write.parquet(landing)
     val schema = spark.read.parquet(landing).schema
@@ -359,7 +358,7 @@ class ModulesSpec extends SparkSpec {
   test("streaming: parquet-sink sessionize (production path) equals the memory-sink gate") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stsink").toFile.getAbsolutePath
+    val tmp = tempDir("graft_stsink")
     val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = spark.readStream.schema(batchSchema).parquet(s"$dir/events*.parquet")
     val rows = stream
@@ -471,7 +470,7 @@ class ModulesSpec extends SparkSpec {
 
   test("streaming: foreachBatch upsert sink lands drops into a partitioned zone") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_szone").toFile.getAbsolutePath
+    val tmp = tempDir("graft_szone")
     val landing = s"$tmp/landing"
     def run(): Unit = {
       val schema = spark.read.parquet(landing).schema
@@ -495,7 +494,7 @@ class ModulesSpec extends SparkSpec {
 
   test("streaming: cross-run dedup — the fingerprint zone remembers across restarts") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_crossrun").toFile.getAbsolutePath
+    val tmp = tempDir("graft_crossrun")
     def drop(dir: String, ids: Range): Unit =
       ids.map(i => (i.toLong, s"payload_$i")).toDF("event_id", "payload")
         .write.mode("append").parquet(dir)
@@ -553,7 +552,7 @@ class ModulesSpec extends SparkSpec {
 
   test("streaming: dedup-zone fold — partitions consolidate, replays refuse across the fold, fp zone converges") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dedupfold").toFile.getAbsolutePath
+    val tmp = tempDir("graft_dedupfold")
     def batch(ids: Range) =
       ids.map(i => (i.toLong, s"payload_$i")).toDF("event_id", "payload")
     def commit(df: org.apache.spark.sql.DataFrame): Unit =
@@ -650,7 +649,7 @@ class ModulesSpec extends SparkSpec {
 
   test("streaming: dedup-zone fold runs AUTOMATICALLY at the stream's cadence") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_autofold").toFile.getAbsolutePath
+    val tmp = tempDir("graft_autofold")
     def drop(dir: String, ids: Range): Unit =
       ids.map(i => (i.toLong, s"payload_$i")).toDF("event_id", "payload")
         .write.mode("append").parquet(dir)
@@ -697,7 +696,7 @@ class ModulesSpec extends SparkSpec {
 
   test("streaming: dedup-zone folds TIER — merges cascade, I/O stays O(rows log rows)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tierfold").toFile.getAbsolutePath
+    val tmp = tempDir("graft_tierfold")
     def batch(ids: Range) =
       ids.map(i => (i.toLong, s"payload_$i")).toDF("event_id", "payload")
     def commit(df: org.apache.spark.sql.DataFrame): Unit =
@@ -748,7 +747,7 @@ class ModulesSpec extends SparkSpec {
   test("stats zone: incremental merges equal the one-shot build; replayed batches no-op") {
     import spark.implicits._
     import graft.operators.Profiling
-    val tmp = java.nio.file.Files.createTempDirectory("graft_statsinc").toFile.getAbsolutePath
+    val tmp = tempDir("graft_statsinc")
     val zone = s"$tmp/stats"
     def merge(df: org.apache.spark.sql.DataFrame, id: Long): Boolean =
       Profiling.mergeStatsIncrement(spark, df, zone,
@@ -836,7 +835,7 @@ class ModulesSpec extends SparkSpec {
     // [3] END-TO-END: sequential in-order merges keep every row's extras
     // EMPTY — the set lives in the run, per-row state is O(1) forever
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_statscap").toFile.getAbsolutePath
+    val tmp = tempDir("graft_statscap")
     val zone = s"$tmp/stats"
     def merge(df: org.apache.spark.sql.DataFrame, id: Long): Boolean =
       Profiling.mergeStatsIncrement(spark, df, zone,
@@ -899,7 +898,7 @@ class ModulesSpec extends SparkSpec {
   test("stats zone: a permanent batch-id gap stores one extra run; a late backfill closes it") {
     import spark.implicits._
     import graft.operators.Profiling
-    val tmp = java.nio.file.Files.createTempDirectory("graft_statsgap").toFile.getAbsolutePath
+    val tmp = tempDir("graft_statsgap")
     val zone = s"$tmp/stats"
     def batch(k0: Long) = Seq(("2024-01", k0, 1.0)).toDF("day", "k", "v")
     def merge(df: org.apache.spark.sql.DataFrame, id: Long): Boolean =

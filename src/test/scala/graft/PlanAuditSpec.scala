@@ -156,7 +156,7 @@ class PlanAuditSpec extends SparkSpec {
       "graft sessions must run AQE-on; the audits would otherwise test a non-prod planner")
     import spark.implicits._
     import graft.sources.Zones
-    val wh = java.nio.file.Files.createTempDirectory("aqe_matrix").toFile.getAbsolutePath
+    val wh = tempDir("aqe_matrix")
     val tbl = "graft_aqe_bucket_zone"
     try Sessions.withConfs(spark,
         ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: Zones.BucketedMergeConfs: _*) {
@@ -210,8 +210,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("d9: incremental dedup scans the signature zone; no corpus re-shingle in the plan") {
     import spark.implicits._
-    val zone = java.nio.file.Files.createTempDirectory("d9_audit")
-      .toFile.getAbsolutePath + "/idx"
+    val zone = tempDir("d9_audit") + "/idx"
     // in-memory batches: the ONLY legitimate file scan in the incremental
     // plan is then the signature zone itself
     val day1 = Seq(
@@ -243,8 +242,7 @@ class PlanAuditSpec extends SparkSpec {
     // confirm stage's hgrams fetch as a PUSHED In(id, ...) — the
     // pushable predicate that lets parquet row-group stats skip the
     // heavy column for row groups holding no candidate.
-    val zone = java.nio.file.Files.createTempDirectory("d9_fetch_audit")
-      .toFile.getAbsolutePath + "/idx"
+    val zone = tempDir("d9_fetch_audit") + "/idx"
     val day1 = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
@@ -290,8 +288,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("a21: stats-zone rollup's only file scan is the zone — no raw-table rescan") {
-    val zone = java.nio.file.Files.createTempDirectory("a21_audit")
-      .toFile.getAbsolutePath + "/stats"
+    val zone = tempDir("a21_audit") + "/stats"
     graft.operators.Profiling.writeStatsZone(
       Tables.load(spark, dir, "lineitem"), zone,
       epochExpr = "date_format(l_shipdate, 'yyyy-MM')",
@@ -313,8 +310,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("e3: incremental embedding near-dup scans only the signature zone — no corpus re-hash") {
     import spark.implicits._
-    val zone = java.nio.file.Files.createTempDirectory("e3_audit")
-      .toFile.getAbsolutePath + "/idx"
+    val zone = tempDir("e3_audit") + "/idx"
     val rnd = new scala.util.Random(3)
     val corpus = (0L until 20L).map(i => (i, Array.fill(8)(rnd.nextGaussian()).toSeq))
       .toDF("id", "v")
@@ -334,8 +330,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("k4: persisted-IVF query plan scans only the index zone — no train, no re-assign") {
     import spark.implicits._
-    val zone = java.nio.file.Files.createTempDirectory("k4_audit")
-      .toFile.getAbsolutePath + "/idx"
+    val zone = tempDir("k4_audit") + "/idx"
     val emb = Tables.load(spark, dir, "embeddings")
     graft.operators.SimilaritySearch.buildIvfIndex(
       spark, zone, emb, "vec_id", "embedding", nCells = 16)
@@ -370,8 +365,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("k5: IVF append day is a narrow map — no sampling, no scan of standing partitions") {
     import spark.implicits._
-    val zone = java.nio.file.Files.createTempDirectory("k5_audit")
-      .toFile.getAbsolutePath + "/idx"
+    val zone = tempDir("k5_audit") + "/idx"
     val emb = Tables.load(spark, dir, "embeddings")
     graft.operators.SimilaritySearch.buildIvfIndex(
       spark, zone, emb, "vec_id", "embedding", nCells = 16)
@@ -421,8 +415,7 @@ class PlanAuditSpec extends SparkSpec {
   test("e5: incremental semantic dedup scans the assignment zone; every join is an equi-join") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val zone = java.nio.file.Files.createTempDirectory("e5_audit")
-      .toFile.getAbsolutePath + "/assign"
+    val zone = tempDir("e5_audit") + "/assign"
     val rnd = new scala.util.Random(5)
     val day1 = (0L until 60L).map(i => (i, Seq.fill(8)(rnd.nextGaussian()))).toDF("vec_id", "e")
     graft.operators.Dedup.semanticDedup(day1, "vec_id", "e", 8, 2, 0.95)
@@ -449,8 +442,7 @@ class PlanAuditSpec extends SparkSpec {
   test("e5 via centroid state: daily plan carries NO corpus-scale centroid aggregate") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("e5_state_audit")
-      .toFile.getAbsolutePath
+    val root = tempDir("e5_state_audit")
     val zone = s"$root/assign"
     val rnd = new scala.util.Random(7)
     val day1 = (0L until 60L).map(i => (i, Seq.fill(8)(rnd.nextGaussian()))).toDF("vec_id", "e")
@@ -585,8 +577,7 @@ class PlanAuditSpec extends SparkSpec {
       case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.contains(tag))
       case _ => false
     }
-    val root = java.nio.file.Files.createTempDirectory("zoneprobe_audit")
-      .toFile.getAbsolutePath
+    val root = tempDir("zoneprobe_audit")
     // ── inverted fingerprint anti-join: the zone must enter NO exchange ──
     (0L until 500L).map(i => f"fp$i%04d").toDF("fp").write.parquet(s"$root/fp")
     val incFp = (400L until 520L).map(i => f"fp$i%04d").toDF("fp")
@@ -683,8 +674,7 @@ class PlanAuditSpec extends SparkSpec {
         f.relation.location.rootPaths.exists(_.toString.contains("ccprune_audit"))
       case _ => false
     }
-    val root = java.nio.file.Files.createTempDirectory("ccprune_audit")
-      .toFile.getAbsolutePath
+    val root = tempDir("ccprune_audit")
     // a standing assignment zone: 10k nodes in clusters of 4
     spark.range(10000L).select(
       col("id"),

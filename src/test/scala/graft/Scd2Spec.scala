@@ -112,7 +112,7 @@ class Scd2Spec extends SparkSpec {
 
   test("applyZoned: three rounds equal flat apply; historical partitions never rewritten") {
     import spark.implicits._
-    val zone = java.nio.file.Files.createTempDirectory("scd2_zone").toFile.getAbsolutePath + "/h"
+    val zone = tempDir("scd2_zone") + "/h"
     def snap(prices: Map[Long, Double]) =
       prices.toSeq.toDF("id", "price").select(col("id"), col("price"), lit(1).as("psize"))
     val s1 = snap(Map(1L -> 10.0, 2L -> 20.0, 3L -> 30.0))
@@ -174,8 +174,7 @@ class Scd2Spec extends SparkSpec {
 
   test("applyZoned same-day rerun preserves earlier tombstones (intraday correction)") {
     import spark.implicits._
-    val zone = java.nio.file.Files.createTempDirectory("scd2_zone_rerun")
-      .toFile.getAbsolutePath + "/h"
+    val zone = tempDir("scd2_zone_rerun") + "/h"
     def snap(prices: Map[Long, Double]) =
       prices.toSeq.toDF("id", "price").select(col("id"), col("price"), lit(1).as("psize"))
     val s1 = snap(Map(1L -> 10.0, 2L -> 20.0, 3L -> 30.0))
@@ -203,9 +202,44 @@ class Scd2Spec extends SparkSpec {
     assert(morning.count() == 1, "morning tombstone dropped by same-day rerun")
   }
 
+  test("applyZonedWithStats observes the stats applyWithStats counts: empty first round, " +
+      "three rounds, same-day rerun") {
+    import spark.implicits._
+    val zone = tempDir("scd2_zone_stats") + "/h"
+    def snap(prices: Map[Long, Double]) =
+      prices.toSeq.toDF("id", "price").select(col("id"), col("price"), lit(1).as("psize"))
+    val keys = (Seq("id"), Seq("id"), Seq("price"))
+    val runs = Seq(
+      snap(Map.empty) -> "2024-01-01 00:00:00", // an empty first night
+      snap(Map(1L -> 10.0, 2L -> 20.0, 3L -> 30.0)) -> "2024-01-02 00:00:00",
+      snap(Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0, 4L -> 40.0)) -> "2024-01-03 08:00:00",
+      snap(Map(1L -> 11.0, 2L -> 22.0, 3L -> 30.0, 4L -> 40.0)) -> "2024-01-03 12:00:00")
+    var flat = Scd2.emptyHistory(runs.head._1, "timestamp_ntz")
+    val cached = Seq.newBuilder[org.apache.spark.sql.DataFrame]
+    val observed = runs.map { case (sn, ts) =>
+      val runTs = lit(ts).cast("timestamp_ntz")
+      val zoned = Scd2.applyZonedWithStats(spark, zone, sn, keys._1, keys._2, keys._3,
+        runTs, sentinel, tsType = "timestamp_ntz")
+      val (next, counted) = Scd2.applyWithStats(flat, sn, keys._1, keys._2, keys._3, runTs, sentinel)
+      assert(zoned == counted, s"round $ts: observed $zoned, counted $counted")
+      cached += next
+      flat = next
+      zoned
+    }
+    assert(observed == Seq(
+      graft.operators.ScdStats(0, 0, 0),
+      graft.operators.ScdStats(3, 3, 0),
+      graft.operators.ScdStats(4, 2, 1),
+      graft.operators.ScdStats(4, 1, 1)), observed.toString)
+    assertSameRows(
+      spark.read.parquet(zone).select("id", "price", "psize", "created_at", "updated_at", "expired_at"),
+      flat, "zoned vs flat history")
+    cached.result().foreach(_.unpersist())
+  }
+
   test("applyZoned on an explicit file: URI (Hadoop FS existence, not java.io.File)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("scd2_zone_uri").toFile.getAbsolutePath
+    val dir = tempDir("scd2_zone_uri")
     val zone = s"file://$dir/h" // java.io.File.exists() is false for this form
     def snap(prices: Map[Long, Double]) =
       prices.toSeq.toDF("id", "price").select(col("id"), col("price"), lit(1).as("psize"))
@@ -226,8 +260,7 @@ class Scd2Spec extends SparkSpec {
 
   test("timestamp-typed zone pins its session timezone and fails fast on a mismatch") {
     import spark.implicits._
-    val zone = java.nio.file.Files.createTempDirectory("scd2_zone_tz")
-      .toFile.getAbsolutePath + "/h"
+    val zone = tempDir("scd2_zone_tz") + "/h"
     def snap(prices: Map[Long, Double]) =
       prices.toSeq.toDF("id", "price").select(col("id"), col("price"), lit(1).as("psize"))
     val keys = (Seq("id"), Seq("id"), Seq("price"))

@@ -54,7 +54,7 @@ class SketchSpec extends SparkSpec {
     // built-in increment merges into it and the rollup decodes both.
     import spark.implicits._
     import graft.operators.Profiling
-    val tmp = java.nio.file.Files.createTempDirectory("graft_kllold").toFile.getAbsolutePath
+    val tmp = tempDir("graft_kllold")
     val priced = li.select(
       date_format(col("l_shipdate"), "yyyy-MM").as("month"),
       col("l_extendedprice").cast("double").as("price"), col("l_partkey"))

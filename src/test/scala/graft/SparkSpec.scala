@@ -16,6 +16,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = () // one JVM-wide session across suites
 
+  /** A fresh temp dir (absolute path), deleted with everything under it
+    * when the JVM exits: not in `afterAll`, because the session, and any
+    * zone or cached relation it still holds, lives as long as the JVM.
+    */
+  def tempDir(prefix: String): String = SparkSpec.tempDir(prefix)
+
   def fixture(name: String): DataFrame =
     spark.read.parquet(s"src/test/resources/fixtures/$name.parquet")
 
@@ -76,5 +82,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val extra = g.diff(e).take(3)
     assert(g == e,
       s"$label: ${g.size} got vs ${e.size} expected rows; missing=$missing extra=$extra")
+  }
+}
+
+object SparkSpec {
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  sys.addShutdownHook(tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(dir)
+    dir.getAbsolutePath
   }
 }

@@ -37,7 +37,7 @@ class ZonesSpec extends SparkSpec {
 
   test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("bucketwh").toFile.getAbsolutePath
+    val wh = tempDir("bucketwh")
     val a = (1L to 1000L).map(i => (i, i * 2.0)).toDF("k", "va")
     val b = (1L to 1000L).map(i => (i, s"x$i")).toDF("k", "vb")
     a.write.mode("overwrite").bucketBy(8, "k").sortBy("k")
@@ -58,7 +58,7 @@ class ZonesSpec extends SparkSpec {
 
   test("bucketed zone upsert: updates win, untouched days intact, zone side joins shuffle-free") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("bucketzone").toFile.getAbsolutePath
+    val wh = tempDir("bucketzone")
     val tbl = "graft_test_bucket_zone"
     // the plan audit below derives the merge plan lazily (after the
     // method restored its conf scope), so mirror the EXACT conf scope the
@@ -90,7 +90,7 @@ class ZonesSpec extends SparkSpec {
 
   test("partitioned upsert rewrites only touched partitions; pruning hits the plan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zones").toFile.getAbsolutePath
+    val dir = tempDir("zones")
     val path = s"$dir/aggregate"
 
     val day1 = Seq((1L, 100, 10.0), (2L, 100, 20.0), (3L, 101, 30.0))
@@ -124,7 +124,7 @@ class ZonesSpec extends SparkSpec {
 
   test("compact collapses accreted small files without changing content") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("zone_compact").toFile.getAbsolutePath + "/t"
+    val path = tempDir("zone_compact") + "/t"
 
     // accrete 5 tiny single-row writes → ≥5 fragment files
     (1 to 5).foreach { d =>
@@ -150,7 +150,7 @@ class ZonesSpec extends SparkSpec {
   }
 
   test("readRobust quarantines truncated parquet files; loss reported, never silent") {
-    val path = java.nio.file.Files.createTempDirectory("zone_corrupt").toFile.getAbsolutePath + "/t"
+    val path = tempDir("zone_corrupt") + "/t"
     spark.range(1000).withColumn("v", org.apache.spark.sql.functions.col("id") * 2)
       .repartition(4).write.parquet(path)
     val files = new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
@@ -176,7 +176,7 @@ class ZonesSpec extends SparkSpec {
 
   test("swap crash window: the zone's only copy in tmp is recovered, never destroyed") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("zone_swapcrash").toFile.getAbsolutePath + "/t"
+    val path = tempDir("zone_swapcrash") + "/t"
     Zones.overwriteSwap(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), path)
     // simulate the crash between commitSwap's delete and rename: the NEXT
     // swap's staged result is complete in tmp, the target is gone
@@ -205,7 +205,7 @@ class ZonesSpec extends SparkSpec {
 
   test("upsertPartitioned: empty first increment does not poison the zone; null partitions merge") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("zone_edge").toFile.getAbsolutePath + "/t"
+    val path = tempDir("zone_edge") + "/t"
     val schema = Seq((1L, 1, 1.0)).toDF("product_sk", "date_sk", "price").schema
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -226,7 +226,7 @@ class ZonesSpec extends SparkSpec {
     val withNull = Seq((10L, "x"), (11L, "y")).toDF("product_sk", "tag")
       .withColumn("date_sk", when(col("product_sk") === 10L, lit(null)).otherwise(lit(200)))
       .select("product_sk", "date_sk", "tag")
-    val path2 = java.nio.file.Files.createTempDirectory("zone_null").toFile.getAbsolutePath + "/t"
+    val path2 = tempDir("zone_null") + "/t"
     Zones.upsertPartitioned(spark, path2, withNull, Seq("product_sk"), "date_sk")
     val incNull = Seq((12L, "z")).toDF("product_sk", "tag")
       .withColumn("date_sk", lit(null).cast("int"))
@@ -240,7 +240,7 @@ class ZonesSpec extends SparkSpec {
 
   test("ensureBucketedTable refuses a changed bucket spec instead of mixing layouts") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("zone_bspec").toFile.getAbsolutePath
+    val tmp = tempDir("zone_bspec")
     val name = "zs_bspec_t"
     val df = Seq((1L, 10, 1.0)).toDF("product_sk", "date_sk", "price")
     Zones.upsertBucketed(spark, name, s"$tmp/t", df,
@@ -255,7 +255,7 @@ class ZonesSpec extends SparkSpec {
   }
 
   test("readRobust: an all-corrupt zone fails with the quarantine named, not schema inference") {
-    val path = java.nio.file.Files.createTempDirectory("zone_allbad").toFile.getAbsolutePath + "/t"
+    val path = tempDir("zone_allbad") + "/t"
     spark.range(10).write.parquet(path)
     new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
       val raf = new java.io.RandomAccessFile(f, "rw")
@@ -268,7 +268,7 @@ class ZonesSpec extends SparkSpec {
 
   test("readMerged unifies evolved schemas across appended batches") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("zone_evolve").toFile.getAbsolutePath + "/t"
+    val path = tempDir("zone_evolve") + "/t"
     Seq((1L, 10.0)).toDF("product_sk", "price").write.parquet(path)
     Seq((2L, 20.0, "VN")).toDF("product_sk", "price", "market")
       .write.mode("append").parquet(path)
