@@ -506,7 +506,7 @@ object SparkEntry {
             abs(col("r90m") - col("r90s")) <= 0.06).as("merge_consistent"))
     }),
     // A21: the PERSISTED form of a19+a20 — a stats zone of per-month
-    // (epoch × returnflag) sketch states built once per sf dir; the
+    // (epoch × returnflag) sketch states built once per JVM; the
     // rollup answers exact counts, KLL quantiles, and HLL distincts per
     // flag by merging stored kilobyte states (PlanAuditSpec proves the
     // rollup plan's only file scan is the zone). In-gate verification
@@ -2024,12 +2024,11 @@ object SparkEntry {
         .select(col("id_a").as("probe_id"), col("id_b").as("match_id"))
     }),
     // e1's INCREMENTAL form: the corpus's sign-bit band keys are persisted
-    // once (build-once zone, commit-marker validated); the probe batch
+    // once per JVM (gateZone); the probe batch
     // computes its own keys only and joins the STORED index — no corpus
     // re-hash anywhere in the query plan (the embedding analog of d9).
     // Same pair set as e1, so e1's brute-force cosine oracle is verbatim.
     "e3_embedding_neardup_incremental" -> ((s, dir) => {
-      import graft.sources.Zones
       val v = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       val probes = v.filter(col("vec_id") % 10 === 0).select(
@@ -2037,13 +2036,10 @@ object SparkEntry {
         concat(
           array(element_at(col("e"), 1) + lit(0.01)),
           slice(col("e"), 2, 10000)).as("pe"))
-      val zone = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_e3_sigzone_${zoneKey(dir)}").getAbsolutePath
-      if (!Zones.exists(s, s"$zone/_SUCCESS")) {
-        Zones.delete(s, zone)
+      val zone = gateZone(s, "e3_sigzone", dir) { z =>
         // geometry pinned 8x8 (the e1 note): the gate certifies this
         // rung; production writers default through the size policy
-        Dedup.writeEmbeddingSignatureIndex(s, zone, v, "vec_id", "e",
+        Dedup.writeEmbeddingSignatureIndex(s, z, v, "vec_id", "e",
           bands = 8, bitsPerBand = 8, mode = "overwrite")
       }
       // probe ids are offset above every corpus id, so id_a is always the
@@ -2103,7 +2099,7 @@ object SparkEntry {
         concat(
           array(element_at(col("e"), 1) + lit(0.01)),
           slice(col("e"), 2, 10000)).as("e"))
-      // standing zone built once per sf dir — the measured work is the
+      // standing zone built once per JVM — the measured work is the
       // daily increment path only (centroids from stored rows onward)
       Dedup.semanticDedupIncremental(day1SemanticZone(s, dir), probes, "vec_id", "e", 0.95)
     }),
@@ -2146,18 +2142,12 @@ object SparkEntry {
     // results identical to k3 on the same planted queries; the only file
     // scans in the query plan are the index zone (plan-audited).
     "k4_knn_ivf_persisted" -> ((s, dir) => {
-      import graft.sources.Zones
       val emb = t(s, dir, "embeddings")
       val queries = annPlantedQueries(emb, 20)
-      // build-once per sf dir (deterministic build, commit-marker
-      // validated): re-invocations measure the query path — the shape
-      // this index exists for (build nightly, query all day)
-      val zone = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_k4_ivf_${zoneKey(dir)}").getAbsolutePath
-      if (!Zones.exists(s, s"$zone/centroids/_SUCCESS") ||
-        !Zones.exists(s, s"$zone/assignments/_SUCCESS")) {
-        Zones.delete(s, zone)
-        SimilaritySearch.buildIvfIndex(s, zone, emb, "vec_id", "embedding", nCells = 256)
+      // built once per JVM: re-invocations measure the query path — the
+      // shape this index exists for (build nightly, query all day)
+      val zone = gateZone(s, "k4_ivf", dir) { z =>
+        SimilaritySearch.buildIvfIndex(s, z, emb, "vec_id", "embedding", nCells = 256)
       }
       annRecallFrame(
         SimilaritySearch.ivfTopKPersisted(s, zone, queries, "vec_id", "embedding", 10,
@@ -2174,26 +2164,18 @@ object SparkEntry {
     // assigned at build time (same centroids ⇒ same cells), so the
     // recall frame is k3/k4's oracle verbatim over the full corpus.
     "k5_knn_ivf_incremental" -> ((s, dir) => {
-      import graft.sources.Zones
       val emb = t(s, dir, "embeddings")
       val queries = annPlantedQueries(emb, 20)
-      val zone = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_k5_ivf_${zoneKey(dir)}").getAbsolutePath
-      // build-once day 1 + append-once day 2, both marker-validated: a
-      // crash between build and append rebuilds the whole zone (append
-      // twice would double day 2)
-      if (!Zones.exists(s, s"$zone/centroids/_SUCCESS") ||
-        !Zones.exists(s, s"$zone/assignments/_SUCCESS") ||
-        !Zones.exists(s, s"$zone/appended/_SUCCESS")) {
-        Zones.delete(s, zone)
+      // day 1 built and day 2 appended once per JVM: a failure between
+      // the two rebuilds the whole zone (append twice would double day 2)
+      val zone = gateZone(s, "k5_ivf", dir) { z =>
         // 128 cells: the day-1 half must still exceed the cell count at
         // the smallest sf (250 vectors); nProbe=16 keeps k3's 1/8 probed
         // fraction
         SimilaritySearch.buildIvfIndex(
-          s, zone, emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", nCells = 128)
+          s, z, emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", nCells = 128)
         SimilaritySearch.appendIvfIndex(
-          s, zone, emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
-        s.range(1).write.mode("overwrite").parquet(s"$zone/appended")
+          s, z, emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
       }
       annRecallFrame(
         SimilaritySearch.ivfTopKPersisted(s, zone, queries, "vec_id", "embedding", 10,
@@ -2617,28 +2599,36 @@ object SparkEntry {
     */
   private val NearDupOffset = 20000000L
 
-  /** Filesystem-safe key for per-sf-dir build-once index zones. */
-  private def zoneKey(dir: String): String = dir.replaceAll("[^A-Za-z0-9]+", "_")
+  /** Gate zones this JVM has built, by path (see [[gateZone]]). */
+  private val builtGateZones = scala.collection.mutable.Set.empty[String]
 
-  /** The shared day-1 MinHash signature zone of the incremental dedup
-    * gates (d9, d12): BUILD-ONCE per sf dir (a stale zone from a
-    * different scale must never serve), validated by the parquet commit
-    * marker — the build is deterministic, so re-invocations (bench
-    * warmup + timed passes) measure the STEADY STATE the operators are
-    * designed for. Returns (stored index, day-2 increment).
+  /** The standing zone a gate reads, at `<tmpdir>/graft_<name>_<sf dir>`:
+    * deleted and rebuilt by `build` on its first use in this JVM, then
+    * reused, so warm passes (Bench, Profile) measure the steady state the
+    * operators are designed for. A zone left on disk by another run — an
+    * older binary, another scale, a crash mid-build — is never trusted:
+    * the gate checks what the code it runs builds.
     */
-  /** a21's stats zone, built once per sf dir (commit-marker validated,
-    * dir-keyed like the d9/k4/e3 index zones): per-month × returnflag
-    * KLL/HLL states over lineitem — the steady-state nightly build whose
-    * rollups then never rescan raw rows.
+  private[graft] def gateZone(s: SparkSession, name: String, dir: String)(
+      build: String => Unit): String = {
+    val zone = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_${name}_${dir.replaceAll("[^A-Za-z0-9]+", "_")}").getAbsolutePath
+    builtGateZones.synchronized {
+      if (!builtGateZones.contains(zone)) {
+        graft.sources.Zones.delete(s, zone)
+        build(zone)
+        builtGateZones += zone
+      }
+    }
+    zone
+  }
+
+  /** a21's stats zone ([[gateZone]]): per-month × returnflag KLL/HLL
+    * states over lineitem — the steady-state nightly build whose rollups
+    * then never rescan raw rows.
     */
-  private def monthlyStatsZone(s: SparkSession, dir: String): String = {
-    import graft.sources.Zones
-    val zone = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_a21_statszone_${zoneKey(dir)}").getAbsolutePath
-    if (!Zones.exists(s, s"$zone/_SUCCESS")) {
-      Zones.delete(s, zone)
+  private def monthlyStatsZone(s: SparkSession, dir: String): String =
+    gateZone(s, "a21_statszone", dir) { zone =>
       Profiling.writeStatsZone(
         t(s, dir, "lineitem"), zone,
         epochExpr = "date_format(l_shipdate, 'yyyy-MM')",
@@ -2646,35 +2636,29 @@ object SparkEntry {
         valueExpr = "l_extendedprice",
         keyExpr = "l_partkey")
     }
-    zone
-  }
 
+  /** The shared day-1 MinHash signature zone of the incremental dedup
+    * gates (d9, d12) ([[gateZone]]). Returns (stored index, day-2
+    * increment).
+    */
   private def day1SignatureZone(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import graft.sources.Zones
     val corpus = nearDupCorpus(s, dir)
     val day1 = corpus.filter(col("doc_id") % 3 =!= 0)
     val day2 = corpus.filter(col("doc_id") % 3 === 0)
-    val zone = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_d9_sigzone_${zoneKey(dir)}").getAbsolutePath
-    if (!Zones.exists(s, s"$zone/_SUCCESS")) {
-      Zones.delete(s, zone)
-      Dedup.writeSignatureIndex(s, zone, day1, "doc_id", "text", 3, 32, mode = "overwrite")
+    val zone = gateZone(s, "d9_sigzone", dir) { z =>
+      Dedup.writeSignatureIndex(s, z, day1, "doc_id", "text", 3, 32, mode = "overwrite")
     }
     (Dedup.readSignatureIndex(s, zone), day2)
   }
 
-  /** e5's standing day-1 semantic assignment zone, built ONCE per sf dir
-    * (the d9/k4 pattern): the gate then measures the DAILY path —
-    * centroid replay from the stored rows + increment assignment + the
-    * ε-ball joins — not the day-1 clustering it would never redo in
-    * production.
+  /** e5's standing day-1 semantic assignment zone ([[gateZone]]): the
+    * gate then measures the DAILY path — centroid replay from the stored
+    * rows + increment assignment + the ε-ball joins — not the day-1
+    * clustering it would never redo in production.
     */
   private def day1SemanticZone(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Zones
-    val zone = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_e5_semzone_${zoneKey(dir)}").getAbsolutePath
-    if (!Zones.exists(s, s"$zone/_SUCCESS")) {
-      Zones.delete(s, zone)
+    val zone = gateZone(s, "e5_semzone", dir) { z =>
       val v = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       // zone file count from the corpus row count (Zones.sizedForWrite):
@@ -2688,14 +2672,14 @@ object SparkEntry {
           .select(col("vec_id").as("id"), col("cluster"))
           .join(v.select(col("vec_id").as("id"), col("e").as("v")), "id"),
         nVecs)
-        .write.mode("overwrite").parquet(zone)
+        .write.mode("overwrite").parquet(z)
     }
     s.read.parquet(zone)
   }
 
-  /** c8/c9's standing 3-day corpus warehouse, built ONCE per sf dir (the
-    * d9/k4/e5 build-once pattern, marker-validated): three deterministic
-    * increments through [[graft.pipeline.CorpusRun.run]] end to end —
+  /** c8/c9's standing 3-day corpus warehouse ([[gateZone]]): three
+    * deterministic increments through [[graft.pipeline.CorpusRun.run]] end
+    * to end —
     * quality suite, exact/near/semantic dedup against the standing zones,
     * paragraph excision, publish, stats, ledger. Re-invocations hit the
     * SUCCESS-today gate (SKIPPED) and measure reads of the standing output.
@@ -2721,12 +2705,7 @@ object SparkEntry {
     */
   private def corpusRunWarehouse(s: SparkSession, dir: String): String = {
     import graft.pipeline.CorpusRun
-    import graft.sources.Zones
-    val wh = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_c8_wh_${zoneKey(dir)}").getAbsolutePath
-    val marker = s"$wh/_GATE_DONE"
-    if (!Zones.exists(s, marker)) {
-      Zones.delete(s, wh)
+    gateZone(s, "c8_wh", dir) { wh =>
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"), col("source"))
       def mut5(c: Column): Column =
         concat_ws(" ", slice(TextAnalysis.tokens(c), 6, 1000000))
@@ -2779,11 +2758,7 @@ object SparkEntry {
           CorpusRun.run(s, s"$wh/feed/$name", wh, s"$d 08:00:00",
             qualityRules = rules, semantic = sem)
       }
-      val fs = new org.apache.hadoop.fs.Path(marker)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.create(new org.apache.hadoop.fs.Path(marker), true).close()
     }
-    wh
   }
 
   private def nearDupCorpus(s: SparkSession, dir: String): DataFrame = {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructType}
 
 /** Run statistics mirroring the reference SP's OUT params
   * (reference: sql_script/db_control_sql.sql:213-216).
@@ -131,6 +132,14 @@ object Scd2 {
     */
   val ExpiredDay = "expired_day"
 
+  /** Schema of an [[applyZoned]] history zone for `staging`: the history
+    * columns plus [[ExpiredDay]], typed DATE as partition inference reads
+    * the `yyyy-MM-dd` directory values. Reads that pass it run no
+    * schema-inference job.
+    */
+  def zoneSchema(staging: DataFrame, tsType: String): StructType =
+    emptyHistory(staging, tsType).schema.add(ExpiredDay, DateType)
+
   /** SCD2 into a day-partitioned history zone — the at-scale form of
     * [[apply]]. A flat history zone rewrites the ENTIRE history every
     * round: O(|history|) daily writes that grow without bound — by year
@@ -233,7 +242,7 @@ object Scd2 {
       // hasDataFiles, not exists: an empty first round leaves a fileless
       // zone dir that a parquet read cannot infer a schema from
       if (!graft.sources.Zones.hasDataFiles(spark, path)) emptyHistory(staging, tsType)
-      else spark.read.parquet(path)
+      else graft.sources.Zones.read(spark, path, zoneSchema(staging, tsType))
         // same-day rerun safety: today's partition rides along so dynamic
         // overwrite re-emits earlier tombstones instead of dropping them
         .filter(col(ExpiredDay).isin(sentinelDay, day))
@@ -272,7 +281,7 @@ object Scd2 {
   private def evalDays(
       spark: org.apache.spark.sql.SparkSession, exprs: Column*): Array[String] = {
     val one = spark.createDataFrame(
-      java.util.List.of(Row.empty), org.apache.spark.sql.types.StructType(Nil))
+      java.util.List.of(Row.empty), StructType(Nil))
     val row = one.select(exprs: _*).head()
     Array.tabulate(exprs.length)(row.getString)
   }

@@ -14,7 +14,7 @@ import graft.sources.{CsvIngest, Zones}
   *   gate (already ran today? → skip)
   *   → ingest landing CSV (or parquet) → staging raw
   *   → clean → SCD2 history zone
-  *   → dim_brand / dim_product → aggregate snapshot (partitioned upsert)
+  *   → dim_brand / dim_product → aggregate snapshot (tonight's partition)
   *   → datamart rollups (tonight's day and the current quarter only)
   *   → run ledger SUCCESS row with the SCD2 stats message
   *
@@ -25,13 +25,6 @@ import graft.sources.{CsvIngest, Zones}
   */
 object DailyRun {
   val ProcessName = "daily_pipeline"
-
-  /** Catalog name + bucket count of the aggregate zone table. 32 buckets
-    * is the local[32] setting; size to ~executor-count × small-factor on
-    * a real cluster.
-    */
-  val AggregateTable = "graft_aggregate"
-  val AggregateBuckets = 32
 
   def main(args: Array[String]): Unit = {
     val Array(landingDir, whDir, runTs) = args.take(3)
@@ -85,7 +78,7 @@ object DailyRun {
     // the current rows; the partition filter prunes the scan statically,
     // so closed history is never touched)
     val sentinel = lit(Scd2.SentinelTs).cast("timestamp_ntz")
-    val history = Zones.read(spark, historyPath)
+    val history = Zones.read(spark, historyPath, Scd2.zoneSchema(cleaned, "timestamp_ntz"))
       .filter(col(Scd2.ExpiredDay) === date_format(sentinel, "yyyy-MM-dd"))
       .drop(Scd2.ExpiredDay)
     val brandPath = s"$whDir/warehouse/dim_brand"
@@ -103,13 +96,14 @@ object DailyRun {
     // dim_brand files, which the swap replaces
     Zones.overwriteSwapAll(Seq(brand1 -> brandPath, product1 -> productPath))
 
-    // [6] aggregate snapshot — per-day partitioned upsert into the
-    // BUCKETED zone table: day partitions keep pruning, PRODUCT_SK
-    // buckets let the daily merge and every downstream star join run
-    // without shuffling the (at scale, 100 TB) aggregate side. One
-    // dim_date query collects tonight's quarter (at most 92 rows):
-    // today's keys and the quarter's DATE_SK bounds both come from it
-    // (DATE_SK numbers days consecutively).
+    // [6] aggregate snapshot (load_aggregate.py:90-107) — replaces
+    // tonight's DATE_SK partition and leaves every other day untouched.
+    // That is the reference's ON DUPLICATE KEY UPDATE here: the snapshot
+    // holds every dim_product row, and loadDims never drops or re-keys a
+    // product, so a same-day rerun's earlier partition holds no key the
+    // snapshot lacks. One dim_date query collects tonight's quarter (at
+    // most 92 rows): today's keys and the quarter's DATE_SK bounds both
+    // come from it (DATE_SK numbers days consecutively).
     val quarter = dimDate
       .filter(col("QUARTER_OF_YEAR") === trunc(lit(runDate).cast("date"), "quarter"))
       .select(col("DATE_SK"), col("CALENDAR_YEAR"), col("INT_MONTH"),
@@ -121,16 +115,11 @@ object DailyRun {
       Zones.read(spark, productPath, emptyProduct.schema),
       today.getInt(0), today.getInt(1), today.getInt(2))
     val aggregatePath = s"$whDir/warehouse/aggregate"
-    Zones.upsertBucketed(
-      spark, AggregateTable, aggregatePath, snapshot,
-      Seq("PRODUCT_SK", "DATE_SK"), "DATE_SK", Seq("PRODUCT_SK"), AggregateBuckets)
+    Zones.replacePartitions(snapshot, aggregatePath, Seq("DATE_SK"))
 
     // [7] datamart rollups (load_datamart.py:112,138 rebuilds both in
     // full): replace only tonight's daily partition and the current
     // quarter's partition, each from the aggregate days it depends on.
-    // The aggregate is read by path, not through the bucketed table, so
-    // the few small day files pack into a few scan tasks, not one per
-    // bucket.
     val aggregate = Zones.read(spark, aggregatePath, snapshot.schema)
     val quarterSks = quarter.map(_.getInt(0))
     refreshDatamart(spark, s"$whDir/datamart/dm_product_daily_price", Seq("DATE_SK"),

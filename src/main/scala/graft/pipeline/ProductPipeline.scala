@@ -206,8 +206,10 @@ object ProductPipeline {
   }
 
   /** Stage 6 — load_aggregate.py:90-107: the day's snapshot of
-    * DIM_PRODUCT, upserted into AGGREGATE keyed (PRODUCT_SK, DATE_SK) by
-    * the caller.
+    * DIM_PRODUCT, one row per product stamped with `dateSk`. `DailyRun`
+    * writes it over the aggregate's `DATE_SK = dateSk` partition: the
+    * reference's upsert keyed (PRODUCT_SK, DATE_SK), because the snapshot
+    * holds every product key the partition can hold.
     */
   def aggregateSnapshot(
       dimProduct: DataFrame, dateSk: Int, calendarYear: Int, calendarMonth: Int): DataFrame =

@@ -167,17 +167,12 @@ object Zones {
     * executor loss, and the zone is never in a deleted-but-not-rewritten
     * state longer than one rename (atomic on HDFS-like filesystems).
     */
-  def overwriteSwap(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit =
-    overwriteSwap(df, path, partitionBy, Map.empty[String, String])
-
-  def overwriteSwap(
-      df: DataFrame, path: String, partitionBy: Seq[String],
-      writerOptions: Map[String, String]): Unit = {
+  def overwriteSwap(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
     // a crashed previous swap may have left the zone's ONLY copy in the
     // tmp dir (window between delete and rename) — complete it BEFORE
     // stage() would clear the tmp dir and destroy that sole copy
     recoverSwap(df.sparkSession, path)
-    stage(df, path, partitionBy, writerOptions)
+    stage(df, path, partitionBy)
     commitSwap(df.sparkSession, path)
   }
 
@@ -188,42 +183,8 @@ object Zones {
     */
   def overwriteSwapAll(writes: Seq[(DataFrame, String)]): Unit = {
     writes.foreach { case (df, p) => recoverSwap(df.sparkSession, p) }
-    writes.foreach { case (df, p) => stage(df, p, Nil, Map.empty) }
+    writes.foreach { case (df, p) => stage(df, p, Nil) }
     writes.foreach { case (df, p) => commitSwap(df.sparkSession, p) }
-  }
-
-  /** Compact a zone's small files: rewrite each partition (or the whole
-    * unpartitioned zone) into ⌈rows / targetRowsPerFile⌉ files via the
-    * staged atomic swap. Daily upserts accrete one-file-per-batch
-    * fragments; at warehouse scale the resulting tiny-file scans are
-    * task-scheduling-bound, not IO-bound — periodic compaction is the
-    * standard fix. Content is untouched: same rows, fewer files, and the
-    * swap keeps the zone readable for the whole rewrite.
-    *
-    * Partition columns are re-derived from the directory layout by the
-    * read, so a partitioned zone keeps its layout (`partitionBy` lists
-    * the same columns the writes used).
-    */
-  def compact(
-      spark: SparkSession,
-      path: String,
-      targetRowsPerFile: Long,
-      partitionBy: Seq[String] = Nil): Unit = {
-    val current = spark.read.parquet(path)
-    val n = current.count()
-    val files = math.max(1, math.ceil(n.toDouble / targetRowsPerFile).toInt)
-    val compacted =
-      if (partitionBy.nonEmpty)
-        // spread within each partition; the dynamic write re-splits by dir
-        current.repartition(files, partitionBy.map(org.apache.spark.sql.functions.col): _*)
-      else current.repartition(files)
-    // maxRecordsPerFile backstops the partitioned case: repartition on
-    // the partition cols hashes EVERY row of one partition value into a
-    // single task, which alone would write one giant file per partition
-    // (a straggler + a file far over target) — the writer-side split
-    // restores the ⌈rows / targetRowsPerFile⌉ contract per directory
-    overwriteSwap(compacted, path, partitionBy,
-      Map("maxRecordsPerFile" -> targetRowsPerFile.toString))
   }
 
   /** Register `path` as an external BUCKETED (and optionally partitioned)
@@ -408,14 +369,12 @@ object Zones {
     "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
     "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
 
-  private def stage(
-      df: DataFrame, path: String, partitionBy: Seq[String],
-      writerOptions: Map[String, String]): Unit = {
+  private def stage(df: DataFrame, path: String, partitionBy: Seq[String]): Unit = {
     // mode=overwrite also clears a leftover tmp dir from a crashed run
     // (a crashed SWAP's tmp — the one holding the zone's only copy — was
     // already completed by recoverSwap before this runs; a tmp without
     // _SUCCESS is a crashed STAGE, safe to clear)
-    val w = df.write.mode("overwrite").options(writerOptions)
+    val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path + TmpSuffix)
   }
@@ -428,9 +387,8 @@ object Zones {
       throw new java.io.IOException(s"swap rename failed for $path")
     // the rename happened at the filesystem level, behind Spark's back:
     // drop cached file listings/relations for the path or a later read in
-    // the same session can resolve to the replaced (deleted) files —
-    // surfaced by DailyRunScaleSpec once compaction re-read and re-swapped
-    // the same zone within one session
+    // the same session can resolve to the replaced (deleted) files when
+    // one session reads and re-swaps the same zone
     spark.catalog.refreshByPath(path)
   }
 
@@ -575,13 +533,4 @@ object Zones {
     }
     (spark.read.parquet(path), bad)
   }
-
-  /** Schema-evolving zone read: merges the footer schemas of every file,
-    * so batches appended after a column was added read back as one frame
-    * (old files yield null for the new column). Default reads take one
-    * file's schema — cheap but wrong mid-evolution; merging pays one
-    * footer scan per file, so reserve it for zones that actually evolve.
-    */
-  def readMerged(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
 }

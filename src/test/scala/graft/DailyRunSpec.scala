@@ -11,15 +11,21 @@ import graft.sources.Zones
   */
 class DailyRunSpec extends SparkSpec {
 
-  /** [[DailyRun.run]], asserting that the night leaves no cached plan in
-    * the session (a cache left per night is heap that grows with the
-    * nights). Caches other suites left in this JVM are cleared first, so
-    * the assert sees this night alone.
+  /** [[DailyRun.run]], asserting that the night leaves the session as it
+    * found it: no cached plan (a cache left per night is heap that grows
+    * with the nights), the same session confs and no new catalog table.
+    * Caches other suites left in this JVM are cleared first, so the assert
+    * sees this night alone.
     */
   private def runNight(landing: String, wh: String, runTs: String): String = {
     spark.catalog.clearCache()
+    val confs = spark.conf.getAll
+    def tables() = spark.catalog.listTables().collect().map(_.name).toSet
+    val tablesBefore = tables()
     val outcome = DailyRun.run(spark, landing, wh, runTs)
     assert(spark.sharedState.cacheManager.isEmpty, s"the night of $runTs left cached plans")
+    assert(spark.conf.getAll == confs, s"the night of $runTs changed session confs")
+    assert(tables() -- tablesBefore == Set.empty, s"the night of $runTs registered tables")
     outcome
   }
 
@@ -56,18 +62,6 @@ class DailyRunSpec extends SparkSpec {
     assert(history2.filter(col("expired_at") === lit("2025-11-24 18:51:37").cast("timestamp_ntz")).count() > 0)
     val agg = Zones.read(spark, s"$wh/warehouse/aggregate")
     assert(agg.select("DATE_SK").distinct().count() == 2)
-    // the aggregate zone is a bucketed table: the day-2 merge-shape join
-    // and the star join on PRODUCT_SK must not shuffle the aggregate side
-    Sessions.withConfs(spark,
-        ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: Zones.BucketedMergeConfs: _*) {
-      val aggTable = spark.table(DailyRun.AggregateTable)
-      val dim = Zones.read(spark, s"$wh/warehouse/dim_product").select("PRODUCT_SK")
-      assertZoneSideUnshuffled(aggTable.join(dim, "PRODUCT_SK"), "aggregate star join")
-      val merge = aggTable
-        .join(Zones.read(spark, s"$wh/warehouse/aggregate").select("PRODUCT_SK", "DATE_SK"),
-          Seq("PRODUCT_SK", "DATE_SK"), "left_anti")
-      assertZoneSideUnshuffled(merge, "aggregate upsert-shape join")
-    }
     // ledger carries both SUCCESS rows with the stats message
     val ledger = Zones.read(spark, s"$wh/control/process_log")
     assert(ledger.filter(col("status") === "SUCCESS").count() == 2)
@@ -168,6 +162,53 @@ class DailyRunSpec extends SparkSpec {
     val sk = Zones.read(spark, s"$wh/warehouse/aggregate").agg(max("DATE_SK")).head().getInt(0)
     assert(census(s"$dailyPath/DATE_SK=${sk - 1}") == closed("daily"))
     assert(census(s"$quarterlyPath/CALENDAR_YEAR=2025/QUARTER_NAME=QQ3") == closed("quarterly"))
+  }
+
+  test("tonight's aggregate partition replace ≡ the reference's upsert on a FAILED-day rerun") {
+    import graft.operators.Upsert
+    import graft.pipeline.ProductPipeline
+    val wh = tempDir("graft_wh_rerun")
+    val landing = tempDir("graft_landing_rerun")
+    val aggPath = s"$wh/warehouse/aggregate"
+    fixture("products_general").write.mode("overwrite").parquet(s"$landing/night1")
+    assert(runNight(s"$landing/night1", wh, "2025-11-23 18:51:37") == "SUCCESS")
+    val sk = Zones.read(spark, aggPath).agg(max("DATE_SK")).head().getInt(0)
+    // night 1's partition, held in memory: the rerun replaces its files
+    val night1 = spark.createDataFrame(
+      java.util.List.of(Zones.read(spark, aggPath).filter(col("DATE_SK") === sk).collect(): _*),
+      Zones.read(spark, aggPath).schema)
+
+    // night 1 is found to have failed after all: its ledger row becomes
+    // FAILED, and the same day reruns on a landing that drops some
+    // products and re-prices others
+    val ledgerPath = s"$wh/control/process_log"
+    val mangled = Zones.read(spark, ledgerPath).withColumn("status",
+      when(col("status") === "SUCCESS", "FAILED").otherwise(col("status")))
+    Zones.overwriteSwap(mangled, ledgerPath)
+    fixture("products_general")
+      .filter(col("ID") % 10 =!= 0)
+      .withColumn("GIA_MOI",
+        when(col("ID") % 7 === 0, concat((col("ID") * 1000).cast("string"), lit("đ")))
+          .otherwise(col("GIA_MOI")))
+      .write.mode("overwrite").parquet(s"$landing/rerun")
+    assert(runNight(s"$landing/rerun", wh, "2025-11-23 21:00:00") == "SUCCESS")
+
+    val dimDate = Zones.read(spark, s"$wh/warehouse/dim_date")
+    val date = dimDate.filter(col("DATE_SK") === sk).head()
+    val snapshot = ProductPipeline.aggregateSnapshot(
+      Zones.read(spark, s"$wh/warehouse/dim_product"), sk,
+      date.getAs[Int]("CALENDAR_YEAR"), date.getAs[Int]("INT_MONTH"))
+    val replaced = Zones.read(spark, aggPath)
+    assert(replaced.select("DATE_SK").distinct().collect().map(_.getInt(0)).toSeq == Seq(sk))
+    assert(replaced.count() == night1.count(), "the rerun lost night-1 products")
+    assertSameRows(replaced, Upsert.upsert(night1, snapshot, Seq("PRODUCT_SK", "DATE_SK")),
+      "replaced partition vs upsert of the rerun snapshot")
+    assert(replaced.join(night1, Seq("PRODUCT_SK", "MIN_PRICE", "MAX_PRICE"), "left_anti")
+      .count() > 0, "the rerun re-priced no product")
+    assertSameRows(Zones.read(spark, s"$wh/datamart/dm_product_daily_price"),
+      ProductPipeline.datamartDaily(replaced), "daily datamart after the rerun")
+    assertSameRows(Zones.read(spark, s"$wh/datamart/dm_product_quarterly_trend"),
+      ProductPipeline.datamartQuarterly(replaced, dimDate), "quarterly datamart after the rerun")
   }
 
   test("a stale RUNNING row (hard-killed driver) stops blocking after StaleRunningHours") {

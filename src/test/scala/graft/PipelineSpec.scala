@@ -101,6 +101,24 @@ class PipelineSpec extends SparkSpec {
     assert(daily.select("DATE_SK").distinct().count() == 2)
   }
 
+  test("surrogate keys: existing SKs kept, new keys continue from the max in natural-key order") {
+    import spark.implicits._
+    import graft.operators.SurrogateKeys
+    val empty = Seq.empty[(Long, String)].toDF("sk", "name")
+    val round1 = SurrogateKeys.ensureKeys(empty, Seq("b", "d", "f", "d").toDF("name"),
+      Seq("name"), "sk")
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(r.fieldIndex("name")) -> r.getLong(r.fieldIndex("sk"))).toMap
+    assert(keys(round1) == Map("b" -> 1L, "d" -> 2L, "f" -> 3L))
+    // round 2: new names sort before, between and after the existing ones
+    val round2 = SurrogateKeys.ensureKeys(round1, Seq("a", "c", "d", "e", "g", "a").toDF("name"),
+      Seq("name"), "sk")
+    assert(round2.count() == 7, "one row per natural key")
+    assert(keys(round2) == Map(
+      "b" -> 1L, "d" -> 2L, "f" -> 3L,
+      "a" -> 4L, "c" -> 5L, "e" -> 6L, "g" -> 7L))
+  }
+
   /** Stage 6 over in-memory frames: the day's snapshot upserted into the
     * aggregate keyed (PRODUCT_SK, DATE_SK).
     */

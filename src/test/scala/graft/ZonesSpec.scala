@@ -122,33 +122,6 @@ class ZonesSpec extends SparkSpec {
     assert(planned.count() == 1)
   }
 
-  test("compact collapses accreted small files without changing content") {
-    import spark.implicits._
-    val path = tempDir("zone_compact") + "/t"
-
-    // accrete 5 tiny single-row writes → ≥5 fragment files
-    (1 to 5).foreach { d =>
-      Zones.upsertPartitioned(spark, path,
-        Seq((d.toLong, 100, d * 1.0)).toDF("product_sk", "date_sk", "price"),
-        Seq("product_sk", "date_sk"), "date_sk")
-    }
-    def parquetFiles() = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(path)).filter(_.getName.endsWith(".parquet"))
-    }
-    val before = Zones.read(spark, path).orderBy("product_sk")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
-    assert(parquetFiles().size >= 5)
-
-    Zones.compact(spark, path, targetRowsPerFile = 100, partitionBy = Seq("date_sk"))
-
-    val after = Zones.read(spark, path).orderBy("product_sk")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
-    assert(after == before, "compaction changed zone content")
-    assert(parquetFiles().size < 5, s"still ${parquetFiles().size} files after compaction")
-  }
-
   test("readRobust quarantines truncated parquet files; loss reported, never silent") {
     val path = tempDir("zone_corrupt") + "/t"
     spark.range(1000).withColumn("v", org.apache.spark.sql.functions.col("id") * 2)
@@ -264,18 +237,5 @@ class ZonesSpec extends SparkSpec {
     val e = intercept[IllegalStateException] { Zones.readRobust(spark, path) }
     assert(e.getMessage.contains("quarantined") && e.getMessage.contains(path),
       s"all-corrupt read must name the quarantine: ${e.getMessage}")
-  }
-
-  test("readMerged unifies evolved schemas across appended batches") {
-    import spark.implicits._
-    val path = tempDir("zone_evolve") + "/t"
-    Seq((1L, 10.0)).toDF("product_sk", "price").write.parquet(path)
-    Seq((2L, 20.0, "VN")).toDF("product_sk", "price", "market")
-      .write.mode("append").parquet(path)
-    val merged = Zones.readMerged(spark, path)
-    assert(merged.columns.toSet == Set("product_sk", "price", "market"))
-    val rows = merged.orderBy("product_sk").collect()
-    assert(rows(0).isNullAt(rows(0).fieldIndex("market")), "old batch → null new column")
-    assert(rows(1).getString(rows(1).fieldIndex("market")) == "VN")
   }
 }
