@@ -143,7 +143,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus
     // min-of-N per query: the host is shared (driver-side sbt/spark jobs
     // contend for the same cores), so single runs are ±2× noisy — the min
     // is the reproducible number regressions can be attributed against

@@ -10,7 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = Sessions.builder("graft-explain", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Sessions.builder("graft-explain", Sessions.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>

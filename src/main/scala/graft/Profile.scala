@@ -22,7 +22,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val spark = Sessions.builder("graft-profile", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.builder("graft-profile", Sessions.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -24,7 +24,7 @@ object ScaleDiag {
     val Array(genDir, workDir) = args.take(2)
     val BaseStride = ScaleProbe.readGenMeta(genDir).idStride
     val spark = Sessions
-      .builder("graft-scalediag", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .builder("graft-scalediag", Sessions.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (args.length > 2 && args(2) == "e3ab") { e3GeometryAB(spark, genDir, workDir); return }

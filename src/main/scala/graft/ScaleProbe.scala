@@ -114,7 +114,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(genDir, workDir) = args.take(2)
     val spark = Sessions
-      .builder("graft-scaleprobe", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .builder("graft-scaleprobe", Sessions.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // leg-by-leg resumption (SPARK_GRAFT_PROBE_SKIP non-empty) keeps the

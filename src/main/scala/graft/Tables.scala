@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedSessions
 import org.apache.spark.sql.types.LongType
 
 /** Parquet-backed zone access for the driver-provided star schema
@@ -90,35 +91,27 @@ object Sessions {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       .config("spark.sql.extensions", "graft.GraftExtensions")
 
-  /** Run `body` with `pins` set on the session's conf, then restore each
-    * pinned key (LIFO) to its prior explicit value, or unset it if it had
-    * none. `getAll` holds explicit settings only; `getOption` would
-    * return the registered default and leave the key set afterwards.
-    *
-    * This is the only place graft changes a session conf. Session confs
-    * are shared by every thread of the session, so scopes are serialized
-    * JVM-wide on one reentrant monitor held for the whole of `body`: two
-    * scopes on different threads never interleave their save and
-    * restore (one would capture the other's pins as "prior"), and
-    * same-thread nesting stays legal. The monitor does not isolate
-    * queries planned OUTSIDE any scope: one planned on another thread
-    * while `body` runs still sees the pins. No pins, no scope.
+  /** Run `body` in a clone of `spark` with `pins` set on the clone's
+    * conf; `spark` itself is never changed. The clone starts from the
+    * caller's runtime confs (so scopes nest) and shares its cache
+    * manager, catalog and execution listeners, so there is no shared
+    * state to guard: scopes on different threads run at once, and a
+    * query planned on `spark` meanwhile sees its own confs. `body` plans
+    * on the session it is given (`ScopedSessions.bind` moves a caller's
+    * frame onto it); a frame handed back for further planning is bound
+    * back to the caller. This is the only place graft changes a session
+    * conf. No pins, no clone.
     */
-  def withConfs[T](spark: SparkSession, pins: (String, String)*)(body: => T): T =
-    if (pins.isEmpty) body
-    else ConfScope.synchronized {
-      def put(kv: (String, Option[String])): Unit = kv match {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      val explicit = spark.conf.getAll
-      val prior = pins.map { case (k, _) => k -> explicit.get(k) }
-      pins.foreach { case (k, v) => put(k -> Some(v)) }
-      try body
-      finally prior.reverse.foreach(put)
+  def withConfs[T](spark: SparkSession, pins: (String, String)*)(body: SparkSession => T): T =
+    if (pins.isEmpty) body(spark)
+    else {
+      val scoped = ScopedSessions.cloneOf(spark)
+      pins.foreach { case (k, v) => scoped.conf.set(k, v) }
+      body(scoped)
     }
 
-  private object ConfScope
+  /** Local cores for a graft session: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   /** Partition count for `bytes` of data at a 64 MB target: one partition
     * per started 64 MB, at least one. The data-derived width of graft's

@@ -9,7 +9,7 @@ object Verify {
     // optional extra args: run only the named queries (local iteration aid;
     // the driver always passes exactly two args → full run).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus
     val spark = Sessions.builder("graft-verify", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedSessions
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Sessions
@@ -285,9 +286,11 @@ object Clustering {
     // cardinality is ≤ k by construction at ANY corpus size — but its
     // per-exchange stage materialization adds a driver barrier per round
     // (measured ~0.4 s over 2 rounds at sf0.1).
+    // The loop runs in a scoped session; the result comes back bound to
+    // the caller, so downstream plans keep the caller's confs.
     val spark = vecs.sparkSession
-    Sessions.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
-      val base = vecs.select(col(idCol), col(vecCol)).cache()
+    Sessions.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") { noAqe =>
+      val base = ScopedSessions.bind(vecs, noAqe).select(col(idCol), col(vecCol)).cache()
       val dim = base.select(size(col(vecCol))).head().getInt(0)
       // on the FUSED route every exchange inside the loop is the centroid
       // aggregation — ≤ k rows of k·dim decimal sums by construction at
@@ -301,11 +304,12 @@ object Clustering {
         if (k < kernelFrom) Nil
         else Seq("spark.sql.shuffle.partitions" ->
           Sessions.partitionsFor(k.toLong * dim * 24).toString)
-      Sessions.withConfs(spark, loopPins: _*) {
+      Sessions.withConfs(noAqe, loopPins: _*) { loop =>
+        val loopBase = ScopedSessions.bind(base, loop)
         val outCols =
           if (keepVector) Seq(col(idCol), col(vecCol), col("cluster"), col("dist"))
           else Seq(col(idCol), col("cluster"), col("dist"))
-        var assigned = base.withColumn("cluster", col(idCol) % k)
+        var assigned = loopBase.withColumn("cluster", col(idCol) % k)
         var result: DataFrame = assigned.withColumn("dist", lit(0.0)).select(outCols: _*)
         for (_ <- 1 to iters) {
           val cents = centroids(assigned, vecCol, "cluster", dim)
@@ -313,8 +317,8 @@ object Clustering {
           // round's centroid recompute reads it directly — no per-round
           // re-join against `base` (one shuffle saved per iteration)
           val keep =
-            if (k >= kernelFrom) assignFusedKeep(base, idCol, vecCol, cents)
-            else assignKeep(base, idCol, vecCol, cents)
+            if (k >= kernelFrom) assignFusedKeep(loopBase, idCol, vecCol, cents)
+            else assignKeep(loopBase, idCol, vecCol, cents)
           result = keep.select(outCols: _*)
           assigned = keep.select(col(idCol), col(vecCol), col("cluster"))
         }
@@ -323,7 +327,7 @@ object Clustering {
         // past the operator
         val out = result.localCheckpoint()
         base.unpersist()
-        out
+        ScopedSessions.bind(out, spark)
       }
     }
   }

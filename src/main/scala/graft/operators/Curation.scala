@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedSessions
 
 import graft.Sessions
 
@@ -649,11 +650,12 @@ object Curation {
     // shuffle). Edge count from the cache (already materialized by the
     // node count's scan), so a dense small-node graph still keeps enough
     // partitions for its edge volume. Above the cut nothing changes.
-    val (e, nodes) =
+    val (eIn, nodesIn) =
       if (n > SmallGraphNodes) (eRaw, nodesRaw)
       else (coalesceSmall(eRaw, eRaw.count()), coalesceSmall(nodesRaw, n))
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).cache()
-    Sessions.withConfs(edges.sparkSession, loopConfs(n): _*) {
+    val outdegIn = eIn.groupBy("src").agg(count(lit(1)).as("outdeg")).cache()
+    Sessions.withConfs(edges.sparkSession, loopConfs(n): _*) { loop =>
+      val Seq(e, nodes, outdeg) = Seq(eIn, nodesIn, outdegIn).map(ScopedSessions.bind(_, loop))
       var ranks = nodes.select(col("node"), (lit(1.0) / n).as("rank"))
       for (_ <- 1 to iters) {
         val contribs = e
@@ -671,8 +673,8 @@ object Curation {
       }
       eRaw.unpersist()
       nodesRaw.unpersist()
-      outdeg.unpersist()
-      ranks
+      outdegIn.unpersist()
+      ScopedSessions.bind(ranks, edges.sparkSession)
     }
   }
 
@@ -708,6 +710,9 @@ object Curation {
     * task scheduling than on rank arithmetic (measured: 32-128 task
     * stages per round on kilobyte frames, 0.3-0.8 s/round of pure
     * overhead).
+    *
+    * The pins hold in the loop's own scoped session only; the ranks come
+    * back bound to the caller, whose downstream plans stay adaptive.
     */
   private def loopConfs(nNodes: Long): Seq[(String, String)] =
     if (nNodes > SmallGraphNodes) Nil
@@ -753,11 +758,12 @@ object Curation {
     // one-row broadcast (data-dependent). Small-graph loop reads
     // coalesce to the data-derived width — the [[pageRankLite]] note.
     val n = nodesRaw.count()
-    val (e, nodes) =
+    val (eIn, nodesIn) =
       if (n > SmallGraphNodes) (eRaw, nodesRaw)
       else (coalesceSmall(eRaw, eRaw.count()), coalesceSmall(nodesRaw, n))
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).cache()
-    Sessions.withConfs(edges.sparkSession, loopConfs(n): _*) {
+    val outdegIn = eIn.groupBy("src").agg(count(lit(1)).as("outdeg")).cache()
+    Sessions.withConfs(edges.sparkSession, loopConfs(n): _*) { loop =>
+      val Seq(e, nodes, outdeg) = Seq(eIn, nodesIn, outdegIn).map(ScopedSessions.bind(_, loop))
       var ranks = nodes.select(col("node"), (lit(1.0) / n).as("rank"))
       for (_ <- 1 to iters) {
         val dangling = ranks
@@ -780,8 +786,8 @@ object Curation {
       }
       eRaw.unpersist()
       nodesRaw.unpersist()
-      outdeg.unpersist()
-      ranks
+      outdegIn.unpersist()
+      ScopedSessions.bind(ranks, edges.sparkSession)
     }
   }
 }

@@ -344,50 +344,41 @@ object Dedup {
       numHashes: Int,
       mode: String = "append"): Unit = {
     val geometry = Seq("shingle_n" -> n.toLong, "num_hashes" -> numHashes.toLong)
-    guardZoneGeometry(spark, path, mode, geometry)
+    val stored = storedGeometry(spark, path, mode)
+    guardZoneGeometry(path, stored, geometry)
     val idx = signatureIndex(df, idCol, textCol, n, numHashes).cache()
     // file count from the batch's ROW count, not its partition count
     // (Zones.sizedForWrite): a small increment otherwise lands one
     // near-empty file per upstream partition, and every later probe of
     // the zone pays one scan task per file
     graft.sources.Zones.sizedForWrite(idx, idx.count()).write.mode(mode).parquet(path)
-    recordZoneGeometry(spark, path, geometry)
+    recordZoneGeometry(spark, path, stored, geometry)
     idx.unpersist()
     ()
   }
 
-  /** Verify an append's declared signature geometry against the zone's
-    * recorded one — the version-meta discipline of the IndexRun
-    * lifecycles, applied to the raw zone writers. "Rows written on
-    * different days are directly joinable" is only true when every day
-    * shingled/hashed/banded identically; without this guard a binary
-    * whose constants moved (or a caller passing a different seed) would
-    * append keys from DIFFERENT hash functions into one zone — every
-    * cross-day probe then silently under-matches, which no per-day gate
-    * can see. A zone predating the side-meta (or created by a bare
+  /** Verify a write's declared signature geometry against the zone's
+    * `stored` one ([[storedGeometry]]) — the version-meta discipline of
+    * the IndexRun lifecycles, applied to the raw zone writers. "Rows
+    * written on different days are directly joinable" is only true when
+    * every day shingled/hashed/banded identically; without this guard a
+    * binary whose constants moved (or a caller passing a different seed)
+    * would append keys from DIFFERENT hash functions into one zone —
+    * every cross-day probe then silently under-matches, which no per-day
+    * gate can see. A zone predating the side-meta (or created by a bare
     * parquet write) verifies vacuously and is adopted by the next
     * append's [[recordZoneGeometry]]; an `overwrite` starts a fresh
-    * contract by definition.
+    * contract by definition (its stored geometry is None).
     */
   private[graft] def guardZoneGeometry(
-      spark: org.apache.spark.sql.SparkSession,
       path: String,
-      mode: String,
+      stored: Option[Map[String, Long]],
       fields: Seq[(String, Long)],
       subject: String = "signature zone"): Unit = {
-    import graft.sources.Zones
-    if (mode == "overwrite") return
-    val metaPath = s"$path/_geometry"
-    if (!Zones.exists(spark, metaPath)) return
-    val stored = Zones.read(spark, metaPath).head()
-    val clashes = fields.flatMap { case (name, want) =>
-      // a field the stored meta predates can't clash — adopt, don't refuse
-      if (!stored.schema.fieldNames.contains(name)) None
-      else {
-        val have = stored.getAs[Long](name)
-        if (have != want) Some(s"$name: zone has $have, append supplies $want")
-        else None
-      }
+    val have = stored.getOrElse(Map.empty)
+    // a field the stored meta predates can't clash — adopt, don't refuse
+    val clashes = fields.collect { case (name, want) if have.get(name).exists(_ != want) =>
+      s"$name: zone has ${have(name)}, append supplies $want"
     }
     require(clashes.isEmpty,
       s"$subject at $path was written under a different geometry — " +
@@ -397,30 +388,30 @@ object Dedup {
   /** Record (or refresh) the zone's geometry side-meta — see
     * [[guardZoneGeometry]]. Underscore-prefixed, so invisible to the
     * zone's parquet readers (Spark skips `_`-named paths). Unioned with
-    * any stored fields, so a writer recording fewer fields keeps the
+    * the `stored` fields, so a writer recording fewer fields keeps the
     * others.
     */
   private[graft] def recordZoneGeometry(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
+      stored: Option[Map[String, Long]],
       fields: Seq[(String, Long)]): Unit = {
-    import graft.sources.Zones
-    val metaPath = s"$path/_geometry"
-    val stored: Seq[(String, Long)] =
-      if (!Zones.exists(spark, metaPath)) Nil
-      else {
-        val row = Zones.read(spark, metaPath).head()
-        row.schema.fieldNames.toSeq.map(f => f -> row.getAs[Long](f))
-      }
-    val merged = (stored.toMap ++ fields.toMap).toSeq.sortBy(_._1)
+    val merged = (stored.getOrElse(Map.empty) ++ fields).toSeq.sortBy(_._1)
     val out = spark.createDataFrame(
       java.util.Collections.singletonList(
         org.apache.spark.sql.Row.fromSeq(merged.map(_._2))),
       org.apache.spark.sql.types.StructType(merged.map { case (nm, _) =>
-        org.apache.spark.sql.types.StructField(nm, org.apache.spark.sql.types.LongType)
+        org.apache.spark.sql.types.StructField(nm, LongType)
       }))
-    Zones.overwriteSwap(out, metaPath)
+    graft.sources.Zones.overwriteSwap(out, s"$path/_geometry")
   }
+
+  /** The geometry a write in `mode` must agree with and extend: None for
+    * an overwrite, which replaces the side-meta with the zone.
+    */
+  private def storedGeometry(
+      spark: org.apache.spark.sql.SparkSession, path: String, mode: String): Option[Map[String, Long]] =
+    if (mode == "overwrite") None else readZoneGeometry(spark, path)
 
   def readSignatureIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -1381,6 +1372,8 @@ object Dedup {
 
   /** The zone's recorded `_geometry` side-meta as (field → value), or
     * None for a zone predating the side-meta (or a bare parquet dir).
+    * Read under [[GeometryFields]] as a fixed LONG schema, so no
+    * schema-inference job; a NULL is a field the writer did not record.
     * Public so probes/diagnostics can key themselves under what a zone
     * was BUILT with instead of assuming this binary's defaults.
     */
@@ -1390,10 +1383,16 @@ object Dedup {
     val metaPath = s"$path/_geometry"
     if (!Zones.exists(spark, metaPath)) None
     else {
-      val row = Zones.read(spark, metaPath).head()
-      Some(row.schema.fieldNames.map(f => f -> row.getAs[Long](f)).toMap)
+      val schema = org.apache.spark.sql.types.StructType(
+        GeometryFields.map(org.apache.spark.sql.types.StructField(_, LongType)))
+      val row = Zones.read(spark, metaPath, schema).head()
+      Some(GeometryFields.indices.filterNot(row.isNullAt).map(i => GeometryFields(i) -> row.getLong(i)).toMap)
     }
   }
+
+  /** Every field a graft writer records in a zone's `_geometry`. */
+  private val GeometryFields =
+    Seq("shingle_n", "num_hashes", "bands", "bits_per_band", "seed", "dim")
 
   /** The computation leg of [[writeEmbeddingSignatureIndex]]: a batch's
     * (id, v[, carryCols…], bkeys) rows, for writers that manage their
@@ -1505,22 +1504,22 @@ object Dedup {
       bitsPerBand: Int = AutoGeometry,
       seed: Long = 42L,
       mode: String = "append"): Unit = {
-    val stored =
-      if (bands == AutoGeometry && mode != "overwrite")
-        readZoneGeometry(spark, path)
-          .flatMap(g => g.get("bands").zip(g.get("bits_per_band")))
-          .map { case (gb, gr) => (gb.toInt, gr.toInt) }
-      else None
+    val stored = storedGeometry(spark, path, mode)
     // auto on a fresh zone/overwrite resolves INSIDE the row derivation,
     // from the same count/dim aggregation it already pays — no separate
     // sizing scan of the batch
-    val (b0, r0) = stored.getOrElse((bands, bitsPerBand))
-    writeEmbeddingSignatureIndexAt(spark, path, df, idCol, vecCol, b0, r0, seed, mode)
+    val (b0, r0) = stored
+      .filter(_ => bands == AutoGeometry)
+      .flatMap(g => g.get("bands").zip(g.get("bits_per_band")))
+      .map { case (gb, gr) => (gb.toInt, gr.toInt) }
+      .getOrElse((bands, bitsPerBand))
+    writeEmbeddingSignatureIndexAt(spark, path, df, idCol, vecCol, b0, r0, seed, mode, stored)
   }
 
   /** [[writeEmbeddingSignatureIndex]] with the geometry resolved from
-    * the zone where stored ([[AutoGeometry]] reaching here means "size
-    * from this batch inside the derivation's own aggregation").
+    * the zone's `stored` one where present ([[AutoGeometry]] reaching
+    * here means "size from this batch inside the derivation's own
+    * aggregation").
     */
   private def writeEmbeddingSignatureIndexAt(
       spark: org.apache.spark.sql.SparkSession,
@@ -1531,7 +1530,8 @@ object Dedup {
       bands: Int,
       bitsPerBand: Int,
       seed: Long,
-      mode: String): Unit = {
+      mode: String,
+      stored: Option[Map[String, Long]]): Unit = {
     // ONE owner of the select/dim-lookup/hyperplane/band-key derivation:
     // [[embeddingSignatureRowsStats]] — re-implementing it here would let
     // the key geometry silently desynchronize from IndexRun's sigStage
@@ -1545,12 +1545,12 @@ object Dedup {
       "bands" -> sig.bands.toLong, "bits_per_band" -> sig.bitsPerBand.toLong,
       "seed" -> seed,
       "dim" -> sig.dim.toLong)
-    guardZoneGeometry(spark, path, mode, geometry)
+    guardZoneGeometry(path, stored, geometry)
     // row-count-sized file count (Zones.sizedForWrite — the
     // writeSignatureIndex rationale); sig.n rode out of the derivation's
     // own stats aggregation, so the sizing costs no extra scan
     graft.sources.Zones.sizedForWrite(sig.rows, sig.n).write.mode(mode).parquet(path)
-    recordZoneGeometry(spark, path, geometry)
+    recordZoneGeometry(spark, path, stored, geometry)
   }
 
   def readEmbeddingSignatureIndex(

@@ -388,12 +388,9 @@ object SimilaritySearch {
     val m = assigned
       .agg(count(lit(1)), avg(assignmentDist2(centroids))).head()
     val (nInc, incMean) = (m.getLong(0), if (m.isNullAt(1)) 0.0 else m.getDouble(1))
-    assigned.withColumn("ingest_day", lit(ingestDay))
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "ingest_day")
-      .parquet(s"$path/assignments")
+    Zones.replacePartitions(
+      assigned.withColumn("ingest_day", lit(ingestDay)).repartition(col("cell")),
+      s"$path/assignments", Seq("cell", "ingest_day"))
     val baseline =
       if (Zones.exists(spark, s"$path/meta/_SUCCESS"))
         spark.read.parquet(s"$path/meta").select("mean_dist2").head().getDouble(0)

@@ -196,20 +196,9 @@ object CorpusRun {
     }
   }
 
-  /** Rewrite exactly the `ingest_day` partitions present in `df`
-    * (dynamic partition overwrite, writer-scoped option) — the
-    * idempotent per-day publish primitive: closed days untouched, a
-    * retried day replaces its own partial leftovers.
-    */
-  private def dayOverwrite(df: DataFrame, path: String): Unit =
-    df.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_day")
-      .parquet(path)
-
-  /** [[dayOverwrite]] that ENFORCES the day's ownership of its partition
-    * even when the day's result is EMPTY: dynamic overwrite of an empty
+  /** The per-day publish ([[Zones.replacePartitions]] on `ingest_day`)
+    * that ENFORCES the day's ownership of its partition even when the
+    * day's result is EMPTY: dynamic overwrite of an empty
     * frame rewrites nothing, so a retry whose result shrank to zero rows
     * (feed replaced, files quarantined on attempt 1) would leave the
     * failed attempt's non-empty leftovers published under a 'published 0'
@@ -224,7 +213,7 @@ object CorpusRun {
         Zones.delete(spark, dir)
         spark.catalog.refreshByPath(path)
       }
-    } else dayOverwrite(df, path)
+    } else Zones.replacePartitions(df, path, Seq("ingest_day"))
 
   private def runStages(
       spark: SparkSession,
@@ -256,9 +245,9 @@ object CorpusRun {
     val geometry = Seq(
       "shingle_n" -> ShingleN.toLong, "num_hashes" -> NumHashes.toLong,
       "bands" -> Bands.toLong)
-    Dedup.guardZoneGeometry(spark, s"$whDir/corpus", "append", geometry,
-      subject = "corpus warehouse")
-    Dedup.recordZoneGeometry(spark, s"$whDir/corpus", geometry)
+    val stored = Dedup.readZoneGeometry(spark, s"$whDir/corpus")
+    Dedup.guardZoneGeometry(s"$whDir/corpus", stored, geometry, subject = "corpus warehouse")
+    Dedup.recordZoneGeometry(spark, s"$whDir/corpus", stored, geometry)
 
     // A day whose MONTH has already been folded cannot be (re)run: its
     // prior-days probe filter (`ingest_day < runDate`) would admit the
@@ -432,13 +421,13 @@ object CorpusRun {
             !cntDays.exists(d => d.length == 10 && d.startsWith(m))
       }.toSeq
       if (missing.nonEmpty)
-        dayOverwrite(
+        Zones.replacePartitions(
           Dedup.signatureBucketCountsBy(
             Dedup.readSignatureIndex(spark, sigPath)
               .withColumn("ingest_day", col("ingest_day").cast("string"))
               .filter(col("ingest_day").isin(missing: _*)),
             NumHashes, Bands, "ingest_day"),
-          sigCountsPath)
+          sigCountsPath, Seq("ingest_day"))
     }
     val newPairs =
       (if (prior.isEmpty)
@@ -594,10 +583,10 @@ object CorpusRun {
                 .filter(col("ingest_day").isin(missing: _*))
               val zoneDim = zoneRows.select(size(col("v"))).limit(1).collect()
                 .headOption.map(_.getInt(0)).getOrElse(semDim)
-              dayOverwrite(
+              Zones.replacePartitions(
                 Clustering.centroidState(
                   zoneRows, "v", "cluster", zoneDim, carryCols = Seq("ingest_day")),
-                sp)
+                sp, Seq("ingest_day"))
             }
           case _ => ()
         }
@@ -978,7 +967,7 @@ object CorpusRun {
         if (!fs.rename(manifestTmp, manifestPath))
           throw new java.io.IOException(s"fold manifest rename failed: $manifestPath")
         // [2] month partitions overwritten FROM the staged files
-        dayOverwrite(spark.read.parquet(tmp), path)
+        Zones.replacePartitions(spark.read.parquet(tmp), path, Seq("ingest_day"))
         // [3] exactly the staged day dirs die; [4] stage cleared
         days.foreach(d =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$path/ingest_day=$d"), true))
@@ -1096,7 +1085,7 @@ object CorpusRun {
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
     val manifestPath = new org.apache.hadoop.fs.Path(s"$tmp/_DAYS")
     if (Zones.exists(spark, s"$tmp/_SUCCESS") && fs.exists(manifestPath)) {
-      dayOverwrite(spark.read.parquet(tmp), path)
+      Zones.replacePartitions(spark.read.parquet(tmp), path, Seq("ingest_day"))
       val stagedDays = {
         val in = fs.open(manifestPath)
         try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList

@@ -29,7 +29,7 @@ object DailyRun {
   def main(args: Array[String]): Unit = {
     val Array(landingDir, whDir, runTs) = args.take(3)
     val spark = Sessions
-      .builder("graft-daily", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .builder("graft-daily", Sessions.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val outcome = run(spark, landingDir, whDir, runTs)

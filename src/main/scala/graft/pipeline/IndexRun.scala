@@ -200,17 +200,6 @@ object IndexRun {
         .foreach(fs.delete(_, true))
   }
 
-  /** Day-scoped dynamic partition overwrite on ingest_day — the same
-    * idempotent publish primitive the corpus pipeline uses: closed days
-    * untouched, a retried day replaces its own leftovers.
-    */
-  private def dayOverwrite(df: org.apache.spark.sql.DataFrame, path: String): Unit =
-    df.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_day")
-      .parquet(path)
-
   /** (N, C): corpus size and bucket concentration, derived ENTIRELY from
     * the day-partitioned counts zone (Σ over bands of bucket sizes is
     * bands·N, so no index scan even for the denominator).
@@ -257,8 +246,8 @@ object IndexRun {
         rows, "id", "v", bands, bitsPerBand, seed, carryCols = Seq("ingest_day"))
       .localCheckpoint()
     val dim = keyed.agg(first(size(col("v")))).head().getInt(0)
-    dayOverwrite(keyed, s"$vPath/index")
-    dayOverwrite(sigCounts(keyed), s"$vPath/counts")
+    Zones.replacePartitions(keyed, s"$vPath/index", Seq("ingest_day"))
+    Zones.replacePartitions(sigCounts(keyed), s"$vPath/counts", Seq("ingest_day"))
     val (n, c) = sigConcentration(spark, vPath, bands)
     import spark.implicits._
     Seq((n, seed, bands, bitsPerBand, dim, c))
@@ -320,8 +309,8 @@ object IndexRun {
           require(incDim == idxDim,
             s"signature index at $live holds $idxDim-dim vectors; the increment is " +
               s"$incDim-dim — same seed, different hyperplanes. Rebuild, don't mix.")
-          dayOverwrite(keyed, s"$live/index")
-          dayOverwrite(sigCounts(keyed), s"$live/counts")
+          Zones.replacePartitions(keyed, s"$live/index", Seq("ingest_day"))
+          Zones.replacePartitions(sigCounts(keyed), s"$live/counts", Seq("ingest_day"))
         }
         val (n, c) = sigConcentration(spark, live, bands)
         // reference = max(baseline, random-hash floor): below 2^-r the
@@ -449,13 +438,13 @@ object IndexRun {
         val stateDays = CorpusRun.listIngestDays(spark, s"$live/state").toSet
         val missing = (assignDays -- stateDays).toSeq
         if (missing.nonEmpty)
-          dayOverwrite(
+          Zones.replacePartitions(
             Clustering.centroidState(
               spark.read.parquet(s"$live/assign")
                 .withColumn("ingest_day", col("ingest_day").cast("string"))
                 .filter(col("ingest_day").isin(missing: _*)),
               "v", "cluster", idxDim, carryCols = Seq("ingest_day")),
-            s"$live/state")
+            s"$live/state", Seq("ingest_day"))
         // prior-days state only: today's own retry leftovers must not
         // shift the centroids the day re-derives
         val priorState = spark.read.parquet(s"$live/state")
@@ -506,11 +495,11 @@ object IndexRun {
             .select(col("id"), col("cluster"))
             .join(keyed, Seq("id"))
             .localCheckpoint()
-          dayOverwrite(assigned, s"$live/assign")
-          dayOverwrite(
+          Zones.replacePartitions(assigned, s"$live/assign", Seq("ingest_day"))
+          Zones.replacePartitions(
             Clustering.centroidState(assigned, "v", "cluster", idxDim,
               carryCols = Seq("ingest_day")),
-            s"$live/state")
+            s"$live/state", Seq("ingest_day"))
         }
         // occupancy from the state zone: Σn / k — one kilobyte agg; the
         // re-cluster itself is the SHARED lifecycle ([[SemVersions]])
@@ -537,7 +526,7 @@ object IndexRun {
     }
     val Array(incrementDir, whDir, runTs) = args.take(3)
     val spark = Sessions
-      .builder("graft-index", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .builder("graft-index", Sessions.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val outcome = run(spark, incrementDir, whDir, runTs)

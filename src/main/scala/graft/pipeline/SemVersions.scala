@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Clustering
+import graft.sources.Zones
 
 /** The versioned semantic-cluster index lifecycle SHARED by the corpus
   * pipeline's semantic stage ([[CorpusRun]], zone
@@ -74,13 +75,6 @@ private[pipeline] object SemVersions {
   private def fsFor(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def dayOverwrite(df: DataFrame, path: String): Unit =
-    df.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_day")
-      .parquet(path)
-
   /** Materialize one version at `vPath` from labeled rows
     * `(id, cluster, v, ingest_day)`: geometry = per-label decimal-exact
     * means, frozen as the version's centroid artifact; the stored
@@ -103,11 +97,11 @@ private[pipeline] object SemVersions {
       .select(col("id"), col("cluster"))
       .join(labeled.select("id", "v", "ingest_day"), Seq("id"))
       .localCheckpoint()
-    dayOverwrite(relabeled, s"$vPath/assign")
-    dayOverwrite(
+    Zones.replacePartitions(relabeled, s"$vPath/assign", Seq("ingest_day"))
+    Zones.replacePartitions(
       Clustering.centroidState(
         relabeled, "v", "cluster", dim, carryCols = Seq("ingest_day")),
-      s"$vPath/state")
+      s"$vPath/state", Seq("ingest_day"))
     cents.write.mode("overwrite").parquet(s"$vPath/centroids")
     val n = relabeled.count()
     val k = cents.count().toInt

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ScopedSessions
 
 import graft.Sessions
 
@@ -261,6 +262,11 @@ object Zones {
     * staged as a bucketed stage table at `path.tmp`, then the touched
     * partition directories swap in (bucket file names carry the bucket id,
     * so a rename preserves the layout) and the catalog re-syncs.
+    *
+    * The merge plans and writes in a scoped session with
+    * [[BucketedMergeConfs]] pinned. The returned merge frame, for plan
+    * audits (the zone content it reads has since been swapped), stays
+    * bound to that session, so an audit plans it under the pins.
     */
   def upsertBucketed(
       spark: SparkSession,
@@ -272,42 +278,38 @@ object Zones {
       bucketCols: Seq[String],
       nBuckets: Int): DataFrame = {
     import org.apache.spark.sql.functions.col
+    // a crash between a swap's delete and rename left a partition's only
+    // copy in the stage dir: finish that swap before the stage is reused
+    swapStagedPartitions(spark, path, partitionCol)
     ensureBucketedTable(
       spark, name, path, increment.schema, bucketCols, nBuckets, Seq(partitionCol))
-    val merged =
-      if (!hasDataFiles(spark, path)) increment
-      else {
-        val current = spark.table(name)
-        // touched partition VALUES collect to the driver — O(#days in the
-        // increment), 1 for a daily run — and prune the scan STATICALLY
-        // (a semi join would need DPP, and under sort-merge would shuffle
-        // the zone side on the partition col, defeating the buckets).
-        // NULL handled explicitly: isin never matches NULL, which would
-        // exclude the zone's __HIVE_DEFAULT_PARTITION__ rows from the
-        // merge while the swap below still replaces that directory
-        val touchedVals = increment.select(col(partitionCol)).distinct()
-          .collect().map(_.get(0))
-        val nonNullVals = touchedVals.filter(_ != null)
-        val touchedCond = {
-          val base =
-            if (nonNullVals.nonEmpty) col(partitionCol).isin(nonNullVals: _*)
-            else org.apache.spark.sql.functions.lit(false)
-          if (touchedVals.exists(_ == null)) base || col(partitionCol).isNull
-          else base
-        }
-        val touchedCurrent = current.filter(touchedCond)
-        graft.operators.Upsert.upsert(touchedCurrent, increment, keys)
-      }
     val stageName = s"${name}__stage"
     spark.sql(s"DROP TABLE IF EXISTS `$stageName`")
-    Sessions.withConfs(spark, BucketedMergeConfs: _*) {
-      // pin the RETURNED audit frame's physical plan now, inside this
-      // scope: executedPlan is a lazy val, so materializing it here (plan
-      // construction only — nothing executes) fixes the zone-side
-      // no-shuffle shape under the pinned confs even if the caller's
-      // audit dereferences it after another thread has mutated the
-      // session confs
-      merged.queryExecution.executedPlan
+    Sessions.withConfs(spark, BucketedMergeConfs: _*) { s =>
+      val inc = ScopedSessions.bind(increment, s)
+      val merged =
+        if (!hasDataFiles(s, path)) inc
+        else {
+          // touched partition VALUES collect to the driver — O(#days in
+          // the increment), 1 for a daily run — and prune the scan
+          // STATICALLY (a semi join would need DPP, and under sort-merge
+          // would shuffle the zone side on the partition col, defeating
+          // the buckets). NULL handled explicitly: isin never matches
+          // NULL, which would exclude the zone's __HIVE_DEFAULT_PARTITION__
+          // rows from the merge while the swap below still replaces that
+          // directory
+          val touchedVals = inc.select(col(partitionCol)).distinct()
+            .collect().map(_.get(0))
+          val nonNullVals = touchedVals.filter(_ != null)
+          val touchedCond = {
+            val base =
+              if (nonNullVals.nonEmpty) col(partitionCol).isin(nonNullVals: _*)
+              else org.apache.spark.sql.functions.lit(false)
+            if (touchedVals.exists(_ == null)) base || col(partitionCol).isNull
+            else base
+          }
+          graft.operators.Upsert.upsert(s.table(name).filter(touchedCond), inc, keys)
+        }
       // distribute by the BUCKET key before the write: a bucketed write
       // runs one task per input partition, and AQE coalesces the small
       // merge plan to one task that then writes every (partition ×
@@ -324,31 +326,45 @@ object Zones {
         .sortBy(bucketCols.head, bucketCols.tail: _*)
         .option("path", path + TmpSuffix)
         .saveAsTable(stageName)
+      s.sql(s"DROP TABLE IF EXISTS `$stageName`") // external: files unaffected
+      swapStagedPartitions(s, path, partitionCol)
+      s.sql(s"ALTER TABLE `$name` RECOVER PARTITIONS")
+      // drop the file listings the merge plan cached, so the returned
+      // frame reads the swapped zone, and the caller's cached relation
+      s.catalog.refreshTable(name)
+      spark.catalog.refreshTable(name)
+      merged
     }
-    // swap ONLY the touched partition directories under the zone path
+  }
+
+  /** If a complete stage (`_SUCCESS`) sits in `<path>.__tmp__`, move each
+    * of its `partitionCol=` directories over the zone's partition, then
+    * drop the stage dir. The commit of [[upsertBucketed]] and its
+    * recovery: re-run after a crash at any point, it finishes the swap,
+    * since a moved partition is no longer staged and an unmoved one
+    * still is. A stage without `_SUCCESS` crashed while being written;
+    * the zone is intact and the next stage write clears it.
+    */
+  private def swapStagedPartitions(spark: SparkSession, path: String, partitionCol: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val tmpRoot = new org.apache.hadoop.fs.Path(path + TmpSuffix)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    fs.listStatus(tmpRoot).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(s"$partitionCol=")) {
-        val target = new org.apache.hadoop.fs.Path(path, st.getPath.getName)
-        fs.delete(target, true)
-        if (!fs.rename(st.getPath, target))
-          throw new java.io.IOException(s"bucketed swap rename failed for $target")
+    if (fs.exists(new org.apache.hadoop.fs.Path(tmpRoot, "_SUCCESS"))) {
+      fs.mkdirs(new org.apache.hadoop.fs.Path(path))
+      fs.listStatus(tmpRoot).foreach { st =>
+        if (st.isDirectory && st.getPath.getName.startsWith(s"$partitionCol=")) {
+          val target = new org.apache.hadoop.fs.Path(path, st.getPath.getName)
+          fs.delete(target, true)
+          if (!fs.rename(st.getPath, target))
+            throw new java.io.IOException(s"bucketed swap rename failed for $target")
+        }
       }
+      fs.delete(tmpRoot, true)
     }
-    spark.sql(s"DROP TABLE IF EXISTS `$stageName`") // external: files unaffected
-    fs.delete(tmpRoot, true)
-    spark.sql(s"ALTER TABLE `$name` RECOVER PARTITIONS")
-    spark.catalog.refreshTable(name)
-    // returned for plan audits ONLY (the zone side must join without an
-    // Exchange) — the zone content it reads has since been swapped
-    merged
   }
 
-  /** Session confs the bucketed merge join depends on, pinned for exactly
-    * the duration of a merge plan (write or audit):
+  /** Session confs the bucketed merge join depends on, pinned for the
+    * merge's plan and write (see [[upsertBucketed]]):
     *
     *  - `requireAllClusterKeysForCoPartition=false` — the merge keys
     *    extend the bucket cols (e.g. PRODUCT_SK + DATE_SK vs buckets on
@@ -360,10 +376,6 @@ object Zones {
     *    re-introduces an `Exchange` on the zone side nondeterministically.
     *    Disabling the heuristic inside this scope makes the
     *    zone-side-never-shuffles guarantee deterministic.
-    *
-    * Plan audits that derive a merge-shaped plan lazily (after
-    * [[upsertBucketed]] returned) mirror the write's scope with
-    * `Sessions.withConfs(spark, BucketedMergeConfs: _*)`.
     */
   val BucketedMergeConfs: Seq[(String, String)] = Seq(
     "spark.sql.requireAllClusterKeysForCoPartition" -> "false",

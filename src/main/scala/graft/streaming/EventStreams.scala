@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedSessions
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.Sessions
@@ -66,12 +67,7 @@ object EventStreams {
       events: DataFrame,
       keyCols: Seq[String],
       queryName: String): DataFrame = {
-    runOneShot(spark, dedupWithinWatermark(events, keyCols)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append()))
-    spark.table(queryName)
+    oneShotToMemory(spark, dedupWithinWatermark(events, keyCols), queryName)
   }
 
   /** State stores of a one-shot stream: one per shuffle partition (four
@@ -81,16 +77,30 @@ object EventStreams {
     */
   private val StatePartitions = 8
 
-  /** Start `writer` as a one-shot (AvailableNow) stream with
-    * [[StatePartitions]] pinned and wait for it to finish. The query
-    * clones the session at `start()` and reads the partition count from
-    * the clone, so the pin covers the start only: no conf scope is held
-    * while the stream runs.
+  /** Run `stream` into the sink `sink` configures as a one-shot
+    * (AvailableNow) query and wait for it to finish. The query starts in
+    * a scoped session with [[StatePartitions]] pinned, which it reads at
+    * start; that session is returned, since a memory sink registers its
+    * view there.
     */
-  private def runOneShot[T](spark: SparkSession, writer: DataStreamWriter[T]): Unit =
-    Sessions.withConfs(spark, "spark.sql.shuffle.partitions" -> StatePartitions.toString) {
-      writer.trigger(Trigger.AvailableNow()).start()
-    }.awaitTermination()
+  private def runOneShot(spark: SparkSession, stream: DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): SparkSession =
+    Sessions.withConfs(spark, "spark.sql.shuffle.partitions" -> StatePartitions.toString) { s =>
+      sink(ScopedSessions.bind(stream, s).writeStream.trigger(Trigger.AvailableNow()))
+        .start().awaitTermination()
+      s
+    }
+
+  /** [[runOneShot]] into a memory sink named `queryName`: its rows as a
+    * frame of `spark` (the name itself resolves only in the scoped
+    * session the query ran in).
+    */
+  private def oneShotToMemory(
+      spark: SparkSession, stream: DataFrame, queryName: String): DataFrame = {
+    val ran = runOneShot(spark, stream)(
+      _.format("memory").queryName(queryName).outputMode(OutputMode.Append()))
+    ScopedSessions.bind(ran.table(queryName), spark)
+  }
 
   /** Cross-RUN streaming dedup: each micro-batch drops rows whose key
     * already sits in a persisted fingerprint zone, then appends the
@@ -576,12 +586,7 @@ object EventStreams {
       events: Dataset[EventRow],
       gapMinutes: Int,
       queryName: String): DataFrame = {
-    runOneShot(spark, sessionize(events, gapMinutes)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append()))
-    spark.table(queryName)
+    oneShotToMemory(spark, sessionize(events, gapMinutes).toDF(), queryName)
   }
 
   /** Durable-sink variant of [[sessionizeAvailableNow]] — the production
@@ -596,8 +601,7 @@ object EventStreams {
       gapMinutes: Int,
       sinkDir: String,
       checkpointDir: String): DataFrame = {
-    runOneShot(spark, sessionize(events, gapMinutes)
-      .writeStream
+    runOneShot(spark, sessionize(events, gapMinutes).toDF())(_
       .format("parquet")
       .option("path", sinkDir)
       .option("checkpointLocation", checkpointDir)
@@ -689,12 +693,7 @@ object EventStreams {
       right: Dataset[EventRow],
       withinMinutes: Int,
       queryName: String): DataFrame = {
-    runOneShot(spark, intervalJoin(left, right, withinMinutes)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append()))
-    spark.table(queryName)
+    oneShotToMemory(spark, intervalJoin(left, right, withinMinutes), queryName)
   }
 
   /** Stream → warehouse-zone bridge: land a stream into a day-partitioned

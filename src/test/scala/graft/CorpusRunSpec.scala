@@ -755,8 +755,8 @@ class CorpusRunSpec extends SparkSpec {
     // the standing warehouse disagrees with this build's constants — the
     // next run must refuse BEFORE touching any zone, and the refusal
     // must land as the day's FAILED ledger row (the ops surface)
-    graft.operators.Dedup.recordZoneGeometry(
-      spark, s"$wh/corpus", Seq("num_hashes" -> 16L))
+    graft.operators.Dedup.recordZoneGeometry(spark, s"$wh/corpus",
+      graft.operators.Dedup.readZoneGeometry(spark, s"$wh/corpus"), Seq("num_hashes" -> 16L))
     val docsCensus = fileCensus(s"$wh/corpus/docs")
     val in2 = drop("d2", docs(Seq((10L, "iota kappa lambda mu nu xi omicron", "web"))))
     val e = intercept[IllegalArgumentException] {
@@ -773,8 +773,8 @@ class CorpusRunSpec extends SparkSpec {
       s"the refusal must be a FAILED ledger row: $lastRow")
 
     // restore → the same day runs clean (the FAILED row does not gate)
-    graft.operators.Dedup.recordZoneGeometry(
-      spark, s"$wh/corpus", Seq("num_hashes" -> CorpusRun.NumHashes.toLong))
+    graft.operators.Dedup.recordZoneGeometry(spark, s"$wh/corpus",
+      graft.operators.Dedup.readZoneGeometry(spark, s"$wh/corpus"), Seq("num_hashes" -> CorpusRun.NumHashes.toLong))
     assert(CorpusRun.run(spark, in2, wh, "2026-03-02 03:00:00") == "SUCCESS")
 
     // legacy warehouse (predates the side-meta): verifies vacuously and

@@ -158,15 +158,15 @@ class PlanAuditSpec extends SparkSpec {
     import graft.sources.Zones
     val wh = tempDir("aqe_matrix")
     val tbl = "graft_aqe_bucket_zone"
-    try Sessions.withConfs(spark,
-        ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: Zones.BucketedMergeConfs: _*) {
+    try Sessions.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { scoped =>
       val day1 = (1 to 200).map(i => (i.toLong, 10, i * 1.0)).toDF("product_sk", "date_sk", "price")
-      Zones.upsertBucketed(spark, tbl, s"$wh/agg", day1,
+      Zones.upsertBucketed(scoped, tbl, s"$wh/agg", day1,
         Seq("product_sk", "date_sk"), "date_sk", Seq("product_sk"), 8)
-      // the daily merge shape: bucketed zone ⋈ in-memory increment
+      // the daily merge shape: bucketed zone ⋈ in-memory increment, as the
+      // upsert returns it (bound to its own scoped session)
       val increment = (50 to 80).map(i => (i.toLong, 10, -1.0)).toDF("product_sk", "date_sk", "price")
-      val mergeShape = spark.table(tbl)
-        .join(increment, Seq("product_sk", "date_sk"), "left_anti")
+      val mergeShape = Zones.upsertBucketed(scoped, tbl, s"$wh/agg", increment,
+        Seq("product_sk", "date_sk"), "date_sk", Seq("product_sk"), 8)
       mergeShape.collect() // runtime re-planning has now happened
       val root = mergeShape.queryExecution.executedPlan
       root match {

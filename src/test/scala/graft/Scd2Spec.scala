@@ -267,9 +267,9 @@ class Scd2Spec extends SparkSpec {
     val tzSentinel = lit(Scd2.SentinelTs).cast("timestamp")
     Scd2.applyZoned(spark, zone, snap(Map(1L -> 10.0)), keys._1, keys._2, keys._3,
       lit("2024-01-01 00:00:00").cast("timestamp"), tzSentinel) // tsType = "timestamp"
-    val e = Sessions.withConfs(spark, "spark.sql.session.timeZone" -> "Asia/Ho_Chi_Minh") {
+    val e = Sessions.withConfs(spark, "spark.sql.session.timeZone" -> "Asia/Ho_Chi_Minh") { scoped =>
       intercept[IllegalStateException] {
-        Scd2.applyZoned(spark, zone, snap(Map(1L -> 11.0)), keys._1, keys._2, keys._3,
+        Scd2.applyZoned(scoped, zone, snap(Map(1L -> 11.0)), keys._1, keys._2, keys._3,
           lit("2024-01-02 00:00:00").cast("timestamp"), tzSentinel)
       }
     }

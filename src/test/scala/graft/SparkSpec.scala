@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session + fixture access + row-set comparison for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = {
-    val s = Sessions.builder("graft-test", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val s = Sessions.builder("graft-test", Sessions.cpus)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -60,23 +60,19 @@ class ZonesSpec extends SparkSpec {
     import spark.implicits._
     val wh = tempDir("bucketzone")
     val tbl = "graft_test_bucket_zone"
-    // the plan audit below derives the merge plan lazily (after the
-    // method restored its conf scope), so mirror the EXACT conf scope the
-    // real write ran under — including autoBucketedScan=false, without
-    // which the planner may nondeterministically drop the bucketed layout
-    // ("disabled by query planner") and the zone side shuffles
-    try Sessions.withConfs(spark,
-        ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: Zones.BucketedMergeConfs: _*) {
+    // broadcasts off so the merge is the shuffled join the audit inspects;
+    // the returned merge frame plans under the upsert's own pins
+    try Sessions.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { scoped =>
       val day1 = (1 to 100).map(i => (i.toLong, 10, i * 1.0)).toDF("product_sk", "date_sk", "price")
-      Zones.upsertBucketed(spark, tbl, s"$wh/agg", day1,
+      Zones.upsertBucketed(scoped, tbl, s"$wh/agg", day1,
         Seq("product_sk", "date_sk"), "date_sk", Seq("product_sk"), 8)
       // day 2: re-snapshot part of day 10 + a fresh day 11
       val day2 = ((40 to 60).map(i => (i.toLong, 10, -1.0)) ++
         (1 to 50).map(i => (i.toLong, 11, i * 2.0)))
         .toDF("product_sk", "date_sk", "price")
-      val merged = Zones.upsertBucketed(spark, tbl, s"$wh/agg", day2,
+      val merged = Zones.upsertBucketed(scoped, tbl, s"$wh/agg", day2,
         Seq("product_sk", "date_sk"), "date_sk", Seq("product_sk"), 8)
-      val result = spark.table(tbl)
+      val result = scoped.table(tbl)
       assert(result.count() == 150)
       assert(result.filter(col("date_sk") === 10).count() == 100, "untouched day-10 keys kept")
       assert(result.filter(col("date_sk") === 10 && col("price") === -1.0).count() == 21,
@@ -174,6 +170,34 @@ class ZonesSpec extends SparkSpec {
     assert(Zones.read(spark, path).count() == 4,
       "an incomplete stage dir must not shadow the live zone")
     assert(fs.exists(new org.apache.hadoop.fs.Path(path)), "target untouched")
+  }
+
+  test("bucketed swap crash window: a staged partition left as its only copy survives the next upsert") {
+    import spark.implicits._
+    val path = tempDir("bucketzone_swapcrash") + "/agg"
+    val tbl = "graft_test_bucket_swapcrash"
+    def upsert(rows: Seq[(Long, Int, Double)]) = Zones.upsertBucketed(spark, tbl, path,
+      rows.toDF("product_sk", "date_sk", "price"), Seq("product_sk", "date_sk"), "date_sk",
+      Seq("product_sk"), 4)
+    try {
+      upsert((1 to 30).map(i => (i.toLong, 10, i * 1.0)) ++ (1 to 20).map(i => (i.toLong, 11, 0.5)))
+      // simulate the crash between the swap's delete and rename: the
+      // complete stage (with _SUCCESS) holds day 10, the zone's copy is gone
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val (zoneDay, stagedDay) = (new org.apache.hadoop.fs.Path(s"$path/date_sk=10"),
+        new org.apache.hadoop.fs.Path(s"$path.__tmp__/date_sk=10"))
+      fs.mkdirs(stagedDay.getParent)
+      assert(fs.rename(zoneDay, stagedDay))
+      fs.create(new org.apache.hadoop.fs.Path(s"$path.__tmp__/_SUCCESS")).close()
+      // the next night touches day 12 only
+      upsert((1 to 10).map(i => (i.toLong, 12, 2.0)))
+      val zone = spark.table(tbl)
+      assert(zone.filter(col("date_sk") === 10).count() == 30, "day 10 lost in the crashed swap")
+      assert(zone.filter(col("date_sk") === 11).count() == 20)
+      assert(zone.filter(col("date_sk") === 12).count() == 10)
+      assert(!fs.exists(stagedDay.getParent), "the stage dir outlived the recovered swap")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
   test("upsertPartitioned: empty first increment does not poison the zone; null partitions merge") {
